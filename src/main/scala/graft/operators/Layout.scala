@@ -49,10 +49,7 @@ object Layout {
     * restores scan-efficient sizes; returns the output file count. */
   def compact(spark: SparkSession, inPath: String, outPath: String,
       targetBytes: Long): Int = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(inPath), spark.sparkContext.hadoopConfiguration)
-    val bytes = fs.getContentSummary(new org.apache.hadoop.fs.Path(inPath))
-      .getLength
+    val bytes = graft.streaming.StoreFs.bytes(spark, Seq(inPath))
     val files = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
     spark.read.parquet(inPath)
       .repartition(files)
@@ -93,10 +90,7 @@ object Layout {
     }
     // size the file count from the INPUT bytes (the output isn't
     // written yet); one round-robin repartition rewrite, as compact()
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(inPaths.head), spark.sparkContext.hadoopConfiguration)
-    val bytes = inPaths.map(p =>
-      fs.getContentSummary(new org.apache.hadoop.fs.Path(p)).getLength).sum
+    val bytes = graft.streaming.StoreFs.bytes(spark, inPaths)
     val files = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
     unioned.repartition(files).write.mode("overwrite").parquet(out)
     graft.functions.Vectors.rederiveSignBits(

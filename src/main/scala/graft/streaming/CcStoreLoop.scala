@@ -29,62 +29,23 @@ import org.apache.spark.sql.functions._
   * layers into a new full assignment (the posture's only corpus-sized
   * write).
   *
-  * REDELIVERY SAFETY (checkpointed foreachBatch: a batch that failed
-  * mid-write is re-delivered with the SAME batchId): a batch folds
-  * against generations STRICTLY BELOW its own id, writes its artifact
-  * with overwrite into its own batchId-keyed dir, and parquet's
-  * _SUCCESS is the commit marker — a half-written generation is
-  * invisible to [[state]] and simply overwritten on re-run, and a
-  * COMMITTED generation re-derives bit-stably because its inputs
-  * (generations below) cannot have changed. On top of the layout
-  * discipline, the fold itself is idempotent (ccApplyDelta on
+  * Commit markers (a layer's own parquet `_SUCCESS`), redelivery
+  * safety, the single-writer contract and the compaction policy are the
+  * store protocol's, documented once on [[StoreFs]]. On top of that
+  * layout discipline the fold itself is idempotent (ccApplyDelta on
   * already-merged edges yields an EMPTY changed-row set), so even an
-  * out-of-contract duplicate delivery under a fresh id is a no-op
-  * layer. StreamingSpec drives all of this end-to-end.
-  *
-  * CONCURRENCY CONTRACT (same shape as [[GateStoreLoop]]'s): one
-  * writer — the streaming query — owns all writes; concurrent writers
-  * are out of contract. Concurrent readers are safe by resolution:
-  * [[state]] resolves only `_SUCCESS`-committed layers, superseded
-  * artifacts stay on disk, and a forward compaction writes an
-  * `assign_<g>` that did not previously exist, so a racing reader
-  * sees either the old overlay or the new fold — the same assignment
-  * either way (compaction equivalence is StreamingSpec-pinned). Only
-  * a crash-recovery RE-fold overwrites an existing committed dir; a
-  * reader mid-scan of exactly that dir can fail and must re-resolve.
+  * out-of-contract duplicate delivery under a fresh id is a no-op layer.
+  * StreamingSpec drives all of this end-to-end.
   */
 object CcStoreLoop {
 
-  private def fs(dir: String) = new java.io.File(dir)
+  private[graft] val storeFs = new StoreFs("CcStoreLoop", "assign_",
+    "_SUCCESS")
 
-  // r20 review: the shared listing (StoreGens) — this was the third
-  // hand-copied list/strip/parse/marker walk across the two loops
-  private def committed(dir: String, prefix: String): Seq[Long] =
-    StoreGens.committed(dir, prefix, "_SUCCESS")
-
-  /** Highest COMPLETE full-assignment generation (-1 = initial build).
-    * Loud when none exists: [[init]] never ran or never committed. */
-  private def baseGen(dir: String): Long = {
-    val gens = committed(dir, "assign_")
-    if (gens.isEmpty)
-      throw new IllegalStateException(
-        s"CcStoreLoop: no committed assignment under $dir — run init() " +
-          "first (a missing base is an absent store, not an empty graph)")
-    gens.max
-  }
-
-  /** Write the initial assignment from the base edge list. Clears any
-    * pre-existing committed layers first: re-initializing a previously
-    * used store dir must yield a FRESH store, not a fresh base that
-    * [[state]] silently overlays with stale generations (id > -1) from
-    * the dir's earlier life (ADVICE r13 — callers previously had to
-    * remember to wipe the dir themselves). */
+  /** Write the initial assignment from the base edge list, after
+    * clearing every layer a re-used `dir` still holds. */
   def init(spark: SparkSession, baseEdges: DataFrame, dir: String): Unit = {
-    fs(dir).mkdirs()
-    Option(fs(dir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith("gen_") ||
-        f.getName.startsWith("assign_"))
-      .foreach(deleteRecursively)
+    storeFs.clear(spark, dir)
     val s = DedupQueries.ccSession(spark)
     DedupQueries.ccAssignments(
         DedupQueries.truncatedDf(onSession(s, baseEdges), eager = true))
@@ -92,12 +53,8 @@ object CcStoreLoop {
       // assignment is corpus-sized; without the hint the write inherits
       // the CC loop's partitioning (dozens of tiny files at bench scale,
       // per-file open cost on every later overlay read)
-      .hint("rebalance").write.mode("overwrite").parquet(s"$dir/assign_-1")
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete()
+      .hint("rebalance").write.mode("overwrite")
+      .parquet(storeFs.baseDir(dir, -1))
   }
 
   /** The stored assignment as of generations strictly below `below`
@@ -113,14 +70,17 @@ object CcStoreLoop {
     * keyed anti-join instead of dying. */
   def state(spark: SparkSession, dir: String,
       below: Long = Long.MaxValue): DataFrame = {
-    val g = baseGen(dir)
-    val gens = committed(dir, "gen_").filter(id => id > g && id < below)
-    gens.foldLeft(spark.read.parquet(s"$dir/assign_$g")) { (acc, id) =>
-      val layer = spark.read.parquet(s"$dir/gen_$id")
+    val (g, ids) = storeFs.resolve(spark, dir, below)
+    overlay(spark, dir)(g, ids)
+  }
+
+  private def overlay(spark: SparkSession, dir: String)(g: Long,
+      ids: Seq[Long]): DataFrame =
+    ids.foldLeft(spark.read.parquet(storeFs.baseDir(dir, g))) { (acc, id) =>
+      val layer = spark.read.parquet(storeFs.genDir(dir, id))
       acc.join(layer.select("doc_id"), Seq("doc_id"), "left_anti")
         .unionByName(layer)
     }
-  }
 
   /** The foreachBatch handler: fold the batch's edges into the stored
     * assignment, land ONLY the changed rows as this batch's
@@ -144,29 +104,19 @@ object CcStoreLoop {
       // r21: NO rebalance on the per-batch layer (measured: the extra
       // exchange costs more than the small files it saves at batch
       // cadence; corpus-sized writes — init/compaction — do rebalance)
-      .write.mode("overwrite").parquet(s"$dir/gen_$batchId")
+      .write.mode("overwrite").parquet(storeFs.genDir(dir, batchId))
   }
 
   /** Fold committed generations below `upTo` into a new full
-    * assignment — the posture's only corpus-sized write. From INSIDE
-    * the stream pass `upTo = batchId` (the current batch's offset is
-    * uncommitted; folding its layer would make a redelivery fold
-    * against its own effects — same contract as
+    * assignment when their count reaches `maxOpenGenerations` —
+    * [[StoreFs.compact]]'s policy, the posture's only corpus-sized
+    * write. From INSIDE the stream pass `upTo = batchId` (the current
+    * batch's offset is uncommitted; folding its layer would make a
+    * redelivery fold against its own effects — same contract as
     * [[GateStoreLoop.maybeCompact]]). */
   def maybeCompact(spark: SparkSession, dir: String, maxOpenGenerations: Int,
-      upTo: Long = Long.MaxValue): Boolean = {
-    val g = baseGen(dir)
-    val open = committed(dir, "gen_").filter(id => id > g && id < upTo)
-    // nonEmpty guard: a degenerate threshold (<= 0) with nothing open
-    // must no-op, not crash on open.max — same contract as the gate
-    // loop's compact
-    if (open.nonEmpty && open.size >= maxOpenGenerations) {
-      state(spark, dir, below = upTo)
-        .hint("rebalance")
-        .write.mode("overwrite").parquet(s"$dir/assign_${open.max}")
-      true
-    } else false
-  }
+      upTo: Long = Long.MaxValue): Boolean =
+    storeFs.compact(spark, dir, maxOpenGenerations, upTo)(overlay(spark, dir))
 
   /** Frames built on the caller's session re-bind onto the cc child
     * session so every plan they feed executes under ccSession's rule

@@ -4,24 +4,6 @@ import graft.operators.DedupGate
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The ONE generation-directory listing both store loops share (r20
-  * review: GateStoreLoop and CcStoreLoop carried three near-identical
-  * list/strip/parse/marker-filter copies — a fix to one had to be
-  * replicated by hand). A generation is committed when
-  * `$dir/$prefix<id>/$markerSubpath` exists; non-numeric strays (an
-  * editor backup, a half-renamed dir) are ignored rather than throwing
-  * NumberFormatException out of a directory listing. */
-private[streaming] object StoreGens {
-  /** Committed generation ids under `dir` for `prefix`, ascending. */
-  def committed(dir: String, prefix: String,
-      markerSubpath: String): Seq[Long] =
-    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .toSeq.map(_.getName).filter(_.startsWith(prefix))
-      .flatMap(_.stripPrefix(prefix).toLongOption).sorted
-      .filter(g => new java.io.File(s"$dir/$prefix$g/$markerSubpath")
-        .exists())
-}
-
 /** The dedup gate's PRODUCTION posture wired through Structured
   * Streaming — ST7's per-batch loop end-to-end (reference contract:
   * `lambdas/check_duplicate/check_duplicate.py:183-289` classifies each
@@ -43,85 +25,38 @@ private[streaming] object StoreGens {
   *                         generation's commit marker)
   *   gen_<batchId>/outcomes the batch's classified rows (the API output)
   * }}}
-  * Current state = the highest `base_<g>` plus every COMMITTED `gen_<i>`
-  * with `i > g`, ordered by batchId — exactly the `generations` argument
-  * of [[DedupGate.classifyStoredDeltas]].
-  *
-  * REDELIVERY SAFETY (the checkpointed foreachBatch contract — a batch
-  * that failed mid-write is delivered again with the SAME batchId):
-  * artifacts land in batchId-keyed directories with overwrite mode; a
-  * batch only probes generations STRICTLY BELOW its own id; and
-  * in-stream compaction ([[maybeCompact]] with `upTo = batchId`) folds
-  * only generations STRICTLY BELOW the current batch — so neither a
-  * half-written artifact nor a compaction that ran before the crash can
-  * change what a re-run of the same batch observes. Replaying any prefix
-  * of batches is therefore a pure no-op: outcomes are a function of
-  * (live node set below this batch, batch contents), and every
-  * physical reorganization preserves that set.
-  *
-  * CONCURRENCY CONTRACT. The loop is SINGLE-WRITER: one streaming
-  * query's foreachBatch drives every write (batch artifacts and
-  * compaction alike) — two concurrent writers over one `dir` are out
-  * of contract and unprotected (no lock file; generation dirs would
-  * interleave). Concurrent READERS, however, are safe at the
-  * resolution level: [[state]]/[[outcomes]] only ever resolve
-  * COMMITTED artifacts (the `_SUCCESS` markers), old artifacts are
-  * never deleted (janitor's concern, offline), and a forward
-  * compaction writes a base generation that did not previously exist
-  * — so a reader racing a compaction resolves EITHER the old base +
-  * open generations OR the new folded base, and both denote the same
-  * live node set (the fold is a semantic identity, pinned by
-  * StoreLoopSpec's compaction-equivalence cases). The one sharp edge:
-  * a crash-recovery RE-fold rewrites an EXISTING `base_<g>` dir in
-  * overwrite mode (delete-then-write), so a reader scan already in
-  * flight over that exact dir can lose files mid-read and must retry
-  * — only reachable when a resumed writer re-folds after a crash
-  * while an external reader holds an un-refreshed plan. Readers that
-  * re-resolve through [[state]] per query (the supported path) never
-  * see it.
+  * Current state = the highest committed `base_<g>` plus every committed
+  * `gen_<i>` with `i > g`, ordered by batchId — exactly the `generations`
+  * argument of [[DedupGate.classifyStoredDeltas]]. Commit markers,
+  * redelivery safety, the single-writer contract and the compaction
+  * policy are the store protocol's, documented once on [[StoreFs]].
   */
 object GateStoreLoop {
 
-  private def fs(dir: String) = new java.io.File(dir)
-
-  /** Highest COMPLETE compacted base generation under `dir` (-1 when
-    * only the initial base exists, written as `base_-1`). Completeness
-    * is the parquet commit marker — a fold interrupted mid-write leaves
-    * no `_SUCCESS`, so the previous base stays authoritative. Loud when
-    * no complete base exists: [[init]] has not run (or its write never
-    * committed), and probing a nonexistent store should not look like
-    * an empty corpus. */
-  private def baseGen(dir: String): Long = {
-    val complete = StoreGens.committed(dir, "base_", "_SUCCESS")
-    if (complete.isEmpty)
-      throw new IllegalStateException(
-        s"GateStoreLoop: no committed base under $dir — run init() first " +
-          "(a missing or _SUCCESS-less base means the store was never " +
-          "created, not that the corpus is empty)")
-    complete.max
-  }
-
-  /** Committed generation ids under `dir` (tombs/_SUCCESS present),
-    * ascending. */
-  private def committedGens(dir: String): Seq[Long] =
-    StoreGens.committed(dir, "gen_", "tombs/_SUCCESS")
+  private[graft] val storeFs = new StoreFs("GateStoreLoop", "base_",
+    "tombs/_SUCCESS")
 
   /** (base frame, ordered open generations) as of now. */
   def state(spark: SparkSession, dir: String)
       : (DataFrame, Seq[(Long, DataFrame, DataFrame)]) = {
-    val g = baseGen(dir)
-    val gens = committedGens(dir).filter(_ > g)
-    (spark.read.parquet(s"$dir/base_$g"),
-      gens.map(id => (id,
-        spark.read.parquet(s"$dir/gen_$id/delta"),
-        spark.read.parquet(s"$dir/gen_$id/tombs"))))
+    val (g, ids) = storeFs.resolve(spark, dir)
+    layers(spark, dir, g, ids)
   }
 
-  /** Write the initial store as generation -1. */
+  private def layers(spark: SparkSession, dir: String, g: Long,
+      ids: Seq[Long]): (DataFrame, Seq[(Long, DataFrame, DataFrame)]) =
+    (spark.read.parquet(storeFs.baseDir(dir, g)),
+      ids.map(id => (id,
+        spark.read.parquet(s"${storeFs.genDir(dir, id)}/delta"),
+        spark.read.parquet(s"${storeFs.genDir(dir, id)}/tombs"))))
+
+  /** Write the initial store as generation -1, after clearing every
+    * layer a re-used `dir` still holds. */
   def init(store: DataFrame, dir: String): Unit = {
-    fs(dir).mkdirs()
+    storeFs.clear(store.sparkSession, dir)
     // r21: size-targeted base files (AQE rebalance; see handleBatch)
-    store.hint("rebalance").write.mode("overwrite").parquet(s"$dir/base_-1")
+    store.hint("rebalance").write.mode("overwrite")
+      .parquet(storeFs.baseDir(dir, -1))
   }
 
   /** The foreachBatch handler: classify, derive the delta, persist the
@@ -173,15 +108,16 @@ object GateStoreLoop {
             org.apache.spark.sql.types.StringType)
         b0.withColumn("arrival", monotonically_increasing_id())
       else b0
-    val (base, gens) = state(spark, dir)
-    val usable = gens.filter(_._1 < batchId).map(g => (g._2, g._3))
+    val (g, ids) = storeFs.resolve(spark, dir, below = batchId)
+    val (base, gens) = layers(spark, dir, g, ids)
     // materialize the classification ONCE (ingest-sized, bounded): the
     // outcome frame is read back by resolveTargets' convergence probes
     // and by all three artifact writes — without the pin each of those
     // actions would re-run the corpus probe, turning one gate pass into
     // five
     val outcomes = DedupGate.classifyStoredDeltas(
-      b, base, usable, numBands, rowsPerBand).localCheckpoint(true)
+      b, base, gens.map(l => (l._2, l._3)), numBands, rowsPerBand)
+      .localCheckpoint(true)
     // archive flips travel a separate maintenance channel; the stream
     // loop itself retires nodes only via version replacement
     val noFlips = outcomes.select(col("matched_node_id").as("node_id"))
@@ -200,45 +136,48 @@ object GateStoreLoop {
     // and compaction below, which do rebalance). Generation fan-in is
     // bounded by maxOpenGenerations, so small gen files stay a bounded
     // read cost by construction.
-    outcomes.write.mode("overwrite").parquet(s"$dir/gen_$batchId/outcomes")
-    append.write.mode("overwrite").parquet(s"$dir/gen_$batchId/delta")
-    tombs.write.mode("overwrite").parquet(s"$dir/gen_$batchId/tombs")
+    val gen = storeFs.genDir(dir, batchId)
+    outcomes.write.mode("overwrite").parquet(s"$gen/outcomes")
+    append.write.mode("overwrite").parquet(s"$gen/delta")
+    tombs.write.mode("overwrite").parquet(s"$gen/tombs")
   }
 
-  /** Compaction POLICY for the streaming loop: fold when the open
-    * generation count reaches `maxOpenGenerations`. Each open
-    * generation adds one broadcast probe to every later batch's
-    * classify, so the per-batch cost grows linearly in open
-    * generations while compaction costs one corpus-sized fold —
-    * bounding the count trades a periodic corpus shuffle for a bounded
-    * probe fan-out, the standard LSM posture.
-    *
-    * When called from INSIDE the stream (after [[handleBatch]] in the
-    * same foreachBatch), pass `upTo = batchId`: the fold then excludes
-    * the current batch's own generation, whose streaming offset is not
-    * yet committed — folding it would make a redelivery of that batch
-    * classify against a base already containing its own effects (every
-    * 'new' doc would re-classify as a duplicate of itself). Generations
-    * below the current batchId are safe by the foreachBatch contract:
-    * their offsets committed before this batch was ever delivered. The
-    * default (`Long.MaxValue`) folds everything — correct only OUTSIDE
-    * the stream (terminal / offline compaction).
+  /** Fold the open generations below `upTo` into a new base when their
+    * count reaches `maxOpenGenerations` — [[StoreFs.compact]]'s policy,
+    * decided from the listing alone. From INSIDE the stream (after
+    * [[handleBatch]] in the same foreachBatch) pass `upTo = batchId`:
+    * folding the current batch's own generation, whose offset is not yet
+    * committed, would make a redelivery of it classify against its own
+    * effects (every 'new' doc would re-classify as a duplicate of
+    * itself). The default (`Long.MaxValue`) folds everything — correct
+    * only OUTSIDE the stream (terminal / offline compaction).
     */
   def maybeCompact(spark: SparkSession, dir: String,
-      maxOpenGenerations: Int, upTo: Long = Long.MaxValue): Boolean = {
-    val (_, gens) = state(spark, dir)
-    if (gens.count(_._1 < upTo) >= maxOpenGenerations) {
-      compact(spark, dir, upTo); true
-    } else false
+      maxOpenGenerations: Int, upTo: Long = Long.MaxValue): Boolean =
+    storeFs.compact(spark, dir, maxOpenGenerations, upTo)(fold(spark, dir))
+
+  /** Fold every open generation below `upTo` into a new compacted base —
+    * the periodic corpus-shuffle event of the posture. The fold is
+    * idempotent: re-running it over the same generations rewrites the
+    * same rows. */
+  def compact(spark: SparkSession, dir: String,
+      upTo: Long = Long.MaxValue): Unit =
+    maybeCompact(spark, dir, 1, upTo)
+
+  /** The fold compact writes, as `(target generation, frame)` — None
+    * when nothing is open below `upTo`. Public (r19) so ScaleProbe's
+    * fallback_store family can materialize the PRODUCTION fold and read
+    * its final adaptive plan (the executed join kinds of the
+    * per-generation tombstone anti-joins) — a write command's plan is
+    * not inspectable after the fact, and the probe must measure this
+    * code path, not a restatement of it. */
+  def foldedBase(spark: SparkSession, dir: String,
+      upTo: Long = Long.MaxValue): Option[(Long, DataFrame)] = {
+    val (g, ids) = storeFs.resolve(spark, dir, upTo)
+    ids.lastOption.map(_ -> fold(spark, dir)(g, ids))
   }
 
-  /** Fold open generations below `upTo` into a new compacted base — the
-    * periodic corpus-shuffle event of the posture. Old artifacts stay on
-    * disk (readers race-free: `state` always resolves to the highest
-    * COMPLETE base, so an interrupted fold leaves the previous base
-    * authoritative), and the fold itself is idempotent: re-running it
-    * over the same generations rewrites the same rows. Garbage
-    * collection of superseded dirs is an offline janitor concern.
+  /** Base `g` with generations `ids` applied in order.
     *
     * r18: the per-generation tombstone anti-joins carry NO static
     * `broadcast()` hint — a generation is ingest-scale in the per-batch
@@ -250,33 +189,12 @@ object GateStoreLoop {
     * every tested geometry and degrades a backfill-scale one to a keyed
     * anti-join of two generation-sized sides.
     */
-  def compact(spark: SparkSession, dir: String,
-      upTo: Long = Long.MaxValue): Unit =
-    foldedBase(spark, dir, upTo).foreach { case (g, folded) =>
-      // r21: size-targeted base files (see the handleBatch rebalance
-      // note) — the fold is the corpus-sized write, where file sizing
-      // matters most
-      folded.hint("rebalance").write.mode("overwrite")
-        .parquet(s"$dir/base_$g")
+  private def fold(spark: SparkSession, dir: String)(g: Long,
+      ids: Seq[Long]): DataFrame = {
+    val (base, gens) = layers(spark, dir, g, ids)
+    gens.foldLeft(base) { case (s, (_, append, tombs)) =>
+      s.join(tombs, Seq("node_id"), "left_anti").unionByName(append)
     }
-
-  /** The fold compact writes, as `(target generation, frame)` — None
-    * when nothing is open below `upTo`. Factored out of [[compact]]
-    * (r19) so ScaleProbe's fallback_store family can materialize the
-    * PRODUCTION fold and read its final adaptive plan (the executed
-    * join kinds of the per-generation tombstone anti-joins) — a write
-    * command's plan is not inspectable after the fact, and the probe
-    * must measure this code path, not a restatement of it. */
-  def foldedBase(spark: SparkSession, dir: String,
-      upTo: Long = Long.MaxValue): Option[(Long, DataFrame)] = {
-    val (base, gensAll) = state(spark, dir)
-    val gens = gensAll.filter(_._1 < upTo)
-    if (gens.isEmpty) None
-    else Some((gens.map(_._1).max,
-      gens.foldLeft(base) { case (s, (_, append, tombs)) =>
-        s.join(tombs, Seq("node_id"), "left_anti")
-          .unionByName(append)
-      }))
   }
 
   /** All COMMITTED outcomes written so far (the loop's queryable API
@@ -286,12 +204,12 @@ object GateStoreLoop {
     * never act on classifications whose maintenance half does not
     * exist. Empty before the first committed generation: a started
     * stream that has produced nothing is a legitimate state, not an
-    * error (contrast [[baseGen]], where a MISSING STORE is).
+    * error (contrast [[state]], where a MISSING STORE is).
     */
   def outcomes(spark: SparkSession, dir: String): DataFrame = {
-    val ids = committedGens(dir)
-      .filter(id => new java.io.File(s"$dir/gen_$id/outcomes/_SUCCESS")
-        .exists())
+    val gen = (id: Long) => storeFs.genDir(dir, id)
+    val ids = storeFs.generations(spark, dir)
+      .filter(id => StoreFs.exists(spark, s"${gen(id)}/outcomes/_SUCCESS"))
     if (ids.isEmpty)
       // schema-stable empty frame: derived from the store's own base
       // (always present once init ran), projected to the outcome shape.
@@ -302,14 +220,15 @@ object GateStoreLoop {
       // already agree for classification to compare them at all; a
       // batch whose uid type diverged from the store key would fail in
       // classifyStoredDeltas long before this frame mattered).
-      spark.read.parquet(s"$dir/base_${baseGen(dir)}")
+      spark.read
+        .parquet(storeFs.baseDir(dir, storeFs.resolve(spark, dir)._1))
         .select(col("node_id").as("uid"),
           lit("new").as("outcome"),
           col("node_id").as("matched_node_id"),
           lit(0.0).as("best_sim"),
           col("node_id").as("batch_twin"))
         .limit(0)
-    else ids.map(id => spark.read.parquet(s"$dir/gen_$id/outcomes"))
+    else ids.map(id => spark.read.parquet(s"${gen(id)}/outcomes"))
       .reduce(_ unionByName _)
   }
 }

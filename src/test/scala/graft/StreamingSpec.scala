@@ -336,7 +336,7 @@ class StreamingSpec extends SparkSpec {
 
   test("CC store loop failure modes: a missing store is loud (never an " +
     "empty graph), and an empty batch leaves no generation behind") {
-    import graft.streaming.CcStoreLoop
+    import graft.streaming.{CcStoreLoop, GateStoreLoop}
     implicit val sqlCtx = spark.sqlContext
     val ghost = java.nio.file.Files
       .createTempDirectory("graft-ccghost").toString
@@ -354,6 +354,93 @@ class StreamingSpec extends SparkSpec {
     assert(CcStoreLoop.state(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
       == Seq((1L, 1L), (2L, 1L)))
+    // a degenerate threshold with nothing open folds nothing, and both
+    // loops say so
+    assert(!CcStoreLoop.maybeCompact(spark, dir, 0),
+      "cc compaction with nothing open must report no fold")
+    val gateDir = java.nio.file.Files
+      .createTempDirectory("graft-gateempty").toString
+    GateStoreLoop.init(gateStore(Seq(1L -> "lone stored doc aa bb cc")),
+      gateDir)
+    assert(!GateStoreLoop.maybeCompact(spark, gateDir, 0),
+      "gate compaction with nothing open must report no fold")
+  }
+
+  /** A banded gate store of `(node_id, text)` documents. */
+  private def gateStore(docs: Seq[(Long, String)]) = {
+    val c = docs.map { case (id, t) => (id, t, "en", "published") }
+      .toDF("node_id", "text", "meta_key", "status")
+    graft.operators.DedupGate.bandedSigStore(c.join(
+      graft.operators.MinHashPipeline.signatures(c, "node_id", col("text")),
+      "node_id"), 4, 4)
+  }
+
+  /** A signed gate batch of `(uid, text, meta_key)` documents. */
+  private def gateBatch(docs: Seq[(Long, String, String)]) = {
+    val b = docs.toDF("uid", "itext", "meta_key")
+    b.join(graft.operators.MinHashPipeline.signatures(b, "uid", col("itext")),
+      "uid").select("uid", "sig", "meta_key")
+  }
+
+  test("gate store init on a re-used dir yields a fresh store: bases and " +
+    "generations left from the dir's earlier life are cleared") {
+    import graft.streaming.GateStoreLoop
+    val text = (i: Int) =>
+      s"reinit fixture $i words n${i}a n${i}b n${i}c tail ${i * 47}"
+    val dir = java.nio.file.Files.createTempDirectory("graft-reinit").toString
+    GateStoreLoop.init(gateStore((1 to 8).map(i => i.toLong -> text(i))), dir)
+    GateStoreLoop.handleBatch(dir, 4, 4)(
+      gateBatch(Seq((801L, text(3), "xx"))), 0L)
+    // a committed base_0 and an open gen_1 now outrank a new base_-1
+    GateStoreLoop.compact(spark, dir)
+    GateStoreLoop.handleBatch(dir, 4, 4)(
+      gateBatch(Seq((802L, "unrelated fresh arrival qq rr ss", "en"))), 1L)
+
+    val fresh = gateStore((20 to 24).map(i => i.toLong -> text(i)))
+    GateStoreLoop.init(fresh, dir)
+    val (base, open) = GateStoreLoop.state(spark, dir)
+    assert(open.isEmpty, s"re-init left open generations ${open.map(_._1)}")
+    assert(base.exceptAll(fresh).isEmpty && fresh.exceptAll(base).isEmpty,
+      "re-init must resolve to exactly the new base")
+    assert(GateStoreLoop.outcomes(spark, dir).isEmpty,
+      "re-init must leave no outcomes from the dir's earlier life")
+  }
+
+  test("both store loops run on a file: URI store exactly as on a plain " +
+    "path, and leave no stray directory under the working dir") {
+    import graft.streaming.{CcStoreLoop, GateStoreLoop}
+    val text = (i: Int) =>
+      s"uri fixture $i words u${i}a u${i}b u${i}c tail ${i * 53}"
+    def run(gateDir: String, ccDir: String) = {
+      GateStoreLoop.init(gateStore((1 to 10).map(i => i.toLong -> text(i))),
+        gateDir)
+      CcStoreLoop.init(spark, Seq((1L, 2L), (3L, 4L)).toDF("a_id", "b_id"),
+        ccDir)
+      GateStoreLoop.handleBatch(gateDir, 4, 4)(
+        gateBatch(Seq((901L, text(4), "xx"), (902L, text(6), "en"))), 0L)
+      CcStoreLoop.handleBatch(ccDir)(Seq((2L, 3L)).toDF("a_id", "b_id"), 0L)
+      GateStoreLoop.handleBatch(gateDir, 4, 4)(
+        gateBatch(Seq((903L, "a brand new arrival vv ww", "en"))), 1L)
+      CcStoreLoop.handleBatch(ccDir)(Seq((5L, 4L)).toDF("a_id", "b_id"), 1L)
+      // in-stream compaction for batch 1 folds generation 0 only
+      assert(GateStoreLoop.maybeCompact(spark, gateDir, 1, upTo = 1L))
+      assert(CcStoreLoop.maybeCompact(spark, ccDir, 1, upTo = 1L))
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toString).sorted.toSeq
+      val (base, open) = GateStoreLoop.state(spark, gateDir)
+      (rows(base), open.map(_._1), rows(GateStoreLoop.outcomes(spark, gateDir)),
+        rows(CcStoreLoop.state(spark, ccDir)))
+    }
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    val plain = run(tmp("graft-plaingate"), tmp("graft-plaincc"))
+    val (uriGate, uriCc) = (tmp("graft-urigate"), tmp("graft-uricc"))
+    val viaUri = run(s"file://$uriGate", s"file://$uriCc")
+    assert(plain._2 == Seq(1L), s"open generations ${plain._2}")
+    assert(plain._3.size == 3 && plain._4.size == 5)
+    assert(viaUri == plain, "a file: URI store diverged from a plain path")
+    for (d <- Seq(uriGate, uriCc))
+      assert(!new java.io.File(sys.props("user.dir"), s"file:$d").exists(),
+        s"a file: URI was treated as a relative path under the working dir")
   }
 
   test("transformWithState fingerprint dedup: first arrival new, " +
