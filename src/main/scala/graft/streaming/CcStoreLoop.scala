@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.operators.DedupQueries
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** The component-assignment store maintained under Structured
   * Streaming — the CC analogue of [[GateStoreLoop]] (reference
@@ -39,22 +38,14 @@ import org.apache.spark.sql.functions._
   */
 object CcStoreLoop {
 
-  private[graft] val storeFs = new StoreFs("CcStoreLoop", "assign_",
-    "_SUCCESS")
+  private[graft] val storeFs = new StoreFs("assign_", "_SUCCESS")
 
-  /** Write the initial assignment from the base edge list, after
-    * clearing every layer a re-used `dir` still holds. */
+  /** Write the initial assignment from the base edge list
+    * ([[StoreFs.init]]: a re-used `dir` is cleared first). */
   def init(spark: SparkSession, baseEdges: DataFrame, dir: String): Unit = {
-    storeFs.clear(spark, dir)
     val s = DedupQueries.ccSession(spark)
-    DedupQueries.ccAssignments(
-        DedupQueries.truncatedDf(onSession(s, baseEdges), eager = true))
-      // r21 (guide §6): size-targeted files via AQE rebalance — the
-      // assignment is corpus-sized; without the hint the write inherits
-      // the CC loop's partitioning (dozens of tiny files at bench scale,
-      // per-file open cost on every later overlay read)
-      .hint("rebalance").write.mode("overwrite")
-      .parquet(storeFs.baseDir(dir, -1))
+    storeFs.init(DedupQueries.ccAssignments(
+      DedupQueries.truncatedDf(onSession(s, baseEdges), eager = true)), dir)
   }
 
   /** The stored assignment as of generations strictly below `below`

@@ -57,8 +57,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * adds one probe or overlay join to every later batch, so bounding the
   * count trades a periodic corpus-sized fold for a bounded fan-out.
   */
-private[graft] final class StoreFs(owner: String, base: String,
-    genMarker: String) {
+private[graft] final class StoreFs(base: String, genMarker: String) {
 
   def baseDir(dir: String, g: Long): String = s"$dir/$base$g"
   def genDir(dir: String, id: Long): String = s"$dir/gen_$id"
@@ -72,21 +71,28 @@ private[graft] final class StoreFs(owner: String, base: String,
     val fs = StoreFs.fs(spark, dir)
     val g = committed(fs, dir, base, "_SUCCESS", _ => true).lastOption
       .getOrElse(throw new IllegalStateException(
-        s"$owner: no committed $base layer under $dir — run init() first " +
-          "(a missing or _SUCCESS-less base means the store was never " +
+        s"no committed $base layer under $dir — run init() first (a " +
+          "missing or _SUCCESS-less base means the store was never " +
           "created, not that it is empty)"))
     (g, committed(fs, dir, "gen_", genMarker, id => id > g && id < below))
   }
 
-  /** Every committed generation id, folded ones included, ascending. */
-  def generations(spark: SparkSession, dir: String): Seq[Long] =
-    committed(StoreFs.fs(spark, dir), dir, "gen_", genMarker, _ => true)
+  /** Every committed generation id, folded ones included, whose
+    * `gen_<id>/<also>` exists too; ascending. */
+  def generations(spark: SparkSession, dir: String,
+      also: String): Seq[Long] = {
+    val fs = StoreFs.fs(spark, dir)
+    committed(fs, dir, "gen_", genMarker, _ => true)
+      .filter(id => fs.exists(new Path(s"${genDir(dir, id)}/$also")))
+  }
 
-  /** Delete every layer: init()'s first step, so a re-used dir yields a
-    * fresh store rather than a new base outranked or overlaid by layers
-    * from the dir's earlier life. */
-  def clear(spark: SparkSession, dir: String): Unit =
-    delete(spark, dir, _ => true)
+  /** Write `df` as the initial base `<base>-1`, after deleting every
+    * layer: a re-used dir yields a fresh store, not a new base outranked
+    * or overlaid by layers from the dir's earlier life. */
+  def init(df: DataFrame, dir: String): Unit = {
+    delete(df.sparkSession, dir, _ => true)
+    writeBase(df, dir, -1)
+  }
 
   /** Delete every layer but the initial base, returning the store to the
     * state init() left (the catalog queries' deterministic re-runs). */
@@ -100,13 +106,15 @@ private[graft] final class StoreFs(owner: String, base: String,
       upTo: Long)(fold: (Long, Seq[Long]) => DataFrame): Boolean = {
     val (g, open) = resolve(spark, dir, upTo)
     val due = open.nonEmpty && open.size >= maxOpenGenerations
-    // size-targeted files via AQE rebalance: the fold is the store's
-    // corpus-sized write, where per-file open cost on every later read
-    // matters most
-    if (due) fold(g, open).hint("rebalance").write.mode("overwrite")
-      .parquet(baseDir(dir, open.last))
+    if (due) writeBase(fold(g, open), dir, open.last)
     due
   }
+
+  // size-targeted files via AQE rebalance: a base is the store's
+  // corpus-sized write, where per-file open cost on every later read
+  // matters most
+  private def writeBase(df: DataFrame, dir: String, g: Long): Unit =
+    df.hint("rebalance").write.mode("overwrite").parquet(baseDir(dir, g))
 
   private def committed(fs: FileSystem, dir: String, prefix: String,
       marker: String, keep: Long => Boolean): Seq[Long] =
@@ -127,9 +135,6 @@ private[graft] object StoreFs {
   /** The filesystem `path` lives on. */
   private def fs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  def exists(spark: SparkSession, path: String): Boolean =
-    fs(spark, path).exists(new Path(path))
 
   /** Total bytes of every file under `paths`. */
   def bytes(spark: SparkSession, paths: Seq[String]): Long =

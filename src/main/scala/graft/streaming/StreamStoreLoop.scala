@@ -33,8 +33,7 @@ import org.apache.spark.sql.functions._
   */
 object GateStoreLoop {
 
-  private[graft] val storeFs = new StoreFs("GateStoreLoop", "base_",
-    "tombs/_SUCCESS")
+  private[graft] val storeFs = new StoreFs("base_", "tombs/_SUCCESS")
 
   /** (base frame, ordered open generations) as of now. */
   def state(spark: SparkSession, dir: String)
@@ -50,14 +49,9 @@ object GateStoreLoop {
         spark.read.parquet(s"${storeFs.genDir(dir, id)}/delta"),
         spark.read.parquet(s"${storeFs.genDir(dir, id)}/tombs"))))
 
-  /** Write the initial store as generation -1, after clearing every
-    * layer a re-used `dir` still holds. */
-  def init(store: DataFrame, dir: String): Unit = {
-    storeFs.clear(store.sparkSession, dir)
-    // r21: size-targeted base files (AQE rebalance; see handleBatch)
-    store.hint("rebalance").write.mode("overwrite")
-      .parquet(storeFs.baseDir(dir, -1))
-  }
+  /** Write the initial store as generation -1 ([[StoreFs.init]]: a
+    * re-used `dir` is cleared first). */
+  def init(store: DataFrame, dir: String): Unit = storeFs.init(store, dir)
 
   /** The foreachBatch handler: classify, derive the delta, persist the
     * batch's artifacts. Pass directly to
@@ -133,7 +127,7 @@ object GateStoreLoop {
     // measured the three extra rebalance exchanges costing +25% wall
     // per batch at bench scale while the artifacts are ingest-sized
     // either way; file sizing matters on the CORPUS-sized writes (init
-    // and compaction below, which do rebalance). Generation fan-in is
+    // and compaction, which StoreFs rebalances). Generation fan-in is
     // bounded by maxOpenGenerations, so small gen files stay a bounded
     // read cost by construction.
     val gen = storeFs.genDir(dir, batchId)
@@ -207,9 +201,7 @@ object GateStoreLoop {
     * error (contrast [[state]], where a MISSING STORE is).
     */
   def outcomes(spark: SparkSession, dir: String): DataFrame = {
-    val gen = (id: Long) => storeFs.genDir(dir, id)
-    val ids = storeFs.generations(spark, dir)
-      .filter(id => StoreFs.exists(spark, s"${gen(id)}/outcomes/_SUCCESS"))
+    val ids = storeFs.generations(spark, dir, also = "outcomes/_SUCCESS")
     if (ids.isEmpty)
       // schema-stable empty frame: derived from the store's own base
       // (always present once init ran), projected to the outcome shape.
@@ -228,7 +220,8 @@ object GateStoreLoop {
           lit(0.0).as("best_sim"),
           col("node_id").as("batch_twin"))
         .limit(0)
-    else ids.map(id => spark.read.parquet(s"${gen(id)}/outcomes"))
+    else ids.map(id =>
+      spark.read.parquet(s"${storeFs.genDir(dir, id)}/outcomes"))
       .reduce(_ unionByName _)
   }
 }
