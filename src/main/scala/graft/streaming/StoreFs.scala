@@ -69,12 +69,14 @@ private[graft] final class StoreFs(base: String, genMarker: String) {
   def resolve(spark: SparkSession, dir: String,
       below: Long = Long.MaxValue): (Long, Seq[Long]) = {
     val fs = StoreFs.fs(spark, dir)
-    val g = committed(fs, dir, base, "_SUCCESS", _ => true).lastOption
+    val names = StoreFs.list(fs, dir)
+    val g = committed(fs, dir, names, base, "_SUCCESS", _ => true).lastOption
       .getOrElse(throw new IllegalStateException(
         s"no committed $base layer under $dir — run init() first (a " +
           "missing or _SUCCESS-less base means the store was never " +
           "created, not that it is empty)"))
-    (g, committed(fs, dir, "gen_", genMarker, id => id > g && id < below))
+    (g, committed(fs, dir, names, "gen_", genMarker,
+      id => id > g && id < below))
   }
 
   /** Every committed generation id, folded ones included, whose
@@ -82,7 +84,7 @@ private[graft] final class StoreFs(base: String, genMarker: String) {
   def generations(spark: SparkSession, dir: String,
       also: String): Seq[Long] = {
     val fs = StoreFs.fs(spark, dir)
-    committed(fs, dir, "gen_", genMarker, _ => true)
+    committed(fs, dir, StoreFs.list(fs, dir), "gen_", genMarker, _ => true)
       .filter(id => fs.exists(new Path(s"${genDir(dir, id)}/$also")))
   }
 
@@ -116,9 +118,11 @@ private[graft] final class StoreFs(base: String, genMarker: String) {
   private def writeBase(df: DataFrame, dir: String, g: Long): Unit =
     df.hint("rebalance").write.mode("overwrite").parquet(baseDir(dir, g))
 
-  private def committed(fs: FileSystem, dir: String, prefix: String,
-      marker: String, keep: Long => Boolean): Seq[Long] =
-    StoreFs.list(fs, dir).filter(_.startsWith(prefix))
+  /** Ids of the `<prefix><id>` entries among `names` that pass `keep`
+    * and carry `marker`, ascending. */
+  private def committed(fs: FileSystem, dir: String, names: Seq[String],
+      prefix: String, marker: String, keep: Long => Boolean): Seq[Long] =
+    names.filter(_.startsWith(prefix))
       .flatMap(_.stripPrefix(prefix).toLongOption).filter(keep).sorted
       .filter(id => fs.exists(new Path(s"$dir/$prefix$id/$marker")))
 

@@ -440,7 +440,7 @@ class StreamingSpec extends SparkSpec {
     assert(viaUri == plain, "a file: URI store diverged from a plain path")
     for (d <- Seq(uriGate, uriCc))
       assert(!new java.io.File(sys.props("user.dir"), s"file:$d").exists(),
-        s"a file: URI was treated as a relative path under the working dir")
+        "a file: URI was treated as a relative path under the working dir")
   }
 
   test("transformWithState fingerprint dedup: first arrival new, " +
