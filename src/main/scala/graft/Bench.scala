@@ -8,7 +8,7 @@ import scala.util.control.NonFatal
   * multi-KB line gets truncated by log capture and then fails to parse,
   * so everything else is additive small fields); the RICH per-query
   * record — {sec, gc_sec, heap_mb_delta, rows, exchanges} — goes to a
-  * file (`SPARK_GRAFT_BENCH_OUT`, default `bench_queries.json`) so a
+  * file (`SPARK_GRAFT_BENCH_OUT`, default `bench_rich_last.json`) so a
   * contaminated measurement self-identifies per query (GC share of wall
   * time) and a plan regression shows as structure drift (rows /
   * exchange count) separately from wall-time noise. Compare two
@@ -78,9 +78,8 @@ object Bench {
     * calibration-pair staleness becomes machine-checkable forensics.
     * Informational only — the weather guard must NOT assert equality
     * on it, because the driver's refresh runs on the round commit,
-    * one rev after the committed re-pin by construction. Shared with
-    * ScaleProbe so every bench/probe artifact carries it. */
-  def codeRev: String = {
+    * one rev after the committed re-pin by construction. */
+  private def codeRev: String = {
     // r21 (ADVICE): the hang case is handled with a BOUNDED wait — a
     // git that never exits (lock contention, credential prompt) used to
     // block readAllBytes forever despite the finally-destroy; now we
@@ -134,9 +133,13 @@ object Bench {
     // run clobbered the committed 32-core calibration pin in the
     // end-of-round snapshot (how the r21 suite went red). Deliberate
     // re-pins set SPARK_GRAFT_BENCH_OUT=bench_queries.json explicitly;
-    // the stdout contract line is unchanged either way.
+    // the stdout contract line is unchanged either way. The resolved
+    // path goes to stderr once, so a harness still reading the old
+    // default sees where the artifact went.
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       "bench_rich_last.json")
+    System.err.println(
+      s"[bench] rich artifact -> ${Paths.get(outFile).toAbsolutePath}")
     // Deployment-posture knob (r15): SPARK_GRAFT_INITIAL_PARTITIONS=N
     // turns on AQE's "start wide, coalesce by size" shuffle posture —
     // the production setting a real cluster scales WITH input size and

@@ -109,10 +109,10 @@ import org.apache.spark.sql.functions._
   *  - `embg` (r20): `emb` plus PLANTED near-dup pairs — every
   *    [[GhostEvery]]-th source vector gets a small-angle perturbed
   *    twin at `src + GhostIdOffset` within its replica (noise tiers
-  *    [[GhostNoise]], cosines ≈ 0.9996/0.993/0.96). The knn_recall
-  *    probe measures recall-per-width over this KNOWN population —
-  *    the workload the 0.95-cosine near-dup gate actually serves —
-  *    alongside the random-pair (worst-case) numbers.
+  *    [[GhostNoise]], cosines ≈ 0.9996/0.993/0.96): a KNOWN
+  *    population to measure recall-per-width against — the workload
+  *    the 0.95-cosine near-dup gate actually serves — alongside the
+  *    random-pair (worst-case) numbers (probe_knn_recall_planted_*.json).
   *  - `textrel` (r19): documents AND the relational tables at the same
   *    factor (embeddings copied unchanged) — the corpus the mixed
   *    governance battery needs: `dq_audit` spans orders+customer+
@@ -126,10 +126,10 @@ object ScaleSynth {
     * r·IdOffset. Divisible by lcm(5,10,15)=30 so `id % k` residues the
     * fixtures key on survive replication; large enough that no source
     * id crosses into the next replica's range. SHARED single source of
-    * truth (r19, ADVICE): `dd_embed_decontaminate`'s eval-set bound and
-    * ScaleProbe's chance-rate sample both mean "the first replica" as
-    * `id < IdOffset` — a drifting copy of this constant would silently
-    * break the eval-bounded contract on synthetic corpora. */
+    * truth (r19, ADVICE): `dd_embed_decontaminate`'s eval-set bound
+    * means "the first replica" as `id < IdOffset` — a drifting copy of
+    * this constant would silently break the eval-bounded contract on
+    * synthetic corpora. */
   val IdOffset: Long = 30L * 1000 * 1000
 
   /** Ghost-vector id offset WITHIN a replica's id range (r20, verdict
@@ -137,8 +137,8 @@ object ScaleSynth {
     * mode `embg` plants, for every `GhostEvery`-th source vector, a
     * controlled small-angle perturbation copy at
     * `replica·IdOffset + GhostIdOffset + src_id`. The planted (orig,
-    * ghost) pairs are the KNOWN near-dup population the knn_recall
-    * probe measures recall against — the r19 recall table covered only
+    * ghost) pairs are the KNOWN near-dup population recall is measured
+    * against — the r19 recall table covered only
     * random pairs (near-orthogonal, the sign-LSH worst case); the
     * operators' actual workload claim ("per-bit co-bucketing near 1
     * for tiny angles") needs planted tiny angles to be measured. */
@@ -146,8 +146,7 @@ object ScaleSynth {
 
   /** Marker file a mode-`embg` synthesis writes beside the corpus
     * (r20 review): the planted-ghost population is DECLARED, never
-    * inferred from id residues — see the marker write in [[main]] and
-    * the consumer in [[ScaleProbe]]'s knn_recall. */
+    * inferred from id residues — see the marker write in [[main]]. */
   val GhostMarkerName = "_graft_embg.json"
 
   /** One ghost per this many source vectors (prime — avoids the %25
@@ -379,12 +378,11 @@ object ScaleSynth {
     catch { case scala.util.control.NonFatal(_) => }
 
     // r20 review: the planted-ghost population is declared by a MARKER
-    // beside the corpus, not inferred from id residues — ScaleProbe's
-    // knn_recall previously treated any vec_id whose in-replica residue
-    // passed GhostIdOffset as a ghost, which fabricates a "planted"
-    // recall section on a non-embg corpus whose base ids happen to
-    // reach 15M. embg writes the marker (with the plant parameters as
-    // evidence); every other mode deletes a stale one.
+    // beside the corpus, not inferred from id residues — on a non-embg
+    // corpus whose base ids reach 15M, a residue test would mistake
+    // ordinary vectors for ghosts. embg writes the marker (with the
+    // plant parameters as evidence); every other mode deletes a stale
+    // one.
     val markerPath = java.nio.file.Paths.get(dstDir, GhostMarkerName)
     try {
       if (plantGhosts)

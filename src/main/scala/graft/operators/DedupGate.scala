@@ -234,33 +234,6 @@ object DedupGate {
         lit(false).as("from_corpus"))
       .filter(col("sim") >= DuplicateThreshold)
 
-  /** Measurement seam (r17, SCALE.md's exact-count discipline): the
-    * gate's candidate streams as UNEXECUTED frames wired from the same
-    * internal pieces [[classify]] uses — `(classes, twinHits,
-    * corpusHits)` where `classes` is one row per signature class of the
-    * batch, `twinHits` the salted slim within-batch band self-join
-    * output PRE-collapse (the gate's one ~quadratic stream — the r16
-    * ~sf100 wedge lived here), and `corpusHits` the broadcast corpus
-    * band probe's hit rows (ids only). ScaleProbe counts these at each
-    * scale decade; nothing here resolves outcomes or times anything,
-    * and because the frames come from the production helpers, what the
-    * probe counts IS what classify runs. */
-  private[graft] def probeStreams(incoming: DataFrame, corpus: DataFrame,
-      numBands: Int, rowsPerBand: Int)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val corpusLive = corpus.filter(col("status") =!= "archive")
-    val classes = classReps(sigClassMembers(incoming, cache = false))
-    val bandedCls = bandedStruct(classes, "uid", numBands, rowsPerBand)
-    val twinHits = saltedSlimSelfPairs(
-      bandedCls.select("uid", "band_id", "band_key"),
-      Seq("band_id", "band_key"))
-    val corpusHits = broadcast(bandedCls).alias("q")
-      .join(bandedStruct(corpusLive, "node_id", numBands, rowsPerBand)
-        .alias("c"), Seq("band_id", "band_key"))
-      .select(col("q.uid").as("uid"), col("c.node_id").as("match_id"))
-    (classes, twinHits, corpusHits)
-  }
-
   /** Collapse CORPUS band hits to distinct candidate pairs BEFORE the
     * similarity verify: a pair sharing k bands arrives as k hit rows,
     * and evaluating the signature walk per hit would pay the verify —

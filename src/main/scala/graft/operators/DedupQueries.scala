@@ -106,48 +106,16 @@ object DedupQueries {
       .agg(min("doc_id").as("rep_id"), first("ws").as("ws"))
   }
 
-  /** PPJoin prefix-filter candidate pairs over set REPRESENTATIVES.
-    * reps: (rep_id, ws) or (rep_id, lang, ws). Theorem (any global token
-    * order): J(A,B) ≥ t ⇒ the first (|A| − ⌈t·|A|⌉ + 1) tokens of A and
-    * of B intersect — exploding only that prefix as candidate keys loses
-    * no true pair. Tokens ordered rarest-first by rep-level document
-    * frequency (then lexicographic), which minimizes candidates AND
-    * keeps candidate keys cold: prefix keys are by construction the
-    * rarest tokens. Length filter t·|A| ≤ |B| ≤ |A|/t prunes at the
-    * join. Exposed private[graft] so the degenerate-vocabulary guard in
-    * SkewSessionSpec can pin the candidate count. */
-  private[graft] def prefixRepCandidates(reps: DataFrame, t: Double,
-      byLang: Boolean,
-      // measurement seams (r16): ScaleProbe disables the position filter
-      // to measure its selectivity at a decade, and turns off the final
-      // distinct to count raw join volume (rows flowing through the
-      // candidate join) separately from distinct candidate pairs —
-      // production callers always keep both on
-      posFilter: Boolean = true,
-      distinctPairs: Boolean = true): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    // persisted: the ordered frame feeds both sides of the candidate
-    // self-join. ScaleProbe calls candidatesOverOrdered directly with
-    // ONE persisted build shared across its three counts (r17) —
-    // production callers run this path once per query and Bench clears
-    // the cache between measurements.
-    val ordered = orderedPrefix(reps, byLang)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    candidatesOverOrdered(ordered, t, byLang, posFilter, distinctPairs)
-  }
-
-  /** The t-independent half of the PPJoin candidate build: tokens
-    * ordered rarest-first by rep-level document frequency (then
-    * lexicographic) per representative — (rep_id[, lang], ows). Split
-    * out (r17) so a caller measuring several prune configurations can
-    * persist this decade-sized frame ONCE. */
-  private[graft] def orderedPrefix(reps: DataFrame, byLang: Boolean): DataFrame =
-    orderedPrefixWithDfreq(reps, byLang)._1
-
-  /** [[orderedPrefix]] plus the PERSISTED per-token document-frequency
-    * frame it is built from — `(tok[, lang], df)`, one row per distinct
-    * (token[, lang]). r22 (guide §2.3/§2.4): the frame is exactly the
-    * corpus vocabulary, so the xxhash64 injectivity guard in
+  /** The t-independent half of the PPJoin candidate build over set
+    * REPRESENTATIVES — reps: (rep_id, ws) or (rep_id, lang, ws). Returns
+    * each representative's tokens ordered rarest-first by rep-level
+    * document frequency (then lexicographic) — (rep_id[, lang], ows) —
+    * plus the PERSISTED per-token document-frequency frame it is built
+    * from — `(tok[, lang], df)`, one row per distinct (token[, lang]).
+    * The caller owns both handles: it persists the ordered frame (it
+    * feeds both sides of the candidate self-join) and releases both.
+    * r22 (guide §2.3/§2.4): the df frame is exactly the corpus
+    * vocabulary, so the xxhash64 injectivity guard in
     * [[jaccardPrefixPairs]] derives from it with a vocabulary-sized
     * aggregation instead of paying its own corpus-token-level
     * explode + distinct exchange — the df pass computes the vocabulary
@@ -175,13 +143,16 @@ object DedupQueries {
       .drop("o"), dfreq)
   }
 
-  /** Candidate generation over an already-built (and caller-persisted)
-    * [[orderedPrefix]] frame — the t-dependent prefix slice, the
-    * candidate self-join, and the exact-integer prunes. */
+  /** PPJoin prefix-filter candidate pairs over an already-built (and
+    * caller-persisted) [[orderedPrefixWithDfreq]] frame. Theorem (any
+    * global token order): J(A,B) ≥ t ⇒ the first (|A| − ⌈t·|A|⌉ + 1)
+    * tokens of A and of B intersect — exploding only that prefix as
+    * candidate keys loses no true pair. Rarest-first order minimizes
+    * candidates AND keeps candidate keys cold: prefix keys are by
+    * construction the rarest tokens. Length filter t·|A| ≤ |B| ≤ |A|/t
+    * and the position filter prune at the join, in exact integers. */
   private[graft] def candidatesOverOrdered(ordered: DataFrame, t: Double,
-      byLang: Boolean,
-      posFilter: Boolean = true,
-      distinctPairs: Boolean = true): DataFrame = {
+      byLang: Boolean): DataFrame = {
     // r16: every candidate-side prune runs in EXACT long arithmetic,
     // scaled by the rational denominator of the effective threshold —
     // never t in doubles. Two reasons, both measured:
@@ -239,13 +210,13 @@ object DedupQueries {
       col("a.rep_id") < col("b.rep_id"),
       // length filter θ·|A| ≤ |B| ≤ |A|/θ, cross-multiplied exact
       col("b.n") * lit(num) <= col("a.n") * lit(den),
-      col("a.n") * lit(num) <= col("b.n") * lit(den)) ++
-      (if (posFilter) Seq(ubound * lit(num + den) >= needed) else Nil) ++
+      col("a.n") * lit(num) <= col("b.n") * lit(den),
+      ubound * lit(num + den) >= needed) ++
       (if (byLang) Seq(col("a.lang") === col("b.lang")) else Nil))
       .reduce(_ && _)
-    val raw = pre.alias("a").join(pre.alias("b"), cond)
+    pre.alias("a").join(pre.alias("b"), cond)
       .select(col("a.rep_id").as("ra"), col("b.rep_id").as("rb"))
-    if (distinctPairs) raw.distinct() else raw
+      .distinct()
   }
 
   /** Full collapsed Jaccard-similarity self-join: collapse → prefix
@@ -282,11 +253,11 @@ object DedupQueries {
 
     val repCols = if (byLang) Seq(col("rep_id"), col("lang"), col("ws"))
       else Seq(col("rep_id"), col("ws"))
-    // r22: inlines prefixRepCandidates so the candidate build's own
-    // document-frequency pass (one row per distinct token — the corpus
-    // vocabulary) also feeds the injectivity guard below, instead of
-    // the guard re-exploding the reps and paying a second
-    // corpus-token-level distinct exchange (guide §2.4).
+    // r22: the candidate build's own document-frequency pass (one row
+    // per distinct token — the corpus vocabulary) also feeds the
+    // injectivity guard below, instead of the guard re-exploding the
+    // reps and paying a second corpus-token-level distinct exchange
+    // (guide §2.4).
     val (ordered0, dfreq) =
       orderedPrefixWithDfreq(groups.select(repCols: _*), byLang)
     val ordered = ordered0.persist(StorageLevel.MEMORY_AND_DISK)

@@ -186,10 +186,7 @@ object Multimodal {
       .select(col("doc_id"), col("text").cast("binary").as("content"))
 
   /** The dHash band table (doc_id, h64, band_id, band_val) the phash
-    * dedup self-joins — factored so ScaleProbe's `mm` family counts the
-    * PRODUCTION band stream (occupancy → exact Σ s·(s−1) candidate
-    * count) rather than a restatement (r19; the gate-probe discipline,
-    * `DedupGate.probeStreams` precedent).
+    * dedup self-joins (`mm_phash_dedup`; `MultimodalSpec` pins it).
     *
     * `h64` (r19 fix) is the FULL 64-bit dHash reassembled from its four
     * band slices, riding every band row (+8 bytes on a slim row) so the

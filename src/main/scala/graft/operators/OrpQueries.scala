@@ -80,13 +80,11 @@ object OrpQueries {
     }
 
   /** The ST7 gate fixture `(inc0, corp0)` shared by all four dg_* gate
-    * queries AND ScaleProbe's gate family (r17 — previously four inline
-    * copies): every 5th doc re-arrives; every 10th with replaced content
-    * (→ new), every 15th with changed metadata (→ version), the rest
-    * identical (→ duplicate); corpus docs ≡9 mod 10 are archived
-    * (check_duplicate.py:183-289). Factored so the structural counts
-    * the probe reports are BY CONSTRUCTION over the same frames the
-    * measured queries classify. */
+    * queries (r17 — previously four inline copies): every 5th doc
+    * re-arrives; every 10th with replaced content (→ new), every 15th
+    * with changed metadata (→ version), the rest identical
+    * (→ duplicate); corpus docs ≡9 mod 10 are archived
+    * (check_duplicate.py:183-289). */
   private[graft] def gateFixture(s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
     val docs = Tables.documents(s, d)

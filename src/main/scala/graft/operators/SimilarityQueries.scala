@@ -566,8 +566,8 @@ object SimilarityQueries {
     // every replica's copies eval too — the decade batteries would
     // have measured a quadratic workload the operator's design
     // explicitly rules out. r19 (ADVICE): the boundary reads the ONE
-    // shared constant (here, in the oracle SQL below, and in
-    // ScaleProbe) so a future offset change cannot silently break it.
+    // shared constant (here and in the oracle SQL below) so a future
+    // offset change cannot silently break it.
     "dd_embed_decontaminate" -> ((s, d) => {
       val e = emb(s, d)
       val ev = e.filter(col("vec_id") % 25 === 0 &&

@@ -159,12 +159,11 @@ object GateStoreLoop {
     maybeCompact(spark, dir, 1, upTo)
 
   /** The fold compact writes, as `(target generation, frame)` — None
-    * when nothing is open below `upTo`. Public (r19) so ScaleProbe's
-    * fallback_store family can materialize the PRODUCTION fold and read
-    * its final adaptive plan (the executed join kinds of the
-    * per-generation tombstone anti-joins) — a write command's plan is
-    * not inspectable after the fact, and the probe must measure this
-    * code path, not a restatement of it. */
+    * when nothing is open below `upTo`. Compaction writes it; it is
+    * public so a reader can check the PRODUCTION fold without writing
+    * it: perfbench's fold oracle compares it with the never-compacted
+    * fold of every generation, and `PlanSpec` reads its plan (a write
+    * command's plan is not inspectable after the fact). */
   def foldedBase(spark: SparkSession, dir: String,
       upTo: Long = Long.MaxValue): Option[(Long, DataFrame)] = {
     val (g, ids) = storeFs.resolve(spark, dir, upTo)

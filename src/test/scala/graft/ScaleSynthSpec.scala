@@ -44,7 +44,7 @@ class ScaleSynthSpec extends AnyFunSuite {
     // ghost ids live in the upper half of the replica's id range —
     // collision-free with source ids at any tested corpus size
     assert(GhostIdOffset * 2 == IdOffset)
-    // the probe recovers tier as (vec_id − GhostIdOffset) % 3 = src % 3,
+    // a reader recovers tier as (vec_id − GhostIdOffset) % 3 = src % 3,
     // which requires the replica offset to vanish mod 3
     assert(IdOffset % 3 == 0,
       "tier = src % 3 must survive the replica id offset")

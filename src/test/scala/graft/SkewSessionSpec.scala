@@ -72,12 +72,25 @@ class SkewSessionSpec extends SparkSpec {
       .toDF("doc_id", "ws")
     val groups = graft.operators.DedupQueries.collapseSets(docs, byLang = false)
     assert(groups.count() == 12)
+    // the candidate build jaccardPrefixPairs runs; both persisted
+    // handles it hands back must release everything the build cached.
+    // Compared by RDD id, not by count: the context cleaner may drop an
+    // unreachable RDD of an earlier suite at any moment.
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val (ordered0, dfreq) = graft.operators.DedupQueries
+      .orderedPrefixWithDfreq(groups.select($"rep_id", $"ws"), byLang = false)
+    val ordered = ordered0.persist()
     val nCand = graft.operators.DedupQueries
-      .prefixRepCandidates(groups.select($"rep_id", $"ws"), 0.9, byLang = false)
+      .candidatesOverOrdered(ordered, 0.9, byLang = false)
       .count()
     assert(nCand <= 66,
       s"$nCand rep-level candidates — exceeds the C(12,2)=66 distinct-set " +
         "bound; collapse degraded toward per-doc candidate generation")
+    ordered.unpersist(blocking = true)
+    dfreq.unpersist(blocking = true)
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- cachedBefore
+    assert(leaked.isEmpty,
+      s"candidate build left ${leaked.size} persisted RDD(s) behind")
 
     // and the collapsed pipeline's OUTPUT equals brute force over docs
     val t = 0.9
