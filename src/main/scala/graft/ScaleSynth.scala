@@ -144,11 +144,6 @@ object ScaleSynth {
     * for tiny angles") needs planted tiny angles to be measured. */
   val GhostIdOffset: Long = IdOffset / 2
 
-  /** Marker file a mode-`embg` synthesis writes beside the corpus
-    * (r20 review): the planted-ghost population is DECLARED, never
-    * inferred from id residues — see the marker write in [[main]]. */
-  val GhostMarkerName = "_graft_embg.json"
-
   /** One ghost per this many source vectors (prime — avoids the %25
     * eval-set and %6 delta-tranche residue classes lining up). */
   val GhostEvery: Long = 37L
@@ -376,21 +371,6 @@ object ScaleSynth {
     try java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(
       dstDir, graft.functions.Vectors.SignWidthSidecarName))
     catch { case scala.util.control.NonFatal(_) => }
-
-    // r20 review: the planted-ghost population is declared by a MARKER
-    // beside the corpus, not inferred from id residues — on a non-embg
-    // corpus whose base ids reach 15M, a residue test would mistake
-    // ordinary vectors for ghosts. embg writes the marker (with the
-    // plant parameters as evidence); every other mode deletes a stale
-    // one.
-    val markerPath = java.nio.file.Paths.get(dstDir, GhostMarkerName)
-    try {
-      if (plantGhosts)
-        java.nio.file.Files.writeString(markerPath,
-          s"""{"mode":"embg","ghost_every":$GhostEvery,""" +
-            s""""ghost_id_offset":$GhostIdOffset,"factor":$factor}""" + "\n")
-      else java.nio.file.Files.deleteIfExists(markerPath)
-    } catch { case scala.util.control.NonFatal(_) => }
 
     // hard-copy the shared dims (and anything else) unchanged
     val names = new java.io.File(srcDir).listFiles()

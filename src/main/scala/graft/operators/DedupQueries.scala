@@ -412,7 +412,12 @@ object DedupQueries {
     * truncate is contraction-residue-sized, so the per-round write is
     * tiny next to the shuffles it protects. Locally (no dir) fall back
     * to executor-local checkpoints, which are faster and fine in a
-    * single-JVM test run. */
+    * single-JVM test run. RETENTION: Spark removes reliable checkpoint
+    * files only when `spark.cleaner.referenceTracking.cleanCheckpoints`
+    * is true (off by default); every call here writes one, so a
+    * long-lived stream that sets a checkpoint dir must also set that
+    * conf, or the dir grows by one checkpoint per truncation per
+    * micro-batch. */
   private[graft] def truncatedDf(df: DataFrame, eager: Boolean): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
       df.checkpoint(eager)

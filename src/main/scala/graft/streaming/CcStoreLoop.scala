@@ -67,8 +67,8 @@ object CcStoreLoop {
 
   private def overlay(spark: SparkSession, dir: String)(g: Long,
       ids: Seq[Long]): DataFrame =
-    ids.foldLeft(spark.read.parquet(storeFs.baseDir(dir, g))) { (acc, id) =>
-      val layer = spark.read.parquet(storeFs.genDir(dir, id))
+    ids.foldLeft(StoreFs.read(spark, storeFs.baseDir(dir, g))) { (acc, id) =>
+      val layer = StoreFs.read(spark, storeFs.genDir(dir, id))
       acc.join(layer.select("doc_id"), Seq("doc_id"), "left_anti")
         .unionByName(layer)
     }

@@ -1,7 +1,10 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The on-disk protocol of an LSM store directory, shared by both store
   * loops ([[GateStoreLoop]], [[CcStoreLoop]]). Every path resolves
@@ -56,6 +59,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * as the base at the highest folded generation id. Each open generation
   * adds one probe or overlay join to every later batch, so bounding the
   * count trades a periodic corpus-sized fold for a bounded fan-out.
+  *
+  * READ. Every generation of one layer kind shares the schema of the
+  * frame that wrote it, so [[StoreFs.read]] takes that schema from one
+  * parquet footer on the driver (the schema Spark stores with every
+  * parquet write) and hands it to the reader: no schema-inference job
+  * per layer, and one relation over any number of layers. It is the
+  * assumption Spark itself makes for a multi-path read with
+  * `mergeSchema=false`, which infers from a single file.
   */
 private[graft] final class StoreFs(base: String, genMarker: String) {
 
@@ -139,6 +150,37 @@ private[graft] object StoreFs {
   /** The filesystem `path` lives on. */
   private def fs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Footer key under which every Spark parquet write stores the
+    * written frame's schema as JSON. */
+  private val SchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** One relation over the layer dirs `paths`, all of one kind (see the
+    * class doc's READ paragraph). The schema comes from the footer of a
+    * data file in the first dir; a dir without one, or a footer without
+    * Spark's schema, falls back to Spark's own inference. */
+  def read(spark: SparkSession, paths: String*): DataFrame =
+    footerSchema(spark, paths.head) match {
+      case Some(schema) => spark.read.schema(schema).parquet(paths: _*)
+      case None => spark.read.parquet(paths: _*)
+    }
+
+  /** The schema stored in the footer of a data file under `dir` (names
+    * starting `_` or `.` are markers and checksums, as Spark skips
+    * them). */
+  private def footerSchema(spark: SparkSession,
+      dir: String): Option[StructType] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val file = list(fs(spark, dir), dir)
+      .find(n => !n.startsWith("_") && !n.startsWith("."))
+    file.flatMap { n =>
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromPath(new Path(s"$dir/$n"), conf))
+      try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+        .get(SchemaKey))
+      finally reader.close()
+    }.map(DataType.fromJson(_).asInstanceOf[StructType])
+  }
 
   /** Total bytes of every file under `paths`. */
   def bytes(spark: SparkSession, paths: Seq[String]): Long =

@@ -44,10 +44,10 @@ object GateStoreLoop {
 
   private def layers(spark: SparkSession, dir: String, g: Long,
       ids: Seq[Long]): (DataFrame, Seq[(Long, DataFrame, DataFrame)]) =
-    (spark.read.parquet(storeFs.baseDir(dir, g)),
+    (StoreFs.read(spark, storeFs.baseDir(dir, g)),
       ids.map(id => (id,
-        spark.read.parquet(s"${storeFs.genDir(dir, id)}/delta"),
-        spark.read.parquet(s"${storeFs.genDir(dir, id)}/tombs"))))
+        StoreFs.read(spark, s"${storeFs.genDir(dir, id)}/delta"),
+        StoreFs.read(spark, s"${storeFs.genDir(dir, id)}/tombs"))))
 
   /** Write the initial store as generation -1 ([[StoreFs.init]]: a
     * re-used `dir` is cleared first). */
@@ -191,13 +191,16 @@ object GateStoreLoop {
   }
 
   /** All COMMITTED outcomes written so far (the loop's queryable API
-    * output). Gated on the same tombs/_SUCCESS marker as [[state]]:
-    * outcomes of a generation the store never committed (crash between
-    * the outcomes and tombs writes) are not queryable — a consumer must
-    * never act on classifications whose maintenance half does not
-    * exist. Empty before the first committed generation: a started
-    * stream that has produced nothing is a legitimate state, not an
-    * error (contrast [[state]], where a MISSING STORE is).
+    * output), as ONE relation over every committed generation's
+    * `outcomes` layer ([[StoreFs.read]]: one parquet scan, schema from a
+    * footer, so building the frame starts no Spark job however many
+    * generations exist). Gated on the same tombs/_SUCCESS marker as
+    * [[state]]: outcomes of a generation the store never committed
+    * (crash between the outcomes and tombs writes) are not queryable — a
+    * consumer must never act on classifications whose maintenance half
+    * does not exist. Empty before the first committed generation: a
+    * started stream that has produced nothing is a legitimate state, not
+    * an error (contrast [[state]], where a MISSING STORE is).
     */
   def outcomes(spark: SparkSession, dir: String): DataFrame = {
     val ids = storeFs.generations(spark, dir, also = "outcomes/_SUCCESS")
@@ -211,16 +214,14 @@ object GateStoreLoop {
       // already agree for classification to compare them at all; a
       // batch whose uid type diverged from the store key would fail in
       // classifyStoredDeltas long before this frame mattered).
-      spark.read
-        .parquet(storeFs.baseDir(dir, storeFs.resolve(spark, dir)._1))
+      StoreFs.read(spark, storeFs.baseDir(dir, storeFs.resolve(spark, dir)._1))
         .select(col("node_id").as("uid"),
           lit("new").as("outcome"),
           col("node_id").as("matched_node_id"),
           lit(0.0).as("best_sim"),
           col("node_id").as("batch_twin"))
         .limit(0)
-    else ids.map(id =>
-      spark.read.parquet(s"${storeFs.genDir(dir, id)}/outcomes"))
-      .reduce(_ unionByName _)
+    else StoreFs.read(spark,
+      ids.map(id => s"${storeFs.genDir(dir, id)}/outcomes"): _*)
   }
 }

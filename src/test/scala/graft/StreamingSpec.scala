@@ -14,6 +14,66 @@ class StreamingSpec extends SparkSpec {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
+  /** Spark jobs started while `f` runs. The listener bus is drained
+    * before the listener attaches and again before it detaches, so a
+    * job of earlier work is never counted and one of `f` never missed. */
+  private def jobsDuring[A](f: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graftbridge.Bridge
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    Bridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      val a = f
+      Bridge.drainListenerBus(sc)
+      (a, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** The store read contract: for each layer dir, the schema
+    * `StoreFs.read` takes from a footer is the one Spark infers. */
+  private def assertFooterSchemas(dirs: Seq[String]): Unit =
+    dirs.foreach { d =>
+      val footer = graft.streaming.StoreFs.read(spark, d).schema
+      val inferred = spark.read.parquet(d).schema
+      assert(footer == inferred,
+        s"footer schema of $d differs from the inferred one: " +
+          s"$footer vs $inferred")
+    }
+
+  /** Checks a gate store's reads: every layer kind keeps the inferred
+    * schema, building `state` and `outcomes` starts no Spark job, and
+    * `outcomes` plans ONE parquet scan over every committed generation,
+    * not a union of per-generation scans. */
+  private def assertGateReads(dir: String): Unit = {
+    import graft.streaming.GateStoreLoop
+    import org.apache.spark.sql.catalyst.plans.logical.Union
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    // every committed generation, folded ones included (compaction
+    // never deletes a layer)
+    val fs = GateStoreLoop.storeFs
+    val all = fs.generations(spark, dir, also = "outcomes/_SUCCESS")
+    assertFooterSchemas(fs.baseDir(dir, fs.resolve(spark, dir)._1) +:
+      all.flatMap(id => Seq("delta", "tombs", "outcomes")
+        .map(k => s"${fs.genDir(dir, id)}/$k")))
+    val (_, stateJobs) = jobsDuring(GateStoreLoop.state(spark, dir))
+    val (outcomes, outcomeJobs) =
+      jobsDuring(GateStoreLoop.outcomes(spark, dir))
+    assert(stateJobs == 0 && outcomeJobs == 0,
+      s"building state started $stateJobs Spark jobs and outcomes " +
+        s"$outcomeJobs; a store read must start none before its action")
+    val plan = outcomes.queryExecution.optimizedPlan
+    val scans = plan.collect { case r: LogicalRelation => r }
+    assert(scans.size == 1 && plan.collect { case u: Union => u }.isEmpty,
+      s"outcomes over ${all.size} generations must plan one scan and no " +
+        s"Union, got ${scans.size} scans:\n$plan")
+  }
+
   test("ST1/ST2: stream → element extraction → foreachBatch merge is " +
     "exactly-once-effective across micro-batches") {
     implicit val sqlCtx = spark.sqlContext
@@ -904,6 +964,7 @@ class StreamingSpec extends SparkSpec {
     val batch = Seq(("doc9", sigOf("doc9"), "xx"),
       ("doc10", sigOf("doc10"), "yy")).toDF("uid", "sig", "meta_key")
     GateStoreLoop.handleBatch(dir, 4, 4)(batch, 0L)
+    assertGateReads(dir)
 
     // the refusal contract still stands OUTSIDE the loop: the pure-batch
     // path takes an EXPLICIT arrival column for string uids
@@ -1000,6 +1061,7 @@ class StreamingSpec extends SparkSpec {
     assert(compactions >= 2,
       s"$nBatches batches at threshold $maxOpen should compact >= 2 " +
         s"times, saw $compactions")
+    assertGateReads(dir)
 
     // never-compacted reference: the pure dg_gate_delta iteration
     val none = Seq.empty[Long].toDF("node_id")
@@ -1084,8 +1146,24 @@ class StreamingSpec extends SparkSpec {
         assert(assignOf(CcStoreLoop.state(spark, dir)) == oneShotUpTo(i),
           s"compaction at batch $i changed the assignment")
     }
-    assert(assignOf(CcStoreLoop.state(spark, dir)) ==
-      oneShotUpTo(batches.size - 1),
+    // a redelivery of the last batch under a FRESH id changes nothing,
+    // so it lands an empty generation: its footer still carries the
+    // layer schema, and the overlay reads through it
+    val emptyId = batches.size.toLong
+    CcStoreLoop.handleBatch(dir)(
+      batches.last.toDF("a_id", "b_id"), emptyId)
+    val emptyGen = CcStoreLoop.storeFs.genDir(dir, emptyId)
+    assert(spark.read.parquet(emptyGen).isEmpty,
+      "an already-merged batch must land an empty generation")
+    val (g, ids) = CcStoreLoop.storeFs.resolve(spark, dir)
+    assert(ids.contains(emptyId))
+    assertFooterSchemas(CcStoreLoop.storeFs.baseDir(dir, g) +:
+      ids.map(CcStoreLoop.storeFs.genDir(dir, _)))
+    val (state, stateJobs) = jobsDuring(CcStoreLoop.state(spark, dir))
+    assert(stateJobs == 0,
+      s"building the CC state started $stateJobs Spark jobs; a store " +
+        "read must start none before its action")
+    assert(assignOf(state) == oneShotUpTo(batches.size - 1),
       "soak final CC assignment diverged from one-shot CC on the union")
   }
 
