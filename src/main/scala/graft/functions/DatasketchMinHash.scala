@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Bit-exact datasketch MinHash — SURVEY §7.4 hard-part 1 ("oracle-parity
@@ -121,23 +118,11 @@ object DatasketchMinHashImpl {
   }
 }
 
-/** datasketch_minhash(text) → array<long>[256] (seed-1 parity). */
-case class DatasketchMinHash(child: Expression, k: Int = 5)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(t: Any): Any =
-    DatasketchMinHashImpl.signature(t.asInstanceOf[UTF8String], k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      t => s"graft.functions.DatasketchMinHashImpl.signature($t, $k)")
-  override protected def withNewChildInternal(c: Expression): DatasketchMinHash =
-    copy(child = c)
-}
-
 object DatasketchMinHash {
+  /** datasketch_minhash(text) → array<long>[256] (seed-1 parity). */
   def datasketch_minhash(c: Column, k: Int = 5): Column =
-    org.apache.spark.sql.graftbridge.Bridge.column(
-      DatasketchMinHash(org.apache.spark.sql.graftbridge.Bridge.expression(c), k))
+    org.apache.spark.sql.graftbridge.Bridge.column(graft.plans.NativeFn
+      .datasketchMinhash(org.apache.spark.sql.graftbridge.Bridge.expression(c), k))
 
   /** The reference's pre-shingle text prep (`check_duplicate/utils.py:
     * 13-19`): lowercase → `word_tokenize` → drop [[DatasketchStopwords]]

@@ -9,8 +9,10 @@ import org.apache.spark.sql.functions._
   *  - *Portable* (this file): permutations derived from salted md5, so the
   *    DuckDB oracle can reproduce signatures bit-for-bit
   *    (`('0x'||substr(md5(s||'#'||i),1,15))::BIGINT` ≡ [[Texts.md5Long]]).
-  *  - *Native* ([[MinHashSig]] / [[SimHash64]] Catalyst expressions):
-  *    xxhash64-based single-pass variants for the hot path (no oracle).
+  *  - *Native* (`minhash_sig` / `simhash64`, [[graft.plans.NativeFn]]s
+  *    over [[graft.plans.NativeImpl.minhashSig]] /
+  *    [[graft.plans.NativeImpl.simhash64]]): murmur3_x86_32-based
+  *    single-pass variants for the hot path (no oracle).
   *
   * Reference semantics: 256-perm seed-1 datasketch MinHash over k=5 char
   * shingles (`lambdas/check_duplicate/utils.py:22-40`), banded LSH probe
@@ -55,18 +57,9 @@ object Hashes {
     // r21 (guide §4): compiled one-pass banding — the former HOF chain
     // paid an interpreted transform + slice + ArrayJoin + long→string
     // cast per band per row (43 bands/row on the 256-perm paths).
-    // Output-identical (NgramSpec pins it against [[bandsHof]]).
+    // Output-identical (NgramSpec pins it against the HOF form, kept in
+    // test scope as ParityReferences.bandsHof).
     graft.plans.Native.lsh_bands(sig, numBands, rowsPerBand)
-
-  /** The declarative HOF form [[bands]] compiled away — kept as the
-    * equivalence-test reference (NgramSpec) and the readable statement
-    * of the banding semantics. */
-  private[graft] def bandsHof(sig: Column, numBands: Int,
-      rowsPerBand: Int): Column =
-    transform(sequence(lit(0), lit(numBands - 1)),
-      b => struct(b.as("band_id"),
-        array_join(slice(sig, b * rowsPerBand + 1, lit(rowsPerBand)), "_")
-          .as("band_key")))
 
   /** Estimated Jaccard from two equal-length MinHash signatures:
     * fraction of agreeing components. */

@@ -3,10 +3,7 @@ package graft.functions
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Recursive JSON walks — SURVEY §2.9 F22/F23.
@@ -22,9 +19,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * general form of the reference's attribute flattening for the Dynamo
   * sink, beyond the fixed dotted-path access of `p3_json_extract`.
   *
-  * Both are native Catalyst expressions over Jackson (the JSON parser
-  * Spark itself ships), evaluated once per row inside whole-stage
-  * codegen; no UDF/py round-trip.
+  * Both are native functions ([[graft.plans.NativeFn]]) over Jackson
+  * (the JSON parser Spark itself ships), evaluated once per row inside
+  * whole-stage codegen; no UDF/py round-trip. `json_find_key(json, key)`
+  * returns array<string>; `json_flatten_paths(json)` returns
+  * array<struct<path: string, value: string>>.
   */
 object JsonWalkImpl {
 
@@ -90,38 +89,10 @@ object JsonWalkImpl {
   }
 }
 
-/** json_find_key(json, key) → array<string> (document-order DFS). */
-case class JsonFindKey(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullSafeEval(j: Any, k: Any): Any =
-    JsonWalkImpl.findKey(j.asInstanceOf[UTF8String], k.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (j, k) => s"graft.functions.JsonWalkImpl.findKey($j, $k)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): JsonFindKey =
-    copy(left = newLeft, right = newRight)
-}
-
-/** json_flatten_paths(json) → array<struct<path:string, value:string>>. */
-case class JsonFlattenPaths(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("path", StringType, nullable = false),
-      StructField("value", StringType, nullable = false))),
-    containsNull = false)
-  override def nullSafeEval(j: Any): Any =
-    JsonWalkImpl.flatten(j.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, j => s"graft.functions.JsonWalkImpl.flatten($j)")
-  override protected def withNewChildInternal(c: Expression): JsonFlattenPaths =
-    copy(child = c)
-}
-
 object JsonWalk {
   import org.apache.spark.sql.graftbridge.Bridge.{column, expression}
   def json_find_key(json: Column, key: Column): Column =
-    column(JsonFindKey(expression(json), expression(key)))
+    column(graft.plans.NativeFn.jsonFindKey(expression(json), expression(key)))
   def json_flatten_paths(json: Column): Column =
-    column(JsonFlattenPaths(expression(json)))
+    column(graft.plans.NativeFn.jsonFlattenPaths(expression(json)))
 }

@@ -3,9 +3,6 @@ package graft.functions
 import java.util.regex.Pattern
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** F9 — the reference's title postprocess family, re-expressed as one
@@ -33,8 +30,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * splices, stateful dedup), which is why it is ONE JVM-native expression
   * rather than a chain of `regexp_replace` columns: Spark's
   * `regexp_replace` replaces every match, the reference splices only the
-  * first. The expression stays inside whole-stage codegen (generated code
-  * calls the static impl, same shape as the other natives).
+  * first. It is a [[graft.plans.NativeFn]] over [[TitleImpl.full]], so
+  * it stays inside whole-stage codegen like the other natives.
   *
   * Divergence (documented): where the reference would crash when every
   * word is trimmed (`text_list[-1]` on an empty list), this returns "".
@@ -166,20 +163,8 @@ object TitleImpl {
     UTF8String.fromString(postprocessTitle(cleanJunk(t.toString)))
 }
 
-/** title_postprocess(string) → string. */
-case class TitlePostprocess(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullSafeEval(t: Any): Any =
-    TitleImpl.full(t.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      t => s"graft.functions.TitleImpl.full($t)")
-  override protected def withNewChildInternal(c: Expression): TitlePostprocess =
-    copy(child = c)
-}
-
 object TitlePostprocess {
   import org.apache.spark.sql.graftbridge.Bridge.{column, expression}
   def title_postprocess(c: Column): Column =
-    column(TitlePostprocess(expression(c)))
+    column(graft.plans.NativeFn.titlePostprocess(expression(c)))
 }

@@ -23,8 +23,8 @@ object Vectors {
 
   /** Cosine similarity (reference thresholds 0.95 / 0.995,
     * `check_duplicate.py:19`, `record_handler.py:12`). Backed by the
-    * native [[graft.plans.CosineSim]] expression — a single primitive
-    * pass whose left-to-right accumulation is bit-identical to the
+    * native `cosine_sim` ([[graft.plans.NativeImpl.cosine]]) — a single
+    * primitive pass whose left-to-right accumulation is bit-identical to the
     * interpreted `aggregate(zip_with(...))` fold it replaced (the oracle
     * queries confirm this), but stays inside whole-stage codegen. */
   def cosine(a: Column, b: Column): Column =
@@ -32,7 +32,7 @@ object Vectors {
       b.cast("array<double>"))
 
   /** Cosine rounded for cross-engine hash-stability. The rounding is
-    * the native [[graft.plans.FastRoundHalfUp]] (r20): bit-identical
+    * the native [[graft.plans.Native.fast_round]] (r20): bit-identical
     * to `round(_, scale)` but without the per-row BigDecimal/
     * Double.toString construction — which a jstack of the decade-3
     * knn candidate stream showed DOMINATING the per-pair cost (most

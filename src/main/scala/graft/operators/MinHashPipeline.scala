@@ -26,9 +26,9 @@ object MinHashPipeline {
       numPerms: Int = 16, maxWords: Int = 24): DataFrame = {
     // r21 (guide §4): the signature is ONE compiled per-row pass
     // (portable_minhash_sig) — value-identical to the former explode →
-    // md5Long → %P → grouped-min pipeline (kept below as
-    // [[signaturesExplode]]; NgramSpec pins bit-equality on the real
-    // corpus), with no shingle Generate, no hex/conv parse per
+    // md5Long → %P → grouped-min pipeline (kept in test scope as
+    // ParityReferences.signaturesExplode; NgramSpec pins bit-equality on
+    // the real corpus), with no shingle Generate, no hex/conv parse per
     // shingle, and no keyed aggregation: the signature build now
     // touches ZERO shuffles at any corpus size — strictly better than
     // the explode shape's one keyed partial-min exchange.
@@ -36,31 +36,6 @@ object MinHashPipeline {
       graft.plans.Native.portable_minhash_sig(
         Texts.smartShorten(Texts.cleanText(text), maxWords), numPerms)
         .as("sig"))
-  }
-
-  /** The explode + grouped-min statement of [[signatures]] — the
-    * readable form the DuckDB mirror restates, retained as the parity
-    * reference (NgramSpec) for the compiled per-row pass. */
-  private[graft] def signaturesExplode(df: DataFrame, idCol: String,
-      text: Column, numPerms: Int = 16, maxWords: Int = 24): DataFrame = {
-    val P = Hashes.MinHashPrime
-    val cleaned = df.select(col(idCol),
-      Texts.smartShorten(Texts.cleanText(text), maxWords).as("ct"))
-    val hashed = cleaned
-      .select(col(idCol), col("ct"),
-        explode(sequence(lit(1), greatest(length(col("ct")) - 4, lit(1))))
-          .as("i"))
-      .select(col(idCol),
-        (Texts.md5Long(col("ct").substr(col("i"), lit(5))) % P).as("h"))
-    val permAggs = (0 until numPerms).map { i =>
-      val a = (2654435761L * (i + 1)) % P
-      val b = (40503L * (i + 7)) % P
-      min((lit(a) * col("h") + lit(b)) % P).as(s"s$i")
-    }
-    hashed.groupBy(idCol)
-      .agg(permAggs.head, permAggs.tail: _*)
-      .select(col(idCol),
-        array((0 until numPerms).map(i => col(s"s$i")): _*).as("sig"))
   }
 
   /** The DuckDB mirror of [[signatures]] as a CTE body: given a source

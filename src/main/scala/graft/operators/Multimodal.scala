@@ -181,7 +181,7 @@ object Multimodal {
             .as("text")))
   }
 
-  private def phashSrc(s: SparkSession, d: String): DataFrame =
+  private[graft] def phashSrc(s: SparkSession, d: String): DataFrame =
     withGhostDups(Tables.documents(s, d))
       .select(col("doc_id"), col("text").cast("binary").as("content"))
 
@@ -200,37 +200,14 @@ object Multimodal {
     // Row-codec boundary (decode/re-encode per row) plus an
     // upper(hex()) render and 72 substring+conv extractions per row.
     // Integer-identical output (MultimodalSpec pins parity against the
-    // declarative chain, which phashBandsDeclarative retains); the
+    // declarative chain, which ParityReferences.phashBandsDeclarative
+    // retains in test scope); the
     // codec-stage OPERATORS (mm_resize, mm_frame_sample,
     // mm_feature_hist) keep the real partition-batched plumbing —
     // that boundary is their semantics, not a means.
     phashSrc(s, d)
       .select(col("doc_id"),
         graft.plans.Native.dhash_bands(col("content")).as("bs"))
-      .select(col("doc_id"),
-        (col("bs")(0) + shiftleft(col("bs")(1), 16) +
-          shiftleft(col("bs")(2), 32) + shiftleft(col("bs")(3), 48))
-          .as("h64"),
-        posexplode(col("bs")).as(Seq("band_id", "band_val")))
-  }
-
-  /** The declarative resize→hex→conv dHash chain [[phashBands]]
-    * compiled away — kept as the equivalence-test reference
-    * (MultimodalSpec) and the readable statement of the semantics. */
-  private[graft] def phashBandsDeclarative(s: SparkSession,
-      d: String): DataFrame = {
-    val rs = resize(phashSrc(s, d), 9, 8)
-      .select(col("doc_id"), upper(hex(col("resized"))).as("h"))
-    def px(i: Int) = conv(substring(col("h"), 2 * i + 1, 2), 16, 10)
-      .cast("long")
-    def band(b: Int) = (0 until 16).map { j =>
-      val k = b * 16 + j
-      val (r, c) = (k / 8, k % 8)
-      when(px(r * 9 + c) < px(r * 9 + c + 1), lit(1L << j))
-        .otherwise(lit(0L))
-    }.reduce(_ + _)
-    rs.select(col("doc_id"),
-        array((0 until 4).map(b => band(b)): _*).as("bs"))
       .select(col("doc_id"),
         (col("bs")(0) + shiftleft(col("bs")(1), 16) +
           shiftleft(col("bs")(2), 32) + shiftleft(col("bs")(3), 48))

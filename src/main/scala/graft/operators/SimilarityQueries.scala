@@ -191,8 +191,8 @@ object SimilarityQueries {
       rkMax: Int): DataFrame = {
     val cbArr = cents.agg(
       array_sort(collect_list(struct(col("c_id"), col("c_v")))).as("cb"))
-    // graft.plans.CellRank: one compiled pass per row (same IEEE fold,
-    // same tie order as the interpreted HOF chain — which the r18
+    // cell_rank (NativeImpl.cellRank): one compiled pass per row (same
+    // IEEE fold, same tie order as the interpreted HOF chain — which the r18
     // battery measured costing 1.4-1.7x wall; see NativeImpl.cellRank)
     val ranked = graft.plans.Native.cell_rank(col("v"), col("cb"))
     vecs.crossJoin(broadcast(cbArr))
@@ -262,7 +262,7 @@ object SimilarityQueries {
     // bit-identical value — while a round(…,6) re-introduces divergence
     // exactly at half-way decimals (the sim_quantize_int8 lesson). The
     // oracle mirrors the order with list_reduce, not list_sum.
-    // CellRank = the compiled form of that fold (NativeImpl.cellRank).
+    // cell_rank = the compiled form of that fold (NativeImpl.cellRank).
     val dists = subvecs.join(broadcast(cbm), Seq("m"))
       .withColumn("darr",
         graft.plans.Native.cell_rank(col("v_sub"), col("cbm")))

@@ -333,8 +333,8 @@ object TextQueries {
     // prefix, page-of splice, TOC marker, unbalanced bracket, Crown
     // truncation, `.doc` wildcard junk, trailing stopwords, ALL-CAPS
     // heads) so every branch of the pipeline is exercised, then cleaned
-    // by the native TitlePostprocess expression. Narrow per-row op — no
-    // shuffle, scales linearly with input splits.
+    // by the native title_postprocess (TitleImpl.full). Narrow per-row
+    // op — no shuffle, scales linearly with input splits.
     "f9_title_postprocess" -> ((s, d) => {
       import graft.functions.TitlePostprocess.title_postprocess
       val head = smartShorten(col("text"), 8)

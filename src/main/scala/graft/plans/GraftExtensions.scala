@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Session-extension entry point — register the engine's native functions
   * at session build time (the deployment path for a real cluster):
@@ -13,69 +13,15 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * }}}
   *
   * For an already-running session, [[Native.register]] installs the same
-  * functions into the session's function registry.
+  * functions into the session's function registry: both read the one
+  * table [[Native.sqlFunctions]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def info(name: String, usage: String) =
-    new ExpressionInfo("graft", null, name, usage, "")
-
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => RewriteMinHashAgreement)
-    e.injectFunction((FunctionIdentifier("cosine_sim"),
-      info("cosine_sim", "cosine_sim(a, b) - cosine of two double arrays"),
-      (es: Seq[Expression]) => CosineSim(es.head, es(1))))
-    e.injectFunction((FunctionIdentifier("minhash_sig"),
-      info("minhash_sig", "minhash_sig(text) - 256-perm murmur3 MinHash"),
-      (es: Seq[Expression]) => MinHashSig(es.head, 256, 5)))
-    e.injectFunction((FunctionIdentifier("simhash64"),
-      info("simhash64", "simhash64(tokens) - 64-bit SimHash"),
-      (es: Seq[Expression]) => SimHash64(es.head)))
-    e.injectFunction((FunctionIdentifier("datasketch_minhash"),
-      info("datasketch_minhash",
-        "datasketch_minhash(text) - bit-exact datasketch seed-1 signature"),
-      (es: Seq[Expression]) =>
-        graft.functions.DatasketchMinHash(es.head)))
-    e.injectFunction((FunctionIdentifier("sorted_intersect_count"),
-      info("sorted_intersect_count",
-        "sorted_intersect_count(a, b) - |A∩B| of sorted string arrays"),
-      (es: Seq[Expression]) => SortedIntersectCount(es.head, es(1))))
-    e.injectFunction((FunctionIdentifier("sig_agree"),
-      info("sig_agree",
-        "sig_agree(a, b) - fraction of agreeing MinHash signature positions"),
-      (es: Seq[Expression]) => SigAgree(es.head, es(1))))
-    e.injectFunction((FunctionIdentifier("sig_min"),
-      info("sig_min",
-        "sig_min(sig) - element-wise min of long-array signatures (UDAF)"),
-      (es: Seq[Expression]) => SigMin(es.head)))
-    e.injectFunction((FunctionIdentifier("top_k_pairs"),
-      info("top_k_pairs",
-        "top_k_pairs(score, id, k) - bounded per-group top-k " +
-          "(score DESC, id ASC) pairs, rank-ordered (UDAF)"),
-      // k parameterizes the buffer, so it must be a literal — validated
-      // by the shared builder (analyzer-style message on a non-foldable
-      // or NULL k, r20 ADVICE) the way first/approx params are
-      (es: Seq[Expression]) => TopKPairs.forSql(es)))
-    e.injectFunction((FunctionIdentifier("nfc_normalize"),
-      info("nfc_normalize",
-        "nfc_normalize(s) - Unicode NFC canonical composition"),
-      (es: Seq[Expression]) => NfcNormalize(es.head)))
-    // r20 review: gear_boundaries was registered only on the
-    // Native.register in-session path, contradicting this class's doc
-    // that both paths install the same functions — a cluster deployed
-    // via spark.sql.extensions got UNRESOLVED_ROUTINE for a query that
-    // works in any session that called Native.register.
-    e.injectFunction((FunctionIdentifier("gear_boundaries"),
-      info("gear_boundaries",
-        "gear_boundaries(s) - FastCDC gear-hash boundary candidates"),
-      (es: Seq[Expression]) => GearBoundaries(es.head)))
-    e.injectFunction((FunctionIdentifier("json_find_key"),
-      info("json_find_key",
-        "json_find_key(json, key) - recursive document-order key search"),
-      (es: Seq[Expression]) => graft.functions.JsonFindKey(es.head, es(1))))
-    e.injectFunction((FunctionIdentifier("json_flatten_paths"),
-      info("json_flatten_paths",
-        "json_flatten_paths(json) - recursive (path, value) flatten"),
-      (es: Seq[Expression]) => graft.functions.JsonFlattenPaths(es.head)))
+    Native.sqlFunctions.foreach { case (name, usage, build) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo("graft", null, name, usage, ""), build))
+    }
   }
 }

@@ -5,15 +5,21 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graftbridge.Bridge.{AnyArray, InputType}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.functions.{DatasketchMinHashImpl, JsonWalkImpl, TitleImpl}
 
 /** Custom Catalyst expressions — SURVEY.md §7.3: the scalar primitives
   * worth promoting from `Column` combinators to native expressions.
   * Each evaluates in one pass over primitive arrays/bytes (no boxing, no
-  * interpreted lambda dispatch) and generates code that calls a static
-  * impl, so it stays inside whole-stage codegen spans.
+  * interpreted lambda dispatch). The scalars are [[NativeFn]]s over the
+  * static methods below, so each compiles to one direct call inside a
+  * whole-stage codegen span; [[Native]] holds the Column API and the one
+  * SQL registration table.
   */
 object NativeImpl {
 
@@ -97,11 +103,12 @@ object NativeImpl {
 
   private val MinHashPrime = 2147483647L
 
-  /** Single-pass MinHash: k-char shingles over the UTF8 text, one 64-bit
-    * hash per shingle (XXH64, seed 1 — the reference's seed,
-    * `check_duplicate/utils.py:25`), `numPerms` universal-hash
-    * permutations folded in the same loop. One allocation (the signature
-    * array); no intermediate shingle strings beyond the substring views. */
+  /** Single-pass MinHash: k-char shingles over the UTF8 text, one 32-bit
+    * hash per shingle (`Murmur3_x86_32.hashUnsafeBytes`, seed 1 — the
+    * reference's seed, `check_duplicate/utils.py:25`), `numPerms`
+    * universal-hash permutations folded in the same loop. One allocation
+    * (the signature array); no intermediate shingle strings beyond the
+    * substring views. */
   def minhashSig(text: UTF8String, numPerms: Int, k: Int): ArrayData = {
     val sig = new Array[Long](numPerms)
     val as = new Array[Long](numPerms)
@@ -267,8 +274,9 @@ object NativeImpl {
   /** The PORTABLE (md5-permutation) MinHash signature in one compiled
     * pass per document (r21, guide §4) — value-identical to the
     * explode → md5Long → %P → 16-min-aggregate pipeline
-    * ([[graft.operators.MinHashPipeline.signatures]] kept the explode
-    * form as `signaturesExplode` for the parity pin): shingles are the
+    * ([[graft.operators.MinHashPipeline.signatures]]'s former form, kept
+    * in test scope as `ParityReferences.signaturesExplode` for the parity
+    * pin): shingles are the
     * k=5 char windows `substr(ct, i, 5)` for i in 1..max(len-4, 1)
     * (clamped tails and the empty-text single "" shingle included),
     * each hashed md5 and folded to the SAME 60-bit value
@@ -596,157 +604,137 @@ object NativeImpl {
   }
 }
 
-/** cosine(array<double>, array<double>) → double. */
-/** `fast_round(x, scale)` — drop-in replacement for `round(x, scale)`
-  * on DOUBLE in PER-ROW hot paths (candidate-pair streams): bit-
-  * identical outputs via [[NativeImpl.roundHalfUp]] without the
-  * per-row Double.toString/BigDecimal construction Catalyst's Round
-  * pays. Use for per-pair rounding only; per-GROUP rounds (aggregate
-  * outputs) are not hot and keep the built-in. */
-case class FastRoundHalfUp(child: Expression, scale: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(scale >= 0 && scale <= 15,
-    s"fast_round: scale must be in [0, 15], got $scale " +
-      "(10^scale must be exact in double for the fast path)")
-  override def inputTypes = Seq(DoubleType)
-  override def dataType: DataType = DoubleType
-  private val pow = math.pow(10, scale)
-  override def nullSafeEval(x: Any): Any =
-    NativeImpl.roundHalfUp(x.asInstanceOf[Double], scale, pow)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.plans.NativeImpl.roundHalfUp($c, $scale, ${pow}D)")
-  override def prettyName: String = "fast_round"
-  override protected def withNewChildInternal(
-      newChild: Expression): FastRoundHalfUp = copy(child = newChild)
-}
-
-case class CosineSim(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    NativeImpl.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.plans.NativeImpl.cosine($a, $b)")
+/** One native scalar function: `name(args…)` in SQL, Column APIs and
+  * analyzed plans, computed by the static method `impl` of the Scala
+  * object whose class is `obj` ([[NativeImpl]] and the other `*Impl`
+  * objects) — the RuntimeReplaceable + StaticInvoke pattern of Spark's
+  * own built-ins. The analyzer casts the arguments to `argTypes`; the
+  * optimizer's first batch (`ReplaceExpressions`) swaps in
+  * [[replacement]], one `StaticInvoke` of the object's static forwarder:
+  * a direct call inside whole-stage codegen, a reflective call when
+  * interpreted. NULL in any argument is NULL out; no impl returns NULL.
+  * Plan-time parameters (permutation counts, band shapes, scales) ride
+  * as literal children, so they inline into the generated call.
+  *
+  * An expression the optimizer inserts AFTER `ReplaceExpressions`
+  * ([[SigAgree]], via [[RewriteMinHashAgreement]]) cannot use this
+  * pattern: nothing would replace it.
+  */
+case class NativeFn(name: String, obj: Class[_], impl: String,
+    returnType: DataType, argTypes: Seq[InputType],
+    children: Seq[Expression])
+    extends RuntimeReplaceable with ImplicitCastInputTypes {
+  override def inputTypes: Seq[InputType] = argTypes
+  override def prettyName: String = name
+  override lazy val replacement: Expression = StaticInvoke(obj, returnType,
+    impl, children, argTypes, returnNullable = false)
   override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CosineSim =
-    copy(left = newLeft, right = newRight)
+      newChildren: IndexedSeq[Expression]): NativeFn =
+    copy(children = newChildren)
 }
 
-/** cell_rank(array<double>, array<struct<c_id: long, c_v: array<double>>>)
-  * → array<struct<d2: double, c_id: long>>, d2 ascending, ties to the
-  * lowest c_id — the codebook-assignment primitive under sim_ann_ivf /
-  * sim_ann_pq / sim_kmeans_step (see NativeImpl.cellRank for the
-  * bit-exactness contract vs the HOF chain and the oracles). */
-case class CellRank(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(
-      StructField("d2", DoubleType, nullable = false),
-      StructField("c_id", LongType, nullable = false))),
+/** Every native scalar, one builder each: its name, impl, result type
+  * and argument types. The `require`s are input checks that fire when
+  * the Column is built. Semantics live on the impl methods. */
+object NativeFn {
+  private def call(owner: AnyRef, name: String, impl: String,
+      returnType: DataType, args: (Expression, InputType)*): NativeFn =
+    NativeFn(name, owner.getClass, impl, returnType, args.map(_._2),
+      args.map(_._1))
+  private def const(v: Int): (Expression, InputType) =
+    Literal(v) -> IntegerType
+
+  private val Longs = ArrayType(LongType, containsNull = false)
+  private val Ints = ArrayType(IntegerType, containsNull = false)
+  private val Strings = ArrayType(StringType, containsNull = false)
+  private def rows(fields: (String, DataType)*): DataType = ArrayType(
+    StructType(fields.map { case (n, t) => StructField(n, t, nullable = false) }),
     containsNull = false)
-  override def nullSafeEval(v: Any, cb: Any): Any =
-    NativeImpl.cellRank(v.asInstanceOf[ArrayData], cb.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (v, cb) => s"graft.plans.NativeImpl.cellRank($v, $cb)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CellRank =
-    copy(left = newLeft, right = newRight)
-}
 
-/** minhash_sig(text, numPerms, k) → array<long> (xxh-free murmur3 seed-1
-  * variant; engine-native fast path — not oracle-portable). */
-case class MinHashSig(child: Expression, numPerms: Int, k: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(t: Any): Any =
-    NativeImpl.minhashSig(t.asInstanceOf[UTF8String], numPerms, k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      t => s"graft.plans.NativeImpl.minhashSig($t, $numPerms, $k)")
-  override protected def withNewChildInternal(c: Expression): MinHashSig =
-    copy(child = c)
-}
+  def cosineSim(a: Expression, b: Expression): NativeFn =
+    call(NativeImpl, "cosine_sim", "cosine", DoubleType,
+      a -> ArrayType(DoubleType), b -> ArrayType(DoubleType))
 
-/** dist_word_ngrams(text, n) → array<string> of the document's DISTINCT
-  * word n-grams in first-occurrence order — one compiled pass replacing
-  * the interpreted split → filter → transform/slice/array_join →
-  * array_distinct HOF chain in the decontamination family's hot scalar
-  * (see NativeImpl.distWordNgrams for the exact equivalence contract;
-  * NgramSpec pins it property-wise against the HOF chain). */
-case class DistWordNgrams(child: Expression, n: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(n >= 1, s"dist_word_ngrams: n must be >= 1, got $n")
-  override def inputTypes = Seq(StringType)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullSafeEval(t: Any): Any =
-    NativeImpl.distWordNgrams(t.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.plans.NativeImpl.distWordNgrams($c, $n)")
-  override def prettyName: String = "dist_word_ngrams"
-  override protected def withNewChildInternal(c: Expression): DistWordNgrams =
-    copy(child = c)
-}
+  def fastRound(x: Expression, scale: Int): NativeFn = {
+    require(scale >= 0 && scale <= 15,
+      s"fast_round: scale must be in [0, 15], got $scale " +
+        "(10^scale must be exact in double for the fast path)")
+    call(NativeImpl, "fast_round", "roundHalfUp", DoubleType,
+      x -> DoubleType, const(scale),
+      Literal(math.pow(10, scale)) -> DoubleType)
+  }
 
-/** lsh_bands(sig, numBands, rowsPerBand) →
-  * array<struct<band_id: int, band_key: string>> — the compiled LSH
-  * banding (see NativeImpl.lshBands for the exact HOF equivalence;
-  * NgramSpec pins it). */
-case class LshBands(child: Expression, numBands: Int, rowsPerBand: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(numBands >= 1 && rowsPerBand >= 1,
-    s"lsh_bands: numBands/rowsPerBand must be >= 1, got $numBands/$rowsPerBand")
-  override def inputTypes = Seq(ArrayType(LongType))
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(
-      StructField("band_id", IntegerType, nullable = false),
-      StructField("band_key", StringType, nullable = false))),
-    containsNull = false)
-  override def nullSafeEval(sig: Any): Any =
-    NativeImpl.lshBands(sig.asInstanceOf[ArrayData], numBands, rowsPerBand)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.plans.NativeImpl.lshBands($c, $numBands, $rowsPerBand)")
-  override def prettyName: String = "lsh_bands"
-  override protected def withNewChildInternal(c: Expression): LshBands =
-    copy(child = c)
-}
+  /** `cells` rows are struct(c_id: long, c_v: array<double>) under any
+    * field names (the PQ codebook calls its vector `c_sub`), so the
+    * argument accepts any array instead of casting row by row. */
+  def cellRank(v: Expression, cells: Expression): NativeFn =
+    call(NativeImpl, "cell_rank", "cellRank",
+      rows("d2" -> DoubleType, "c_id" -> LongType),
+      v -> ArrayType(DoubleType), cells -> AnyArray)
 
-/** dhash_bands(content: binary) → array<long> of the 4 dHash band
-  * values (see NativeImpl.dhashBands; MultimodalSpec pins parity). */
-case class DhashBands(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes = Seq(BinaryType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(b: Any): Any =
-    NativeImpl.dhashBands(b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.NativeImpl.dhashBands($c)")
-  override def prettyName: String = "dhash_bands"
-  override protected def withNewChildInternal(c: Expression): DhashBands =
-    copy(child = c)
-}
+  def minhashSig(text: Expression, numPerms: Int, k: Int): NativeFn =
+    call(NativeImpl, "minhash_sig", "minhashSig", Longs,
+      text -> StringType, const(numPerms), const(k))
 
-/** portable_minhash_sig(ct, numPerms) → array<long> — the md5-family
-  * (oracle-portable) MinHash signature as one per-row pass (see
-  * NativeImpl.portableMinhashSig; parity pinned in NgramSpec against
-  * the explode+aggregate pipeline). */
-case class PortableMinHashSig(child: Expression, numPerms: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(numPerms >= 1, s"portable_minhash_sig: numPerms >= 1, got $numPerms")
-  override def inputTypes = Seq(StringType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(t: Any): Any =
-    NativeImpl.portableMinhashSig(t.asInstanceOf[UTF8String], numPerms)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.plans.NativeImpl.portableMinhashSig($c, $numPerms)")
-  override def prettyName: String = "portable_minhash_sig"
-  override protected def withNewChildInternal(
-      c: Expression): PortableMinHashSig = copy(child = c)
+  def distWordNgrams(text: Expression, n: Int): NativeFn = {
+    require(n >= 1, s"dist_word_ngrams: n must be >= 1, got $n")
+    call(NativeImpl, "dist_word_ngrams", "distWordNgrams", Strings,
+      text -> StringType, const(n))
+  }
+
+  def lshBands(sig: Expression, numBands: Int, rowsPerBand: Int): NativeFn = {
+    require(numBands >= 1 && rowsPerBand >= 1,
+      s"lsh_bands: numBands/rowsPerBand must be >= 1, got $numBands/$rowsPerBand")
+    call(NativeImpl, "lsh_bands", "lshBands",
+      rows("band_id" -> IntegerType, "band_key" -> StringType),
+      sig -> ArrayType(LongType), const(numBands), const(rowsPerBand))
+  }
+
+  def dhashBands(content: Expression): NativeFn =
+    call(NativeImpl, "dhash_bands", "dhashBands", Longs,
+      content -> BinaryType)
+
+  def portableMinhashSig(text: Expression, numPerms: Int): NativeFn = {
+    require(numPerms >= 1,
+      s"portable_minhash_sig: numPerms >= 1, got $numPerms")
+    call(NativeImpl, "portable_minhash_sig", "portableMinhashSig", Longs,
+      text -> StringType, const(numPerms))
+  }
+
+  def simhash64(toks: Expression): NativeFn =
+    call(NativeImpl, "simhash64", "simhash64", LongType,
+      toks -> ArrayType(StringType))
+
+  def nfcNormalize(s: Expression): NativeFn =
+    call(NativeImpl, "nfc_normalize", "nfcNormalize", StringType,
+      s -> StringType)
+
+  def gearBoundaries(s: Expression): NativeFn =
+    call(NativeImpl, "gear_boundaries", "gearBoundaries", Ints,
+      s -> StringType)
+
+  /** min/max chunk lengths are plan-time constants. */
+  def cdcLegalize(cand: Expression, n: Expression, minLen: Int,
+      maxLen: Int): NativeFn =
+    call(NativeImpl, "cdc_legalize", "cdcLegalize", Ints,
+      cand -> ArrayType(IntegerType), n -> IntegerType, const(minLen),
+      const(maxLen))
+
+  def jsonFindKey(json: Expression, key: Expression): NativeFn =
+    call(JsonWalkImpl, "json_find_key", "findKey", Strings,
+      json -> StringType, key -> StringType)
+
+  def jsonFlattenPaths(json: Expression): NativeFn =
+    call(JsonWalkImpl, "json_flatten_paths", "flatten",
+      rows("path" -> StringType, "value" -> StringType), json -> StringType)
+
+  def titlePostprocess(title: Expression): NativeFn =
+    call(TitleImpl, "title_postprocess", "full", StringType,
+      title -> StringType)
+
+  def datasketchMinhash(text: Expression, k: Int): NativeFn =
+    call(DatasketchMinHashImpl, "datasketch_minhash", "signature", Longs,
+      text -> StringType, const(k))
 }
 
 /** sorted_intersect_count(array<string>|array<long>, same) → int.
@@ -825,66 +813,6 @@ case class SigAgree(left: Expression, right: Expression,
        """.stripMargin)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SigAgree =
-    copy(left = newLeft, right = newRight)
-}
-
-/** simhash64(array<string>) → long. */
-case class SimHash64(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(t: Any): Any =
-    NativeImpl.simhash64(t.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.plans.NativeImpl.simhash64($t)")
-  override protected def withNewChildInternal(c: Expression): SimHash64 =
-    copy(child = c)
-}
-
-/** nfc_normalize(string) → string: Unicode NFC canonical composition —
-  * the corpus-cleaning step that folds combining sequences (e + U+0301)
-  * into their precomposed forms (é) so hashing/dedup/tokenization see one
-  * representation per grapheme. Fast path: `Normalizer.isNormalized` is
-  * a scan without allocation, and real corpora are overwhelmingly
-  * already-NFC, so the hot loop rarely re-encodes. DuckDB's
-  * `nfc_normalize` is the independent oracle. */
-case class NfcNormalize(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullSafeEval(t: Any): Any =
-    NativeImpl.nfcNormalize(t.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.plans.NativeImpl.nfcNormalize($t)")
-  override protected def withNewChildInternal(c: Expression): NfcNormalize =
-    copy(child = c)
-}
-
-/** gear_boundaries(string) → array<int>: CDC boundary candidate
-  * positions — see [[NativeImpl.gearBoundaries]] for the rolling/
-  * windowed equivalence that keeps the rule oracle-expressible. */
-case class GearBoundaries(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullSafeEval(t: Any): Any =
-    NativeImpl.gearBoundaries(t.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.plans.NativeImpl.gearBoundaries($t)")
-  override protected def withNewChildInternal(c: Expression): GearBoundaries =
-    copy(child = c)
-}
-
-/** cdc_legalize(array<int> sorted candidates, int n) → array<int>:
-  * FastCDC min/max clamp — see [[NativeImpl.cdcLegalize]]. min/max
-  * lengths are plan-time constants (they parameterize the generated
-  * call, no per-row boxing). */
-case class CdcLegalize(left: Expression, right: Expression,
-    minLen: Int, maxLen: Int) extends BinaryExpression {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullSafeEval(bs: Any, n: Any): Any =
-    NativeImpl.cdcLegalize(bs.asInstanceOf[ArrayData],
-      n.asInstanceOf[Int], minLen, maxLen)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (b, n) =>
-      s"graft.plans.NativeImpl.cdcLegalize($b, $n, $minLen, $maxLen)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CdcLegalize =
     copy(left = newLeft, right = newRight)
 }
 
@@ -1144,7 +1072,6 @@ object TopKPairs {
   }
 }
 
-/** Column-level entry points + SQL registration. */
 /** bloom_might_contain(text) → boolean — the sketch membership probe as
   * a NATIVE expression instead of a Scala UDF, so the Bloom prefilter
   * stays inside the whole-stage-codegen span with the explode/distinct
@@ -1190,13 +1117,16 @@ case class BloomMightContain(child: Expression, bits: Array[Byte])
 object Native {
   import org.apache.spark.sql.graftbridge.Bridge.{column, expression}
   def cosine_sim(a: Column, b: Column): Column =
-    column(CosineSim(expression(a), expression(b)))
+    column(NativeFn.cosineSim(expression(a), expression(b)))
   /** Bit-identical `round(x, scale)` for DOUBLE without the per-row
-    * BigDecimal/Double.toString tax — see [[FastRoundHalfUp]]. */
+    * BigDecimal/Double.toString tax — see [[NativeImpl.roundHalfUp]].
+    * For PER-ROW hot paths (candidate-pair streams) only; per-GROUP
+    * rounds of aggregate outputs are not hot and keep the built-in. */
   def fast_round(x: Column, scale: Int): Column =
-    column(FastRoundHalfUp(expression(x), scale))
+    column(NativeFn.fastRound(expression(x), scale))
+  /** Codebook cells ranked by squared L2 — see [[NativeImpl.cellRank]]. */
   def cell_rank(v: Column, cb: Column): Column =
-    column(CellRank(expression(v), expression(cb)))
+    column(NativeFn.cellRank(expression(v), expression(cb)))
 
   /** Bounded per-group top-k collection (Spark's own CollectTopK — a
     * BoundedPriorityQueue aggregate): keeps the k smallest elements by
@@ -1238,59 +1168,78 @@ object Native {
     column(TopKPairs(expression(score), expression(id), k)
       .toAggregateExpression())
   def minhash_sig(c: Column, numPerms: Int = 256, k: Int = 5): Column =
-    column(MinHashSig(expression(c), numPerms, k))
-  def simhash64(c: Column): Column = column(SimHash64(expression(c)))
+    column(NativeFn.minhashSig(expression(c), numPerms, k))
+  def simhash64(c: Column): Column = column(NativeFn.simhash64(expression(c)))
   def sorted_intersect_count(a: Column, b: Column): Column =
     column(SortedIntersectCount(expression(a), expression(b)))
   def dist_word_ngrams(c: Column, n: Int): Column =
-    column(DistWordNgrams(expression(c), n))
+    column(NativeFn.distWordNgrams(expression(c), n))
   def lsh_bands(sig: Column, numBands: Int, rowsPerBand: Int): Column =
-    column(LshBands(expression(sig), numBands, rowsPerBand))
-  def dhash_bands(c: Column): Column = column(DhashBands(expression(c)))
+    column(NativeFn.lshBands(expression(sig), numBands, rowsPerBand))
+  def dhash_bands(c: Column): Column =
+    column(NativeFn.dhashBands(expression(c)))
   def portable_minhash_sig(c: Column, numPerms: Int): Column =
-    column(PortableMinHashSig(expression(c), numPerms))
+    column(NativeFn.portableMinhashSig(expression(c), numPerms))
   def sig_agree(a: Column, b: Column): Column =
     column(SigAgree(expression(a), expression(b)))
   def sig_min_agg(c: Column): Column =
     column(SigMin(expression(c)).toAggregateExpression())
-  def nfc_normalize(c: Column): Column = column(NfcNormalize(expression(c)))
+  def nfc_normalize(c: Column): Column =
+    column(NativeFn.nfcNormalize(expression(c)))
   def gear_boundaries(c: Column): Column =
-    column(GearBoundaries(expression(c)))
+    column(NativeFn.gearBoundaries(expression(c)))
   def cdc_legalize(bs: Column, n: Column, minLen: Int, maxLen: Int): Column =
-    column(CdcLegalize(expression(bs), expression(n), minLen, maxLen))
+    column(NativeFn.cdcLegalize(expression(bs), expression(n), minLen, maxLen))
   def bloom_might_contain(c: Column, bits: Array[Byte]): Column =
     column(BloomMightContain(expression(c), bits))
 
-  /** Register for SQL use in an existing session
+  /** Every SQL-callable graft function as (name, usage, builder): the one
+    * list [[GraftExtensions]] injects at session build and [[register]]
+    * installs into a running session. Aggregates are built bare; the
+    * analyzer wraps an `AggregateFunction` from the registry into an
+    * `AggregateExpression` itself. */
+  val sqlFunctions: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
+    ("cosine_sim", "cosine_sim(a, b) - cosine of two double arrays",
+      es => NativeFn.cosineSim(es(0), es(1))),
+    ("minhash_sig", "minhash_sig(text) - 256-perm murmur3 MinHash",
+      es => NativeFn.minhashSig(es(0), 256, 5)),
+    ("simhash64", "simhash64(tokens) - 64-bit SimHash",
+      es => NativeFn.simhash64(es(0))),
+    ("datasketch_minhash",
+      "datasketch_minhash(text) - bit-exact datasketch seed-1 signature",
+      es => NativeFn.datasketchMinhash(es(0), 5)),
+    ("sorted_intersect_count",
+      "sorted_intersect_count(a, b) - |A∩B| of sorted string arrays",
+      es => SortedIntersectCount(es(0), es(1))),
+    ("sig_agree",
+      "sig_agree(a, b) - fraction of agreeing MinHash signature positions",
+      es => SigAgree(es(0), es(1))),
+    ("sig_min",
+      "sig_min(sig) - element-wise min of long-array signatures (UDAF)",
+      es => SigMin(es(0))),
+    // k sizes the aggregation buffer, so it must be a literal; the
+    // shared builder validates it with analyzer-style messages
+    ("top_k_pairs", "top_k_pairs(score, id, k) - bounded per-group top-k " +
+      "(score DESC, id ASC) pairs, rank-ordered (UDAF)", TopKPairs.forSql),
+    ("nfc_normalize", "nfc_normalize(s) - Unicode NFC canonical composition",
+      es => NativeFn.nfcNormalize(es(0))),
+    ("gear_boundaries",
+      "gear_boundaries(s) - FastCDC gear-hash boundary candidates",
+      es => NativeFn.gearBoundaries(es(0))),
+    ("json_find_key",
+      "json_find_key(json, key) - recursive document-order key search",
+      es => NativeFn.jsonFindKey(es(0), es(1))),
+    ("json_flatten_paths",
+      "json_flatten_paths(json) - recursive (path, value) flatten",
+      es => NativeFn.jsonFlattenPaths(es(0))))
+
+  /** Register [[sqlFunctions]] for SQL use in an existing session
     * (`SELECT cosine_sim(a, b) …`); [[GraftExtensions]] is the
     * session-build-time equivalent. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("cosine_sim",
-      es => CosineSim(es.head, es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_sig",
-      es => MinHashSig(es.head, 256, 5), "scala_udf")
-    reg.createOrReplaceTempFunction("simhash64",
-      es => SimHash64(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("datasketch_minhash",
-      es => graft.functions.DatasketchMinHash(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("sorted_intersect_count",
-      es => SortedIntersectCount(es.head, es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("sig_agree",
-      es => SigAgree(es.head, es(1)), "scala_udf")
-    // aggregate: the analyzer wraps a bare AggregateFunction returned
-    // from the registry into AggregateExpression itself
-    reg.createOrReplaceTempFunction("sig_min",
-      es => SigMin(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("top_k_pairs",
-      TopKPairs.forSql, "scala_udf")
-    reg.createOrReplaceTempFunction("nfc_normalize",
-      es => NfcNormalize(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("gear_boundaries",
-      es => GearBoundaries(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("json_find_key",
-      es => graft.functions.JsonFindKey(es.head, es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("json_flatten_paths",
-      es => graft.functions.JsonFlattenPaths(es.head), "scala_udf")
+    sqlFunctions.foreach { case (name, _, build) =>
+      reg.createOrReplaceTempFunction(name, build, "scala_udf")
+    }
   }
 }

@@ -14,6 +14,11 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** The type of an expression's `inputTypes` (`AbstractDataType` is
+    * private[sql]), and its "any array" member, for `graft.plans.NativeFn`. */
+  type InputType = org.apache.spark.sql.types.AbstractDataType
+  val AnyArray: InputType = org.apache.spark.sql.types.ArrayType
+
   /** Block until the async listener bus has delivered all queued events.
     * `SparkContext.listenerBus` is `private[spark]`, so the accessor
     * lives here (same shim technique as the Column bridge above). Used

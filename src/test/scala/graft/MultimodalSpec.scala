@@ -123,7 +123,7 @@ class MultimodalSpec extends SparkSpec {
       "resize→hex→conv chain row-for-row (r21 native swap)") {
     val a = Multimodal.phashBands(spark, sf)
       .orderBy("doc_id", "band_id").collect()
-    val b = Multimodal.phashBandsDeclarative(spark, sf)
+    val b = ParityReferences.phashBandsDeclarative(spark, sf)
       .orderBy("doc_id", "band_id").collect()
     assert(a.length == b.length && a.length > 0)
     a.zip(b).foreach { case (x, y) => assert(x == y, s"$x != $y") }

@@ -52,7 +52,7 @@ class NgramSpec extends SparkSpec {
     val df = sigs.toDF("sig")
     for ((nb, rpb) <- Seq((4, 4), (43, 6), (3, 7))) {
       val bad = df.select(
-          Hashes.bandsHof(col("sig"), nb, rpb).as("expected"),
+          ParityReferences.bandsHof(col("sig"), nb, rpb).as("expected"),
           Hashes.bands(col("sig"), nb, rpb).as("got"))
         .filter(not(col("expected") <=> col("got")))
         .limit(3).collect()
@@ -71,7 +71,7 @@ class NgramSpec extends SparkSpec {
         (900007L, "<b>tag</b> soup... and,, doubled;; punct  here"))
         .toDF("doc_id", "text"))
     val a = MinHashPipeline.signatures(docs, "doc_id", col("text"))
-    val b = MinHashPipeline.signaturesExplode(docs, "doc_id", col("text"))
+    val b = ParityReferences.signaturesExplode(docs, "doc_id", col("text"))
     val bad = a.alias("a").join(b.alias("b"), "doc_id")
       .filter(not(col("a.sig") <=> col("b.sig")))
       .limit(3).collect()
@@ -101,7 +101,7 @@ class NgramSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> (r.get(1) != null)).toMap
     assert(a == Map(1L -> true, 2L -> false),
       s"native null-text rows must surface with a null sig, got $a")
-    val b = MinHashPipeline.signaturesExplode(docs, "doc_id", col("text"))
+    val b = ParityReferences.signaturesExplode(docs, "doc_id", col("text"))
       .collect().map(r => r.getLong(0) -> r.get(1)).toMap
     assert(b.keySet == Set(1L, 2L),
       s"explode form keeps null-text rows too, got ${b.keySet}")
@@ -113,12 +113,13 @@ class NgramSpec extends SparkSpec {
 
   test("dist_word_ngrams survives the interpreted (non-codegen) eval " +
     "path with identical output") {
-    // force interpreted eval by calling the expression directly
-    val e = graft.plans.DistWordNgrams(
+    // force interpreted eval by calling the replacement StaticInvoke
+    // directly (its reflective eval path)
+    val e = graft.plans.NativeFn.distWordNgrams(
       org.apache.spark.sql.catalyst.expressions.Literal(
         org.apache.spark.unsafe.types.UTF8String.fromString(
           "a b a b c  d")), 3)
-    val got = e.eval(null)
+    val got = e.replacement.eval(null)
       .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
     val strs = (0 until got.numElements()).map(got.getUTF8String(_).toString)
     assert(strs == Seq("a b a", "b a b", "a b c", "b c d"))

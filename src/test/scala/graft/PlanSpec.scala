@@ -316,7 +316,9 @@ class PlanSpec extends SparkSpec {
         col("embedding").cast("array<double>")).as("c"))
     val p = planOf(df)
     // `*(n)` prefixes mark operators fused into a WholeStageCodegen stage
-    assert(p.contains("*(1) Project [cosinesim"))
+    // the native prints as the StaticInvoke it is replaced with
+    assert(p.contains(
+      "*(1) Project [static_invoke(graft.plans.NativeImpl.cosine("))
     // evaluating forces the generated code path; any codegen error would
     // fall back and/or throw here
     assert(df.limit(5).collect().forall(r => math.abs(r.getDouble(0) - 1.0) < 1e-12))
@@ -366,14 +368,22 @@ class PlanSpec extends SparkSpec {
   }
 
   test("GraftExtensions installs the same functions at session build time") {
-    // applying the extension object to a fresh SparkSessionExtensions and
-    // checking the injected builders exist (a new SparkContext per test
-    // JVM isn't possible, so this validates the registration path itself)
-    val exts = new org.apache.spark.sql.SparkSessionExtensions
-    new graft.plans.GraftExtensions().apply(exts)
-    // injectFunction records builders; nothing to assert beyond no-throw +
-    // the runtime path covered by the register() SQL test above
-    succeed
+    // a new session's registry is the builtins plus the session
+    // extensions (spark.sql.extensions=GraftExtensions here), without
+    // the temp functions Native.register adds to this session
+    val fresh = spark.newSession()
+    val reg = fresh.sessionState.functionRegistry
+    val injected = reg.listFunction()
+      .filter(id => reg.lookupFunction(id).exists(_.getClassName == "graft"))
+      .map(_.funcName).toSet
+    assert(injected == graft.plans.Native.sqlFunctions.map(_._1).toSet,
+      "the extension must inject exactly the Native.sqlFunctions table")
+    // gear_boundaries was once missing from the extension: it must run
+    // from SQL in a session that never called Native.register
+    val g = fresh.sql("SELECT gear_boundaries('content defined chunking " +
+      "splits text at gear hash boundaries so edits stay local')")
+      .head.getSeq[Int](0)
+    assert(g == Seq(22, 48), s"gear boundaries from SQL: $g")
   }
 
   test("search plan: filter sits under the pagination window, not above it") {
@@ -963,7 +973,8 @@ class PlanSpec extends SparkSpec {
     assert(generates == 0,
       s"expected 0 Generates (signature build is the compiled per-row " +
         s"portable_minhash_sig), got $generates")
-    val sigs = "portable_minhash_sig".r.findAllIn(p).size
+    // the physical plan prints the native as its static call
+    val sigs = "NativeImpl\\.portableMinhashSig\\(".r.findAllIn(p).size
     assert(sigs == 1,
       s"expected exactly 1 portable_minhash_sig (delta side only), " +
         s"got $sigs — kept rows must reuse the stored signature, " +
@@ -1027,7 +1038,7 @@ class PlanSpec extends SparkSpec {
       "per-dimension means must combine map-side")
     assert(p.contains("hashpartitioning(cluster_id"))
     // r18: exactly ONE single-partition exchange is legitimate — the
-    // 8-row codebook collapse feeding CellRank's broadcast array (its
+    // 8-row codebook collapse feeding cell_rank's broadcast array (its
     // input is the vec_id < 8 slice, bounded at any corpus size). The
     // corpus-sized M-step must stay on the keyed exchange above.
     assert(p.linesIterator.count(_.contains("Exchange SinglePartition")) <= 1,
