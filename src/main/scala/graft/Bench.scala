@@ -140,76 +140,15 @@ object Bench {
       "bench_rich_last.json")
     System.err.println(
       s"[bench] rich artifact -> ${Paths.get(outFile).toAbsolutePath}")
-    // Deployment-posture knob (r15): SPARK_GRAFT_INITIAL_PARTITIONS=N
-    // turns on AQE's "start wide, coalesce by size" shuffle posture —
-    // the production setting a real cluster scales WITH input size and
-    // executor count. UNSET in the driver's per-round run and in the
-    // default dev loop: the r14 A/B measured that at the graded sf0.1
-    // scale flat-cpus wins (N=256 regresses the many-exchange gate
-    // family 1.5-2.3x — 40+ exchanges each paying 8x the map-side
-    // partition files — and the sweep total 156.6 -> 178.3 s), while a
-    // decade up (~sf10, 60M-row lineitem on this one fixed 25 GB JVM)
-    // N=256 is what cures sql_q21's 4.9 GB spill (36.3 -> 14.0 s).
-    // Both postures are committed artifacts SCALE.md cites
-    // (bench_scale_rel_syn10.json flat vs bench_scale_rel_syn10_p256
-    // .json wide); the knob records itself in the output JSON as
-    // "initial_partitions" so an artifact self-identifies its posture.
-    // r17 decade-3 addendum (SCALE.md): at ~sf100 on one 48 GB JVM,
-    // flat-32 sits on an OOM edge for the overlay dedup variants
-    // (nondeterministic ContextCleaner heap OOM) — wide-256 is the
-    // RELIABILITY posture there, completing everything at <=1.45x the
-    // wall of a lucky flat run. The rule stands: partition count
-    // follows the hot stream's per-task sort volume, not corpus size.
-    // r20 review: validated like SPARK_GRAFT_BENCH_RUNS (r18) — a typo
-    // ('auto') used to fail every query AND corrupt the artifact, whose
-    // initial_partitions field is an unquoted JSON number.
-    val initParts = sys.env.get("SPARK_GRAFT_INITIAL_PARTITIONS")
-      .flatMap { s =>
-        val p = s.toIntOption.filter(_ > 0)
-        if (p.isEmpty) System.err.println(
-          s"[bench] SPARK_GRAFT_INITIAL_PARTITIONS='$s' is not a " +
-            "positive int — ignoring (flat-cpus posture)")
-        p.map(_.toString)
-      }
-    // Shuffle/spill IO codec knob (r16): the ~sf100 third-decade battery
-    // writes ~100 GB of shuffle files per jaccard run — past this box's
-    // free disk under the lz4 default; zstd fits it. Like the posture
-    // knob this is a real deployment setting (clusters trading shuffle
-    // CPU for IO set it fleet-wide), UNSET in the driver's per-round run,
-    // and it records itself in the artifact as "io_codec" so a run under
-    // a different codec self-identifies instead of polluting a
-    // round-over-round diff.
-    val ioCodec = sys.env.get("SPARK_GRAFT_IO_CODEC")
-    val builder = SparkSession.builder()
+    val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // r19 (ADVICE): the r18 sweep-global objectHashAggregate
-      // fallbackThreshold=8M is GONE — it existed for the bounded
-      // CollectTopK heap, which no shipped query uses (the r18 A/B
-      // kept the rank window; the heap is the documented escape
-      // hatch), while the blanket setting also disabled the 128-key
-      // sort-based spill fallback for every UNBOUNDED collect_list/
-      // collect_set aggregate in the sweep — re-introducing the
-      // no-size-contract OOM class the rest of the tree removes. A
-      // future bounded-heap query must scope the threshold to itself
-      // (spark.conf.set before / restore after), never sweep-global.
       .config("spark.ui.enabled", "false")
-    // r19 (verdict Next 5): the knn family's default rank stage is now
-    // the primitive top-k aggregate; its ObjectHashAggregate fallback
-    // threshold is raised PER-QUERY in timeOne (set/restore around
-    // SimilarityQueries.TopKHeapQueries members only — the r18 ADVICE
-    // scoping: unbounded collects elsewhere in the sweep keep their
-    // 128-key spill fallback). SPARK_GRAFT_KNN_IMPL=window selects the
-    // old rank window for A/B re-runs; the artifact records knn_impl.
-    val knnImpl = sys.env.getOrElse("SPARK_GRAFT_KNN_IMPL", "topk")
-    initParts.foreach(n => builder.config(
-      "spark.sql.adaptive.coalescePartitions.initialPartitionNum", n))
-    ioCodec.foreach(c => builder.config("spark.io.compression.codec", c))
-    val spark = builder.getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Machine-health canary #1: host load BEFORE we add our own. A
     // loaded machine (driver running sbt test sweeps, another bench, …)
@@ -257,31 +196,6 @@ object Bench {
     // driver's per-round run, so the contract output is unchanged.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    // Scale-battery sampling knob (r17): SPARK_GRAFT_BENCH_RUNS caps the
-    // adaptive re-run count (1 = single sample). The decade-3 batteries
-    // run multi-hundred-second queries where min-of-3 costs an hour per
-    // family; the r16 verdict accepts sampling there. UNSET in the
-    // driver's per-round run and the committed sf0.1 artifacts; the agg
-    // field records the effective policy so a sampled artifact
-    // self-identifies.
-    // r18 (ADVICE): validated — a typo must not NumberFormatException
-    // the whole sweep, and out-of-range values clamp LOUDLY to the
-    // policy range so the self-identifying agg label below (which
-    // interpolates the effective value) never misstates the env var.
-    val runCap = sys.env.get("SPARK_GRAFT_BENCH_RUNS") match {
-      case None => 3
-      case Some(s) =>
-        val parsed = s.trim.toIntOption.getOrElse {
-          System.err.println(
-            s"[bench] SPARK_GRAFT_BENCH_RUNS='$s' is not an int — using 3")
-          3
-        }
-        val clamped = parsed.max(1).min(3)
-        if (clamped != parsed) System.err.println(
-          s"[bench] SPARK_GRAFT_BENCH_RUNS=$parsed outside 1..3 — " +
-            s"clamped to $clamped")
-        clamped
-    }
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
     spark.sparkContext.addSparkListener(IoTally)
@@ -290,11 +204,13 @@ object Bench {
       "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
     def timeOne(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Meas = {
-      // per-query threshold scope (see the knnImpl note above): only a
-      // bounded-heap query runs with the raised threshold; it is
-      // restored before the next measurement either way
-      val scopeHeap = knnImpl != "window" &&
-        graft.operators.SimilarityQueries.TopKHeapQueries(name)
+      // per-query threshold scope (r19): only a query whose plan holds
+      // the bounded TopKPairs aggregate runs with the raised
+      // ObjectHashAggregate fallback threshold — never sweep-global, so
+      // the unbounded collect_list/collect_set aggregates elsewhere keep
+      // their 128-key sort-based spill fallback; it is restored before
+      // the next measurement either way
+      val scopeHeap = graft.operators.SimilarityQueries.TopKHeapQueries(name)
       val prevThreshold =
         if (scopeHeap) Some(spark.conf.get(heapThresholdKey)) else None
       if (scopeHeap) spark.conf.set(heapThresholdKey, "16777216")
@@ -374,14 +290,14 @@ object Bench {
     // errors (n_errors counts queries with ANY failed run).
     val rerunFailed = scala.collection.mutable.LinkedHashSet.empty[String]
     val results = firstPass.map { case (name, fn, m1) =>
-      if (runCap > 1 && m1.ok && m1.sec > 1.0) {
+      if (m1.ok && m1.sec > 1.0) {
         val m2 = timeOne(name, fn)
         if (!m2.ok) rerunFailed += name
         var best = if (m2.ok && m2.sec < m1.sec) m2 else m1
         var n = if (m2.ok) 2 else 1
         // the slowest queries carry the most residual noise (GC phase,
         // page cache) AND dominate the total — buy them a third run
-        if (runCap > 2 && m2.ok && best.sec > 2.5) {
+        if (m2.ok && best.sec > 2.5) {
           val m3 = timeOne(name, fn)
           if (m3.ok) { if (m3.sec < best.sec) best = m3; n = 3 }
           else rerunFailed += name
@@ -445,9 +361,7 @@ object Bench {
     //    "sec":1,234 — invalid JSON — into the stdout contract line and
     //    the artifact);
     //  - the same backslash/quote escaping medianVsRef's reason already
-    //    had, applied to EVERY interpolated env/path string (sf,
-    //    io_codec, knn_impl) — the threat model was accepted but
-    //    applied to one field only.
+    //    had, applied to EVERY interpolated env/path string.
     def num(fmt: String, v: Double): String =
       String.format(java.util.Locale.ROOT, fmt, Double.box(v))
     def jesc(s: String): String =
@@ -478,18 +392,16 @@ object Bench {
     val failedJson = failed.map("\"" + jesc(_) + "\"").mkString("[", ",", "]")
     val commonFields =
       s""""metric":"total","value":${num("%.3f", total)},"unit":"sec",""" +
-        s""""agg":"${
-          if (runCap <= 1) s"single run (SPARK_GRAFT_BENCH_RUNS=$runCap)"
-          else if (runCap == 2) s"min-of-2 for queries >1s (SPARK_GRAFT_BENCH_RUNS=$runCap)"
-          else "min-of-2 for queries >1s, min-of-3 >2.5s"}",""" +
+        s""""agg":"min-of-2 for queries >1s, min-of-3 >2.5s",""" +
         s""""canary_warmup_sec":${num("%.2f", warmupSec)},""" +
         s""""canary_loadavg_at_start":${num("%.2f", loadavg)},""" +
         s""""canary_max_heap_mb":${num("%.0f", maxHeapMb)},""" +
         s""""code_rev":"${jesc(codeRevNow)}",""" +
-        s""""initial_partitions":${initParts.getOrElse(cpus)},""" +
-        s""""io_codec":"${jesc(ioCodec.getOrElse("lz4"))}",""" +
+        // retired posture keys keep their fixed values so the contract
+        // line and artifact shape are unchanged
+        s""""initial_partitions":$cpus,"io_codec":"lz4",""" +
         s""""sign_bits":${graft.functions.Vectors.SignBucketBits},""" +
-        s""""knn_impl":"${jesc(knnImpl)}",""" +
+        s""""knn_impl":"topk",""" +
         s""""median_vs_ref":${
           // r20 (ADVICE): the reason interpolates refFile/sfDir paths —
           // escaped so a hostile path can't produce an invalid artifact.

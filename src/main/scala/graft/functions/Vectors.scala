@@ -74,18 +74,8 @@ object Vectors {
     * scales the derived width equals the floor by construction
     * (n ≤ 2^floor · target occupancy), so oracle geometry is unchanged
     * there; only above ~131k vectors does the width grow — where no
-    * oracle runs and survival is what matters. SPARK_GRAFT_SIGN_BITS
-    * remains as the OVERRIDE (forces the width exactly, skipping the
-    * derivation — the A/B posture lever the r18 batteries used);
-    * Bench records it as "sign_bits". */
-  private val envBits: Option[Int] =
-    sys.env.get("SPARK_GRAFT_SIGN_BITS").flatMap(_.toIntOption)
-      .filter(b => b >= 1 && b <= 62)
-  val SignBucketBits: Int = envBits.getOrElse(8)
-
-  /** True when the env override pins the width (scale-battery A/B
-    * postures); self-sizing then steps aside entirely. */
-  val SignBitsForced: Boolean = envBits.isDefined
+    * oracle runs and survival is what matters. */
+  val SignBucketBits: Int = 8
 
   /** Target EXPECTED per-bucket occupancy for the self-sized width:
     * the within-bucket self-join does ~occupancy comparisons per row,
@@ -122,12 +112,8 @@ object Vectors {
 
   /** test hook: simulate a fresh session for one corpus (the sidecar
     * read path is only observable when the JVM memo is cold). */
-  private[graft] def forgetSizedWidth(memoKey: String): Unit = {
+  private[graft] def forgetSizedWidth(memoKey: String): Unit =
     sizedMemo.remove(memoKey)
-    // r21 (ADVICE): the forced-width occupancy memo describes the same
-    // corpus — forget it in lockstep or it outlives the data
-    graft.operators.SimilarityQueries.forgetForcedOcc(memoKey)
-  }
 
   /** Sidecar file carrying the persisted width beside the corpus —
     * underscore-prefixed so parquet directory listings ignore it. */
@@ -273,7 +259,6 @@ object Vectors {
   def rederiveSignBits(vecs: => DataFrame, v: => Column,
       dir: String): Int = {
     sizedMemo.remove(dir)
-    graft.operators.SimilarityQueries.forgetForcedOcc(dir)
     try java.nio.file.Files.deleteIfExists(sidecarPath(dir))
     catch { case scala.util.control.NonFatal(_) => }
     sizedSignBitsFor(vecs, v, dir)
@@ -282,11 +267,10 @@ object Vectors {
   /** Effective sign-LSH width for a vector corpus, derived at
     * plan-build time (r19, the r18 verdict's lead posture fix):
     *
-    *  1. forced (`SPARK_GRAFT_SIGN_BITS`) → that width, no jobs;
-    *  2. one count job → [[sizedSignBits]]; at the graded scales this
+    *  1. one count job → [[sizedSignBits]]; at the graded scales this
     *     IS the floor and nothing else runs — zero plan drift where
     *     the oracles grade;
-    *  3. when the count grew the width, an exact occupancy audit: one
+    *  2. when the count grew the width, an exact occupancy audit: one
     *     pass builds the bucket-occupancy table at `derived+8` bits
     *     (buckets NEST — width b is the low-b-bits mask of width b+k —
     *     so one wide table prices every candidate width by re-masking
@@ -308,7 +292,6 @@ object Vectors {
     * (the compaction hook). */
   def sizedSignBitsFor(vecs: => DataFrame, v: => Column,
       memoKey: String): Int = {
-    if (SignBitsForced) return SignBucketBits
     sizedMemo.computeIfAbsent(memoKey, _ => {
       readSignWidthSidecar(memoKey) match {
         case Some(bits) =>
@@ -350,10 +333,8 @@ object Vectors {
                 s"[graft] sign-LSH width self-sizing failed for $memoKey: " +
                   s"even $bCap bits leave the exact candidate count over " +
                   s"$bound (n=$n) — the corpus' leading-component signs are " +
-                  s"pathologically skewed. Force a width with " +
-                  s"SPARK_GRAFT_SIGN_BITS (accepting the quadratic hot " +
-                  s"bucket) or switch the consumer to the bounded " +
-                  s"Native.collect_top_k escape hatch."))
+                  s"pathologically skewed, so sign-LSH blocking cannot " +
+                  s"bound its candidate stream."))
             } finally occ.unpersist()
           }
       }

@@ -336,36 +336,12 @@ object DedupGate {
     * probe join keys on the store's single bucket column `bkey`, so the
     * store side carries no Exchange — only the (small) ingest batch
     * shuffles, into the store's bucket layout. Outcome semantics are
-    * identical to `classify`.
+    * identical to `classify`. The base-only case of
+    * [[classifyStoredDeltas]].
     */
   def classifyStored(incoming: DataFrame, store: DataFrame,
-      numBands: Int, rowsPerBand: Int): DataFrame = {
-
-    val memberOf = sigClassMembers(incoming, cache = false)
-    val classes = classReps(memberOf)
-    val probe = bandedBkey(classes, "uid", numBands, rowsPerBand)
-    val corpusHits = probe.alias("q")
-      .join(store.alias("c"), Seq("bkey"))
-      .select(col("q.uid").as("uid"), col("c.node_id").as("match_id"),
-        col("q.sig").as("qsig"), col("c.sig").as("csig"),
-        lit(true).as("from_corpus"))
-
-    val batchHits = saltedSlimSelfPairs(
-      probe.select("uid", "bkey"), Seq("bkey"))
-
-    val candidates = expandClasses(memberOf,
-      verifyOncePerPair(corpusHits)
-        .unionByName(verifyTwinPairs(batchHits, classes)))
-
-    // Exactly one store row per live node carries band 0, so the per-node
-    // meta frame is a row-local filter on the bucketed scan — no distinct
-    // over the store. band_id is a store column of its own, so the filter
-    // is structural (and parquet-pushable), not a parse of the rendered
-    // bucket key.
-    val corpusMeta = store.filter(col("band_id") === 0)
-      .select(col("node_id"), col("meta_key"))
-    resolve(incoming, corpusMeta, candidates)
-  }
+      numBands: Int, rowsPerBand: Int): DataFrame =
+    classifyStoredDeltas(incoming, store, Nil, numBands, rowsPerBand)
 
   /** Apply one ingest batch's gate outcomes to the banded signature
     * store — the MAINTENANCE half of the gate loop (reference:

@@ -1002,21 +1002,15 @@ object DedupQueries {
       // sentinel-normalized). The drained rollup is partition-count-
       // invariant (keyed state — same band lands in the same store at
       // any count), which the unchanged oracle checks. Scoped
-      // set/restore like the provider;
-      // SPARK_GRAFT_STREAM_STATE_PARTITIONS overrides for deployments
-      // whose keyed-state volume warrants more instances.
+      // set/restore like the provider.
       val prevParts = s.conf.get("spark.sql.shuffle.partitions")
       // r22 (ADVICE): BOTH overrides execute inside the try whose
-      // finally restores them — the partition set used to run between
-      // the provider set and the try, so a throwing conf.set (e.g. a
-      // non-integer SPARK_GRAFT_STREAM_STATE_PARTITIONS failing the int
-      // value converter) leaked the RocksDB provider into the session
-      // for every later query
+      // finally restores them, so a throwing conf.set cannot leak the
+      // RocksDB provider into the session for every later query
       try {
         s.conf.set("spark.sql.streaming.stateStore.providerClass",
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        s.conf.set("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8"))
+        s.conf.set("spark.sql.shuffle.partitions", "8")
         val input = MemoryStream[(Long, Seq[String])]
         val seqNo = streamSeq.incrementAndGet()
         val sink = s"graft_stream_band_$seqNo"
@@ -1295,11 +1289,7 @@ object DedupQueries {
           SimilarityQueries.effBits(s, d)))
       val a = e.select(col("vec_id").as("a_id"), col("bucket"), col("v").as("a_v"))
       val b = e.select(col("vec_id").as("b_id"), col("bucket"), col("v").as("b_v"))
-      // grid-salted under the forced-width override only (r20) — a
-      // structural no-op on the self-sized path; see bucketSelfJoin
-      SimilarityQueries.bucketSelfJoin(a, b, "a_id",
-          SimilarityQueries.forcedBucketSalt(e.count(),
-            SimilarityQueries.effBits(s, d), d))
+      a.join(b, Seq("bucket"))
         .filter(col("a_id") < col("b_id"))
         .withColumn("sim", graft.functions.Vectors.cosineRounded(col("a_v"), col("b_v")))
         .filter(col("sim") >= 0.3)

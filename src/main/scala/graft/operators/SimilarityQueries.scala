@@ -49,118 +49,6 @@ object SimilarityQueries {
   private[operators] def effBits(s: SparkSession, d: String): Int =
     Vectors.sizedSignBitsFor(emb(s, d), col("v"), d)
 
-  /** Salt factor for a corpus bucket SELF-join — DEFAULT 1 (plain
-    * join), overridable via SPARK_GRAFT_BUCKET_SALT (clamped to 32).
-    *
-    * r20, closing r19 "What's wrong 3" with a MEASURED NEGATIVE: the
-    * occupancy-driven grid salt was implemented and A/B'd twice at the
-    * forced-8-bit decade-3 geometry (2M vectors, ~1.5e10 candidate
-    * pairs), and it LOSES both times — 905 s salted vs 563 s plain
-    * when the per-pair scalar was round()-dominated, and 320 s vs
-    * 296 s after fast_round removed that tax — because replicating the
-    * vector-carrying side S-fold multiplies shuffle bytes 7.5×
-    * (10.3 GB vs 1.4 GB) for a join that is not parallelism-starved
-    * once the scalar is cheap (the r19 "~2 cores" reading reflected
-    * the round-bound phase, not the join). The mechanism stays as an
-    * explicit, parity-pinned knob for genuinely skewed deployments;
-    * the default path — self-sized width — never needed it, and the
-    * forced path is measurably better off without it. Under the forced
-    * width with no override, a LOUD note flags exploded occupancy and
-    * names the knob.
-    *
-    * Two guards hardened by the r20 review:
-    *  - the knob applies ONLY under the forced width. It exists as the
-    *    forced posture's escape hatch; a leftover
-    *    `SPARK_GRAFT_BUCKET_SALT` export must not silently re-shape
-    *    every bucket self-join on the self-sized path (where the width
-    *    already bounds occupancy and both A/Bs measured the salt's
-    *    ~7.5× shuffle-byte tax buying nothing) — ignored with a loud
-    *    note instead.
-    *  - the advisory occupancy count is MEMOIZED per corpus dir: it
-    *    used to run as a fresh `count()` inside every timed query
-    *    build in the forced posture — a full corpus scan per min-of-N
-    *    bench rerun, and twice for the composed hard-negatives query.
-    *    One count per (JVM, corpus), like the width memo it advises
-    *    on. `n` stays by-name so the self-sized path never counts. */
-  private val forcedOccMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]
-
-  /** r21 (ADVICE): the occupancy memo must die with the data it
-    * describes — ScaleSynth / compactEmbeddings rewrite a corpus in the
-    * same JVM and invalidate the width sidecar/memo; without this hook
-    * the stale count could wrongly suppress (or fire) the forced-width
-    * occupancy warning for the rewritten dir. Called from
-    * [[graft.functions.Vectors.forgetSizedWidth]] /
-    * [[graft.functions.Vectors.rederiveSignBits]], the two places the
-    * sized-width memo is forgotten. Advisory-only either way (the memo
-    * feeds a stderr note, never a result). */
-  private[graft] def forgetForcedOcc(memoKey: String): Unit = {
-    forcedOccMemo.remove(memoKey); ()
-  }
-
-  private[graft] def forcedBucketSalt(n: => Long, bits: Int,
-      memoKey: String): Int = {
-    val knob = sys.env.get("SPARK_GRAFT_BUCKET_SALT").flatMap(_.toIntOption)
-      .map(s => math.min(32, math.max(1, s)))
-    if (!Vectors.SignBitsForced) {
-      knob.filter(_ > 1).foreach(s => System.err.println(
-        s"[graft] SPARK_GRAFT_BUCKET_SALT=$s ignored: the sign-LSH " +
-          "width is self-sized (the salt is the FORCED-width escape " +
-          "hatch — it applies only under SPARK_GRAFT_SIGN_BITS)"))
-      1
-    } else knob.getOrElse {
-      val occ = forcedOccMemo
-        .computeIfAbsent(memoKey, _ => java.lang.Long.valueOf(n))
-        .longValue >> bits
-      if (occ > 8 * Vectors.TargetBucketRows) System.err.println(
-        s"[graft] forced sign-LSH width $bits leaves expected bucket " +
-          s"occupancy $occ (target ${Vectors.TargetBucketRows}); the " +
-          "candidate stream is ~quadratic per bucket. " +
-          "SPARK_GRAFT_BUCKET_SALT=N grid-salts the join (measured " +
-          "trade: S× parallelism for ~S/2× shuffle bytes — SLOWER at " +
-          "the tested geometry, see SCALE.md r20); prefer unsetting " +
-          "SPARK_GRAFT_SIGN_BITS so the width self-sizes.")
-      1
-    }
-  }
-
-  /** Equi-join two corpus-sized frames on `bucket`, grid-salted when
-    * `salt > 1`: side A slices on pmod(xxhash64(aId), S) — a FUNCTION
-    * of the row, so each A-row lands in exactly one slice — and side B
-    * replicates to every slice, so every (a, b) bucket pair meets
-    * EXACTLY once while the hot bucket's candidate stream fans out
-    * S-fold across tasks. This is the structural answer to the one
-    * skew AQE cannot see (SCALE.md r19 "what input-size-based planning
-    * cannot see"): an LSH band join's map-output BYTES are small while
-    * its OUTPUT explodes ~quadratically per bucket, so skew-split
-    * never fires and the stage runs on as many cores as there are hot
-    * buckets (the forced-8-bit decade-3 run executed on ~2 cores).
-    * `salt == 1` returns the plain join with NO added columns — the
-    * graded-scale and self-sized paths are structurally unchanged
-    * (plan-identical, oracle-identical). */
-  private[graft] def bucketSelfJoin(a: DataFrame, b: DataFrame,
-      aId: String, salt: Int): DataFrame =
-    if (salt <= 1) a.join(b, Seq("bucket"))
-    else {
-      val aS = a.withColumn("_slice",
-        pmod(xxhash64(col(aId)), lit(salt.toLong)))
-      val bS = b.withColumn("_slice",
-        explode(sequence(lit(0L), lit(salt.toLong - 1L))))
-      // SHUFFLE_HASH on the SLICED side (the r20 A/B: without it the
-      // planner picked a sort-merge join whose per-key buffered runs —
-      // thousands of 540 B vector rows per (bucket, slice) key, past
-      // the SMJ buffer's in-memory row threshold — cost ~26× the
-      // hash-probe loop per candidate pair: 905 s vs the unsalted
-      // 563 s at the forced-8-bit decade-3 geometry, full cores busy
-      // doing buffer management). The build side has a size contract
-      // BY CONSTRUCTION: per task it is ~corpus/(partitions·salt)
-      // sliced rows (~4 MB at the measured geometry) — the same
-      // bounded-build SHUFFLE_HASH discipline the jaccard verify
-      // documents. The replicated side streams and probes.
-      aS.hint("shuffle_hash").join(bS, Seq("bucket", "_slice"))
-        .drop("_slice")
-    }
-
   /** The frozen 8-cell IVF codebook (first 8 vectors ≙ a trained
     * coarse quantizer) — shared by sim_ann_ivf and sim_ivf_delta so
     * the monolithic and delta postures assign against the SAME cells. */
@@ -459,16 +347,10 @@ object SimilarityQueries {
     // vector as a query. The sign-bucket blocks the self-join so the
     // candidate set per vector is corpus/2^bits in expectation
     // regardless of labels; the bucket width SELF-SIZES from the
-    // corpus count at plan build (r19, Vectors.sizedSignBitsFor;
-    // SPARK_GRAFT_SIGN_BITS is now the override, not the only
-    // control), so per-block fan-out stays constant as the corpus
-    // grows without a human reading SCALE.md. The per-vector top-k is
-    // the PRIMITIVE bounded aggregate (r19 — see the rank-stage note
-    // below): r18's boxed CollectTopK lost ~4× to the rank window
-    // (bench_scale_sim_syn10_topk_r18.json), but the slot-array
-    // rewrite wins at right-sized fan-out AND survives un-sizable
-    // fan-out, so the aggregate is now the default and the window the
-    // knob (SCALE.md r19).
+    // corpus count at plan build (r19, Vectors.sizedSignBitsFor), so
+    // per-block fan-out stays constant as the corpus grows without a
+    // human reading SCALE.md. The per-vector top-k is the PRIMITIVE
+    // bounded aggregate (see the rank-stage note below).
     "sim_knn_graph" -> ((s, d) => {
       val bits = effBits(s, d)
       val e = emb(s, d)
@@ -476,51 +358,36 @@ object SimilarityQueries {
       val a = e.select(col("vec_id"), col("v").as("a_v"), col("bucket"))
       val b = e.select(col("vec_id").as("nbr_id"), col("v").as("b_v"),
         col("bucket"))
-      val salt = forcedBucketSalt(emb(s, d).count(), bits, d)
-      // r20 (ADVICE): drop null sim/nbr_id rows BEFORE the impl branch
-      // so both rank stages share the same null semantics — TopKPairs'
-      // update() silently skips null score/id rows, while the rank
-      // window (DESC = NULLS LAST) would still emit them at ranks ≤ 3
-      // in a group with fewer than 3 non-null candidates; without this
-      // filter an SPARK_GRAFT_KNN_IMPL A/B flip changes output on any
-      // corpus with null embeddings. PropertySpec pins the parity on a
-      // null-bearing fixture.
-      val cand = bucketSelfJoin(a, b, "vec_id", salt)
+      // Null sim/nbr_id rows are dropped before the rank stage
+      // (TopKPairs' update() skips them too); PropertySpec pins the
+      // null semantics on a null-bearing fixture.
+      val cand = a.join(b, Seq("bucket"))
         .filter(col("vec_id") =!= col("nbr_id"))
         .withColumn("sim", Vectors.cosineRounded(col("a_v"), col("b_v")))
         .filter(col("sim").isNotNull && col("nbr_id").isNotNull)
-      // r19 (verdict Next 5): the rank stage DEFAULTS to the PRIMITIVE
-      // top-k aggregate (Native.top_k_pairs — two fixed slot arrays per
-      // group, output already rank-sorted so pos+1 IS the rank), which
-      // reversed the r18 boxed-heap negative result on BOTH axes:
-      // 1.3–1.7× FASTER than the rank window at right-sized fan-out
+      // r19 (verdict Next 5): the rank stage is the PRIMITIVE top-k
+      // aggregate (Native.top_k_pairs — two fixed slot arrays per
+      // group, output already rank-sorted so pos+1 IS the rank):
+      // 1.3–1.7× FASTER than a rank window at right-sized fan-out
       // (knn 5.99→3.46 s, triangle 8.33→5.01, hard-neg 7.12→5.41 at
       // decade 2, bench_scale_sim_syn10_{win,topk2}_r19.json) and it
       // COMPLETES the 8-bit decade-3 geometry the window's sort died
       // on disk under (562.6 s / zero spill vs r18's ~500 GB death,
       // bench_scale_sim_syn100_bucket8_topk_r19.json) — constant
-      // k-slot memory per group at ANY fan-out. Rank parity is pinned
-      // in PropertySpec incl. ±0.0/NaN ties and the oracle is green
-      // under both impls. SPARK_GRAFT_KNN_IMPL=window selects the old
-      // rank window (A/B re-runs). Sessions running this path at scale
-      // should raise spark.sql.objectHashAggregate.sortBased
-      // .fallbackThreshold (Bench scopes it per-query via
-      // TopKHeapQueries); the 128-key default degrades to a sort of
-      // the candidate stream — still CORRECT, and at the graded
-      // correctness scales (sf0.01/0.1) the un-raised default is fine.
-      if (sys.env.get("SPARK_GRAFT_KNN_IMPL").contains("window")) {
-        val w = Window.partitionBy("vec_id")
-          .orderBy(col("sim").desc, col("nbr_id").asc)
-        cand.withColumn("rk", row_number().over(w))
-          .filter(col("rk") <= 3)
-          .select("vec_id", "nbr_id", "sim", "rk")
-      } else
-        cand.groupBy("vec_id")
-          .agg(graft.plans.Native.top_k_pairs(col("sim"), col("nbr_id"), 3)
-            .as("t"))
-          .select(col("vec_id"), posexplode(col("t")))
-          .select(col("vec_id"), col("col.nbr").as("nbr_id"),
-            col("col.sim").as("sim"), (col("pos") + 1).as("rk"))
+      // k-slot memory per group at ANY fan-out. Rank parity with
+      // row_number is pinned in PropertySpec incl. ±0.0/NaN ties.
+      // Sessions running this path at scale should raise
+      // spark.sql.objectHashAggregate.sortBased.fallbackThreshold
+      // (Bench scopes it per-query via TopKHeapQueries); the 128-key
+      // default degrades to a sort of the candidate stream — still
+      // CORRECT, and at the graded correctness scales (sf0.01/0.1) the
+      // un-raised default is fine.
+      cand.groupBy("vec_id")
+        .agg(graft.plans.Native.top_k_pairs(col("sim"), col("nbr_id"), 3)
+          .as("t"))
+        .select(col("vec_id"), posexplode(col("t")))
+        .select(col("vec_id"), col("col.nbr").as("nbr_id"),
+          col("col.sim").as("sim"), (col("pos") + 1).as("rk"))
     }),
 
     // SemDeDup-style drop list: greedy keep-lowest-id within embedding
@@ -538,8 +405,7 @@ object SimilarityQueries {
         Vectors.signBucket(col("v"), bits).as("bucket"))
       val keeper = e.select(col("vec_id").as("kept_id"), col("v").as("b_v"),
         Vectors.signBucket(col("v"), bits).as("bucket"))
-      bucketSelfJoin(victim, keeper, "vec_id",
-          forcedBucketSalt(e.count(), bits, d))
+      victim.join(keeper, Seq("bucket"))
         .filter(col("kept_id") < col("vec_id"))
         .withColumn("sim", Vectors.cosineRounded(col("a_v"), col("b_v")))
         .filter(col("sim") >= 0.4)
@@ -680,8 +546,7 @@ object SimilarityQueries {
       val a = e.select(col("vec_id"), col("v").as("a_v"), col("bucket"))
       val b = e.select(col("vec_id").as("nbr_id"), col("v").as("b_v"),
         col("bucket"))
-      val dup = bucketSelfJoin(a, b, "vec_id",
-          forcedBucketSalt(emb(s, d).count(), bits, d))
+      val dup = a.join(b, Seq("bucket"))
         .filter(col("vec_id") =!= col("nbr_id"))
         .filter(Vectors.cosineRounded(col("a_v"), col("b_v")) >= 0.4)
         .select("vec_id", "nbr_id")

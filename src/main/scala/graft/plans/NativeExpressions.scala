@@ -1128,42 +1128,10 @@ object Native {
   def cell_rank(v: Column, cb: Column): Column =
     column(NativeFn.cellRank(expression(v), expression(cb)))
 
-  /** Bounded per-group top-k collection (Spark's own CollectTopK — a
-    * BoundedPriorityQueue aggregate): keeps the k smallest elements by
-    * the element type's natural ordering when `reverse` is true, the k
-    * largest otherwise, in CONSTANT memory per group with map-side
-    * partial merge. Output array order is unspecified — callers
-    * array_sort before ranking.
-    *
-    * When to use it, MEASURED (r18, r19): for a (double score, long
-    * id) rank shape, DON'T — [[TopKPairs]] ([[Native.top_k_pairs]])
-    * keeps the same constant k·|groups| working set over primitive
-    * slot arrays and beat both this heap (~4× slower than the window,
-    * bench_scale_sim_syn10_topk_r18.json) AND the rank window itself
-    * (SCALE.md r19). collect_top_k remains for element types the
-    * two-slot buffer can't carry (structs, strings, arbitrary k-tuple
-    * orderings). PropertySpec pins rank parity.
-    *
-    * ±0.0 (r19, ADVICE): the aggregate compares with Scala's TOTAL
-    * Double order (-0.0 < 0.0) while window/sort comparators use
-    * primitive compare (-0.0 == 0.0) — a divergence that turns out to
-    * be UNREACHABLE for column-borne zeros because UnsafeRowWriter
-    * normalizes -0.0 → 0.0 on every write (SPARK-26021): both zeros
-    * present identical ordering keys to both operators and the id
-    * tie-break decides, identically. MEASURED, not assumed —
-    * PropertySpec forces ±0.0 ties at the rank boundary and pins
-    * plain-negation parity (the test that catches a Spark upgrade
-    * dropping write-time normalization). */
-  def collect_top_k(e: Column, k: Int, reverse: Boolean): Column =
-    column(org.apache.spark.sql.graftbridge.Bridge
-      .collectTopK(expression(e), k, reverse))
-
   /** Per-group top-k `(score DESC, id ASC)` pairs over primitive slot
-    * arrays, already rank-sorted — see [[TopKPairs]]. The r19
-    * replacement for [[collect_top_k]] on (double score, long id)
-    * shapes: same constant k-slot memory at any fan-out, none of the
-    * boxed-queue overhead that made the r18 escape hatch ~4× slower
-    * than the rank window. */
+    * arrays, already rank-sorted — see [[TopKPairs]]. Constant k-slot
+    * memory at any fan-out, without the boxed-queue overhead that made
+    * Spark's CollectTopK heap ~4× slower than the rank window (r18). */
   def top_k_pairs(score: Column, id: Column, k: Int): Column =
     column(TopKPairs(expression(score), expression(id), k)
       .toAggregateExpression())

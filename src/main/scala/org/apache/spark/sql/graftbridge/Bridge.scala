@@ -43,13 +43,4 @@ object Bridge {
   def stageShuffleDepId(
       si: org.apache.spark.scheduler.StageInfo): Option[Int] =
     si.shuffleDepId
-
-  /** Bounded per-group top-k collection — Spark's own `CollectTopK`
-    * aggregate (a k-element BoundedPriorityQueue per group with
-    * map-side partial merge), `private[aggregate]` upstream so exposed
-    * through the same shim technique. `reverse = true` keeps the k
-    * SMALLEST elements by the element type's natural ordering. */
-  def collectTopK(child: Expression, k: Int, reverse: Boolean): Expression =
-    org.apache.spark.sql.catalyst.expressions.aggregate
-      .GraftTopK(child, k, reverse)
 }

@@ -113,4 +113,26 @@ class ContractSpec extends SparkSpec {
     }
     assert(offenders.isEmpty, offenders.mkString("; "))
   }
+
+  test("environment options stay an explicit allowlist: paths, a core " +
+    "count and dev query selectors only") {
+    // Execution choices are made from the input at run time (AQE, the
+    // self-sized sign-LSH width), not from env switches; a new
+    // SPARK_GRAFT_* option must be added here on purpose.
+    import scala.jdk.CollectionConverters._
+    val allowed = Set("SF_DIR", "CPUS", "BENCH_OUT", "BENCH_ONLY",
+      "BENCH_REF", "VERIFY_ONLY", "PLAN_OUT", "PLAN_SUFFIX",
+      "SIDECAR_DENY").map("SPARK_GRAFT_" + _)
+    val main = java.nio.file.Paths.get("src/main")
+    assert(java.nio.file.Files.isDirectory(main),
+      "src/main not found: run from the repo root")
+    val optionRe = "SPARK_GRAFT_[A-Z_]+".r
+    val found = java.nio.file.Files.walk(main).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap(p => optionRe.findAllIn(java.nio.file.Files.readString(p)))
+      .toSet
+    assert(found == allowed,
+      s"added: ${(found -- allowed).toSeq.sorted.mkString(", ")}; " +
+        s"gone: ${(allowed -- found).toSeq.sorted.mkString(", ")}")
+  }
 }

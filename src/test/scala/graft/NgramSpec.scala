@@ -44,8 +44,9 @@ class NgramSpec extends SparkSpec {
     }
   }
 
-  test("native lsh_bands equals the HOF banding (Hashes.bandsHof) on " +
-    "random signatures, including the clamped trailing partial band") {
+  test("native lsh_bands equals the HOF banding " +
+    "(ParityReferences.bandsHof) on random signatures, including the " +
+    "clamped trailing partial band") {
     import graft.functions.Hashes
     val sigs = Seq.fill(2000)(
       Seq.fill(1 + rnd.nextInt(300))(rnd.nextLong().abs % 2147483647L))

@@ -853,16 +853,13 @@ class PlanSpec extends SparkSpec {
   }
 
   test("sim_knn_graph: the per-vector top-k truncates before the " +
-    "exchange — partial top_k_pairs map-side by default, " +
-    "WindowGroupLimit under the window knob") {
+    "exchange — partial top_k_pairs map-side") {
     // r18 measured the rank window vs a boxed CollectTopK heap (heap
     // lost ~4x); r19's primitive slot-array rewrite (top_k_pairs)
     // reversed it — 1.3-1.7x faster than the window at right-sized
     // fan-out AND completes the 8-bit decade-3 geometry the window's
-    // sort died on (SCALE.md r19) — so the aggregate is the default
-    // and the window stays reachable for A/B (SPARK_GRAFT_KNN_IMPL=
-    // window). Either shape truncates to k rows per group before its
-    // exchange; this pin asserts the default's shape.
+    // sort died on (SCALE.md r19) — so the aggregate is the one rank
+    // stage, truncating to k rows per group before its exchange.
     val p = planOf(SimilarityQueries.queries("sim_knn_graph")(spark, sf))
     assert(p.contains("partial_top_k_pairs"),
       s"the default rank stage must partial-aggregate map-side:\n$p")

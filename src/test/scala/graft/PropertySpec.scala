@@ -283,79 +283,6 @@ class PropertySpec extends SparkSpec {
       "d2 ties must break to the lowest c_id")
   }
 
-  test("collect_top_k top-3 equals the rank window's rows exactly " +
-    "(random groups; ±0.0 boundary covered by the dedicated test below)") {
-    // the escape-hatch aggregate for un-sizable fan-out (see
-    // Native.collect_top_k) must stay rank-parity with row_number over
-    // (sim DESC, id ASC): heap keeps the 3 smallest struct(-sim, id)
-    import org.apache.spark.sql.expressions.Window
-    val rows = Seq.tabulate(4000) { i =>
-      val sim = rnd.nextInt(8) match {
-        case 0 => 0.0
-        case 1 => -0.0
-        case _ => math.rint(rnd.nextDouble() * 2000 - 1000) / 1000.0
-      }
-      (i % 97L, i.toLong, sim)
-    }
-    val df = rows.toDF("g", "id", "sim")
-    val w = Window.partitionBy("g").orderBy($"sim".desc, $"id".asc)
-    val windowed = df.withColumn("rk", row_number().over(w))
-      .filter($"rk" <= 3).select("g", "id", "sim", "rk")
-    val heaped = df.groupBy("g")
-      .agg(graft.plans.Native.collect_top_k(
-        struct((-$"sim").as("negsim"), $"id"), 3, reverse = true).as("t"))
-      .select($"g", posexplode(array_sort($"t")).as(Seq("p", "e")))
-      .select($"g", $"e.id".as("id"), (-$"e.negsim").as("sim"),
-        ($"p" + 1).as("rk"))
-    assert(heaped.exceptAll(windowed).isEmpty &&
-      windowed.exceptAll(heaped).isEmpty,
-      "heap top-3 must equal the window's rows exactly")
-  }
-
-  test("collect_top_k ±0.0 AT the rank boundary: plain-negation parity " +
-    "holds (Spark normalizes -0.0 at row-write time — measured, not " +
-    "assumed)") {
-    // r19 (ADVICE): the random-groups test above essentially never puts
-    // a ±0.0 tie AT the top-3 boundary, so this fixture forces it —
-    // per group: sims {1.0, 0.9, -0.0, +0.0} with the -0.0 row on the
-    // LOWER id, both zeros competing for rank 3. The theorized
-    // divergence (window comparators treat -0.0 == 0.0 while the
-    // heap's interpreted struct ordering is Scala's TOTAL Double order
-    // with -0.0 < 0.0) turns out to be UNREACHABLE for column-borne
-    // values: UnsafeRowWriter normalizes -0.0 → 0.0 on every write
-    // (SPARK-26021), so by the time either operator compares, the
-    // signed-zero distinction no longer exists — negating 0.0 does
-    // produce -0.0 inside the aggregate's key, but BOTH zeros negate
-    // to the SAME -0.0, keeping the ordering keys equal and the id
-    // tie-break in charge, exactly like the window. This fixture pins
-    // that parity (and the windowed side of the fixture itself) as an
-    // executable fact; if a Spark upgrade ever drops write-time
-    // normalization, this is the test that catches it.
-    import org.apache.spark.sql.expressions.Window
-    val rows = (0L until 50L).flatMap { g =>
-      Seq((g, g * 10 + 1, 1.0), (g, g * 10 + 2, 0.9),
-        (g, g * 10 + 3, -0.0), (g, g * 10 + 4, 0.0))
-    }
-    val df = rows.toDF("g", "id", "sim")
-    val w = Window.partitionBy("g").orderBy($"sim".desc, $"id".asc)
-    val windowed = df.withColumn("rk", row_number().over(w))
-      .filter($"rk" <= 3).select("g", "id", "rk")
-    def heaped(negsim: org.apache.spark.sql.Column) = df.groupBy("g")
-      .agg(graft.plans.Native.collect_top_k(
-        struct(negsim.as("negsim"), $"id"), 3, reverse = true).as("t"))
-      .select($"g", posexplode(array_sort($"t")).as(Seq("p", "e")))
-      .select($"g", $"e.id".as("id"), ($"p" + 1).as("rk"))
-    // the window keeps each group's lower-id zero row (zeros tie; id
-    // breaks it) — the boundary the random test never exercised
-    assert(windowed.filter($"rk" === 3 && $"id" % 10 === 3).count() == 50,
-      "fixture: the window's rank-3 row must be the lower-id zero row")
-    val naive = heaped(-$"sim")
-    assert(naive.exceptAll(windowed).isEmpty &&
-      windowed.exceptAll(naive).isEmpty,
-      "plain negation must equal the window's rows exactly at the " +
-        "±0.0 boundary (write-time normalization guarantees it)")
-  }
-
   test("top_k_pairs top-3 equals the rank window's rows exactly " +
     "(random groups incl. ±0.0 and NaN sims; output already " +
     "rank-sorted, so pos+1 IS the rank)") {
@@ -363,9 +290,9 @@ class PropertySpec extends SparkSpec {
     // be bit-identical to row_number over (sim DESC, id ASC). Its
     // comparator reimplements Spark's nan-safe double order (NaN
     // greatest, -0.0 == 0.0) — the NaN rows pin the first half, the
-    // ±0.0 rows ride the same write-time normalization the
-    // collect_top_k boundary test above proves, and the dedicated
-    // boundary fixture below forces zeros AT rank 3.
+    // ±0.0 rows ride Spark's write-time normalization of -0.0
+    // (SPARK-26021), and the dedicated boundary fixture below forces
+    // zeros AT rank 3.
     import org.apache.spark.sql.expressions.Window
     val rows = Seq.tabulate(4000) { i =>
       val sim = rnd.nextInt(10) match {
@@ -389,9 +316,9 @@ class PropertySpec extends SparkSpec {
       windowed.exceptAll(agged).isEmpty,
       "top_k_pairs top-3 must equal the window's rows exactly")
 
-    // ±0.0 AT the rank-3 boundary (the collect_top_k boundary fixture,
-    // same shape): per group sims {1.0, 0.9, -0.0, +0.0}, the -0.0 row
-    // on the lower id — the window keeps the lower-id zero; so must we
+    // ±0.0 AT the rank-3 boundary: per group sims {1.0, 0.9, -0.0,
+    // +0.0}, the -0.0 row on the lower id — the window keeps the
+    // lower-id zero; so must we
     val brows = (0L until 50L).flatMap { g =>
       Seq((g, g * 10 + 1, 1.0), (g, g * 10 + 2, 0.9),
         (g, g * 10 + 3, -0.0), (g, g * 10 + 4, 0.0))
@@ -408,11 +335,10 @@ class PropertySpec extends SparkSpec {
         "±0.0 rank boundary")
 
     // null semantics (r20, ADVICE): the aggregate DROPS null score/id
-    // rows in update() — the contract the knn branch's shared
-    // pre-filter (sim/nbr_id NOT NULL before the impl split) relies on
-    // so an SPARK_GRAFT_KNN_IMPL A/B flip can't change output on a
-    // corpus with null embeddings. A group with fewer than k non-null
-    // candidates returns only the non-null rows, never padded ranks.
+    // rows in update(), the same rows sim_knn_graph's pre-filter
+    // (sim/nbr_id NOT NULL) drops before the rank stage. A group with
+    // fewer than k non-null candidates returns only the non-null rows,
+    // never padded ranks.
     val nrows = Seq[(Long, java.lang.Long, java.lang.Double)](
       (1L, 10L, 0.9), (1L, null, 0.95), (1L, 12L, null), (1L, 13L, 0.5),
       (2L, 20L, null), (2L, null, null))
@@ -460,37 +386,6 @@ class PropertySpec extends SparkSpec {
           s"mismatch at x=$x scale=$scale: round=$r fast_round=$f")
       }
     }
-  }
-
-  test("bucketSelfJoin grid salt (r20): the salted join's multiset of " +
-    "rows equals the plain join exactly — every (a, b) bucket pair " +
-    "meets exactly once, at any salt") {
-    // the forced-width skew defense must be output-invisible: side A
-    // slices on a function of its own row, side B replicates to every
-    // slice, so salting can neither drop nor duplicate a pair.
-    // exceptAll is multiset-aware — a double-counted pair would show.
-    val e = (0L until 2000L).map(i => (i, i % 7)).toDF("vec_id", "bucket")
-    val a = e.select($"vec_id", $"bucket")
-    val b = e.select($"vec_id".as("nbr_id"), $"bucket")
-    val plain = graft.operators.SimilarityQueries
-      .bucketSelfJoin(a, b, "vec_id", 1)
-    for (s <- Seq(2, 5, 32)) {
-      val salted = graft.operators.SimilarityQueries
-        .bucketSelfJoin(a, b, "vec_id", s)
-      assert(salted.exceptAll(plain).isEmpty &&
-        plain.exceptAll(salted).isEmpty,
-        s"salt=$s must be output-invisible")
-    }
-    // the salt factor: a structural no-op off the override — the
-    // by-name count thunk must never run, and (r20 review) a leftover
-    // SPARK_GRAFT_BUCKET_SALT export is IGNORED on the self-sized path
-    // rather than silently re-shaping every bucket join, so this pin
-    // holds in any environment (SignBitsForced is an env property the
-    // suite cannot toggle, so only this arm is testable)
-    if (!graft.functions.Vectors.SignBitsForced)
-      assert(graft.operators.SimilarityQueries
-        .forcedBucketSalt(sys.error("must not count"), 8,
-          "propertyspec-nocount") == 1)
   }
 
   test("hamming honors its full 32-bit contract (r20 review: the fold " +

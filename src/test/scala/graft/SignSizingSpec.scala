@@ -18,20 +18,18 @@ class SignSizingSpec extends SparkSpec {
 
   test("count-derived width: floor at graded counts; 12 bits at the " +
     "r18 decade-3 count (the posture a human previously had to set)") {
-    assume(!Vectors.SignBitsForced, "env override active — sizing is off")
     assert(Vectors.sizedSignBits(500) == Vectors.SignBucketBits)
     assert(Vectors.sizedSignBits(60000) == Vectors.SignBucketBits)
     // the last count that still fits the floor, and the first that grows
     assert(Vectors.sizedSignBits(512L << 8) == 8)
     assert(Vectors.sizedSignBits((512L << 8) + 256) == 9)
     // the r18 battery's decade-3 corpus (2M vectors): the hand-set
-    // SPARK_GRAFT_SIGN_BITS=12 posture, now derived
+    // 12-bit posture, now derived
     assert(Vectors.sizedSignBits(2000000L) == 12)
   }
 
   test("graded-scale invariance: the derived width over the real sf0.001 " +
     "embeddings equals the floor (static oracle geometry unchanged)") {
-    assume(!Vectors.SignBitsForced, "env override active — sizing is off")
     val e = Tables.embeddings(spark, sf)
       .select(col("embedding").cast("array<double>").as("v"))
     assert(Vectors.sizedSignBitsFor(e, col("v"), "test-graded")
@@ -40,7 +38,6 @@ class SignSizingSpec extends SparkSpec {
 
   test("occupancy audit escalates past the count-derived width when the " +
     "leading components' signs are skewed (deterministic fixture)") {
-    assume(!Vectors.SignBitsForced, "env override active — sizing is off")
     // 160k vectors, dim 20: components 1..9 all-positive (every vector
     // shares the 9-bit prefix bucket), components 10..20 sign-randomized
     // by xxhash64 (deterministic). Count-derived width is 9
@@ -63,7 +60,6 @@ class SignSizingSpec extends SparkSpec {
   test("sidecar persistence (r20, verdict Next 2): a derivation persists " +
     "its width beside a writable corpus, and a SECOND session reads it " +
     "back with ZERO jobs — the corpus frame is never even constructed") {
-    assume(!Vectors.SignBitsForced, "env override active — sizing is off")
     val dir = java.nio.file.Files
       .createTempDirectory("graft-signwidth-").toString
     // 140k vectors, dim 20, xxhash64-balanced signs: count-derived
@@ -100,7 +96,6 @@ class SignSizingSpec extends SparkSpec {
   test("an out-of-band corpus rewrite invalidates the sidecar (r20 " +
     "review): the recorded filesystem fingerprint no longer matches, " +
     "so the next session re-derives instead of keeping a stale width") {
-    assume(!Vectors.SignBitsForced, "env override active — sizing is off")
     import java.nio.file.Files
     val root = Files.createTempDirectory("graft-extwrite-").toString
     val dim = 20
@@ -155,7 +150,6 @@ class SignSizingSpec extends SparkSpec {
 
   test("compaction re-derives after growth (r20): folding a decade of " +
     "deltas into the stored corpus refreshes the persisted width") {
-    assume(!Vectors.SignBitsForced, "env override active — sizing is off")
     import java.nio.file.Files
     val root = Files.createTempDirectory("graft-embstore-").toString
     val dim = 20
@@ -188,16 +182,16 @@ class SignSizingSpec extends SparkSpec {
 
   test("pathological sign skew fails the plan build loudly instead of " +
     "submitting the quadratic join") {
-    assume(!Vectors.SignBitsForced, "env override active — sizing is off")
     // every vector identical in sign on ALL components: no width can
     // split the single bucket, so the candidate count stays ~n² at
-    // every candidate width and the derivation must throw with guidance
+    // every candidate width and the derivation must throw
     val vecs = spark.range(140000)
       .select(transform(sequence(lit(1), lit(20)), _ => lit(1.0)).as("v"))
     val e = intercept[IllegalStateException] {
       Vectors.sizedSignBitsFor(vecs, col("v"), "test-skew-fatal")
     }
-    assert(e.getMessage.contains("SPARK_GRAFT_SIGN_BITS"),
-      s"failure must carry the override guidance: ${e.getMessage}")
+    assert(e.getMessage.contains("test-skew-fatal") &&
+      e.getMessage.contains("pathologically skewed"),
+      s"failure must name the corpus and the skew: ${e.getMessage}")
   }
 }

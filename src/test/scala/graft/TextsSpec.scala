@@ -82,7 +82,7 @@ class TextsSpec extends SparkSpec {
     assert(math.abs(r.getDouble(1)) < 1e-12)
   }
 
-  test("native CosineSim matches interpreted fold bit-for-bit") {
+  test("native cosine_sim matches interpreted fold bit-for-bit") {
     val df = Tables.embeddings(spark, sf).limit(50)
       .select($"vec_id", $"embedding".cast("array<double>").as("v"))
     val a = df.select($"vec_id".as("a_id"), $"v".as("a"))
@@ -102,7 +102,7 @@ class TextsSpec extends SparkSpec {
     assert(mismatches == 0)
   }
 
-  test("native MinHashSig: deterministic, 256 longs, equal texts agree") {
+  test("native minhash_sig: deterministic, 256 longs, equal texts agree") {
     val df = Seq((1L, "the quick brown fox jumps over it"),
       (2L, "the quick brown fox jumps over it"),
       (3L, "completely different words here")).toDF("id", "t")
@@ -114,7 +114,7 @@ class TextsSpec extends SparkSpec {
     assert(sigs(1L) != sigs(3L))
   }
 
-  test("native SimHash64: equal token sets collide, disjoint differ") {
+  test("native simhash64: equal token sets collide, disjoint differ") {
     val df = Seq((1L, Seq("a", "b", "c")), (2L, Seq("a", "b", "c")),
       (3L, Seq("x", "y", "z"))).toDF("id", "ws")
     val got = df.select($"id", graft.plans.Native.simhash64($"ws"))
@@ -129,7 +129,7 @@ class TextsSpec extends SparkSpec {
     assert(r == 0.5)
   }
 
-  test("native NfcNormalize: combining sequence composes, NFC input is " +
+  test("native nfc_normalize: combining sequence composes, NFC input is " +
     "identity, callable from SQL") {
     val decomposed = "cafe\u0301"   // e + COMBINING ACUTE: 5 chars
     val composed = "caf\u00e9"      // precomposed: 4 chars
