@@ -73,22 +73,20 @@ object CorpusQueries {
     * r15 `aggregate` fold whose growing-concat state was O(c²) per
     * document (11.1 s for one 500k-char doc, the reference's bound;
     * see [[graft.plans.NativeImpl.cdcLegalize]]). Candidates come from
-    * the gear rolling hash ([[graft.plans.NativeImpl.gearBoundaries]]);
-    * everything stays row-local at the scan, zero exchanges.
+    * the gear rolling hash ([[graft.plans.NativeImpl.gearBoundaries]]),
+    * and one more native pass cuts and md5-hashes the chunks
+    * ([[graft.plans.NativeImpl.cdcChunks]]) — linear in the text, where
+    * a per-chunk `substr` re-walked it from the start (~10 s for one
+    * 500k-char doc); everything stays row-local at the scan, zero
+    * exchanges.
     */
   private[graft] def cdcBoundedSpans(docs: DataFrame): DataFrame = {
     val MinL = 32; val MaxL = 128
     val n = length(col("text"))
     val bs = graft.plans.Native.cdc_legalize(
       graft.plans.Native.gear_boundaries(col("text")), n, MinL, MaxL)
-    val starts = concat(array(lit(1)), transform(bs, b => b + 1))
-    val ends = concat(bs, array(n))
-    val chunks = filter(
-      zip_with(starts, ends, (st, e) => struct(
-        st.as("start"), (e - st + 1).as("clen"),
-        md5(col("text").substr(st, e - st + 1)).as("chash"))),
-      c => c.getField("clen") > 0)
-    docs.select(col("doc_id"), explode(chunks).as("c"))
+    docs.select(col("doc_id"),
+        explode(graft.plans.Native.cdc_chunks(col("text"), bs)).as("c"))
       .select(col("doc_id"), col("c.start").as("start"),
         col("c.clen").as("clen"), col("c.chash").as("chash"))
   }

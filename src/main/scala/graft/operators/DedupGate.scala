@@ -510,13 +510,75 @@ object DedupGate {
     * make longer chains reachable, so the walk is load-bearing.)
     *
     * Twins always carry a LOWER uid than their follower, so chains are
-    * strictly decreasing and acyclic; pointer-jumping doubles the
-    * resolved prefix per round (round count ≤ log2 of the deepest
-    * chain). The per-round emptiness probe is a driver-side scalar over
-    * the INGEST-sized frame — the dd_cluster_cc convergence pattern,
-    * never a corpus-sized action.
+    * strictly decreasing and acyclic. A chain whose twin is absent from
+    * `outcomes` resolves to a null target, which
+    * [[outcomesDeltaParts]] turns into a loud error. Two arms, one
+    * result (PropertySpec pins them equal):
+    *  - DRIVER ([[walkTwinChains]]) when `outcomes` has at most
+    *    [[DedupQueries.DriverRows]] rows — always, for an ingest batch:
+    *    the rows are collected (no job when `outcomes` is already a
+    *    local relation, as in [[graft.streaming.GateStoreLoop]]), each
+    *    chain is walked once with memoization, at any depth, and the
+    *    result is a local relation. Driver memory: the collected rows
+    *    plus one memo entry per uid.
+    *  - DISTRIBUTED ([[jumpTwinChains]]) otherwise: pointer-jumping
+    *    rounds over the frame.
     */
   private[graft] def resolveTargets(outcomes: DataFrame): DataFrame = {
+    val links = twinLinks(outcomes)
+    DedupQueries.onDriver(links)
+      .fold(jumpTwinChains(links))(walkTwinChains(links, _))
+  }
+
+  /** `(uid, outcome, target, twin)`: each row's own target (its uid
+    * when `new`, else its matched corpus node, null when it matched a
+    * twin) and the twin it follows — the input of both chain arms. */
+  private[graft] def twinLinks(outcomes: DataFrame): DataFrame =
+    outcomes.select(col("uid"), col("outcome"),
+      when(col("outcome") === "new", col("uid"))
+        .otherwise(col("matched_node_id")).as("target"),
+      col("batch_twin").as("twin"))
+
+  /** The DRIVER arm of [[resolveTargets]] over the collected rows of
+    * `links` ([[twinLinks]]): each chain is followed to its first
+    * non-null target, and every uid on the path memoizes the answer, so
+    * the walk is linear in the rows however deep the chains. A chain
+    * that ends without a target (a twin absent from the rows, a
+    * twin-less row with no target) resolves to null, as in the
+    * distributed arm; so does a cycle, which no classification emits. */
+  private[graft] def walkTwinChains(links: DataFrame,
+      rows: Seq[org.apache.spark.sql.Row]): DataFrame = {
+    val byUid = rows.map(r => r.get(0) -> r).toMap
+    val memo = scala.collection.mutable.HashMap.empty[Any, Any]
+    def targetOf(uid: Any): Any = {
+      val path = scala.collection.mutable.ArrayBuffer.empty[Any]
+      var u = uid
+      var target: Any = null
+      var done = false
+      while (!done) memo.get(u) match {
+        case Some(t) => target = t; done = true
+        case None => byUid.get(u) match {
+          case None => done = true
+          case Some(r) =>
+            path += u
+            if (!r.isNullAt(2)) { target = r.get(2); done = true }
+            else if (r.isNullAt(3) || path.size > byUid.size) done = true
+            else u = r.get(3)
+        }
+      }
+      path.foreach(memo(_) = target)
+      target
+    }
+    val out = links.select("uid", "outcome", "target")
+    DedupQueries.localFrame(links.sparkSession, out.schema,
+      rows.map(r => org.apache.spark.sql.Row(r.get(0), r.get(1),
+        targetOf(r.get(0)))))
+  }
+
+  /** The DISTRIBUTED arm of [[resolveTargets]]: pointer-jumping doubles
+    * the resolved prefix per round (round count ≤ log2 of the deepest
+    * chain), with a per-round emptiness probe over `links`. */
+  private[graft] def jumpTwinChains(links: DataFrame): DataFrame = {
     // r22 (guide §5-driver, verdict item 8): each round's frame is
     // lineage-truncated (lazy — the checkpoint materializes FUSED with
     // the convergence count in one Spark job, the dd_cluster_cc
@@ -525,13 +587,9 @@ object DedupGate {
     // downstream consumer (outcomesDeltaParts reads the resolved frame
     // from three branches); now each round is one shallow job over the
     // previous round's materialized rows, and consumers read the final
-    // checkpoint. Frames here are ingest-sized, never corpus-sized.
+    // checkpoint.
     val unresolved = col("target").isNull && col("twin").isNotNull
-    var t = DedupQueries.truncatedDf(
-      outcomes.select(col("uid"), col("outcome"),
-        when(col("outcome") === "new", col("uid"))
-          .otherwise(col("matched_node_id")).as("target"),
-        col("batch_twin").as("twin")), eager = false)
+    var t = DedupQueries.truncatedDf(links, eager = false)
     var rounds = 0
     var pending = t.filter(unresolved).count()
     while (rounds < 64 && pending > 0) {

@@ -3,9 +3,11 @@ package graft.operators
 import graft.Tables
 import graft.functions.{Hashes, Texts, Vectors}
 import graft.streaming.StreamDedup
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Deduplication operator family — SURVEY.md §2.4 J8 / §2.10 ST7 plus the
   * LLM-pipeline dedup surface: exact (hash-groupBy), MinHash+LSH banding,
@@ -444,9 +446,36 @@ object DedupQueries {
     val deltaEdges = edges
       .filter(!(isBase(col("a_id")) && isBase(col("b_id"))))
     // the stored assignment, as written at T0 (before the delta tranche):
-    // materialized because three consumers below reference it
+    // materialized because the fold reads it twice (probe, pass-through)
     val baseAssign = truncatedDf(ccAssignments(baseEdges), eager = true)
     ccApplyDelta(s, baseAssign, deltaEdges)
+  }
+
+  /** Row cap of the ingest-sized DRIVER arms: the CC fold
+    * ([[ccApplyDelta]]), the twin-chain walk
+    * ([[DedupGate.resolveTargets]]) and the store loops' local batch and
+    * outcome frames. A frame of at most this many rows is collected and
+    * solved on the driver; a larger one runs the distributed loop
+    * unchanged. A fixed constant, not an option: an ingest micro-batch
+    * is tens to hundreds of rows, and at the cap a driver arm holds a
+    * few MB (8192 rows of ids, or of gate rows carrying a 16-long
+    * signature), far below any driver heap Spark runs on. */
+  private[graft] val DriverRows = 8192
+
+  /** The rows of `df` when it has at most [[DriverRows]] of them, else
+    * None: one bounded `take`, which starts no Spark job at all when
+    * `df` is already a local relation. */
+  private[graft] def onDriver(df: DataFrame): Option[Array[Row]] = {
+    val rows = df.take(DriverRows + 1)
+    if (rows.length <= DriverRows) Some(rows) else None
+  }
+
+  /** `rows` as a local relation on `s`: planned from driver memory, so
+    * reading it starts no Spark job of its own. */
+  private[graft] def localFrame(s: SparkSession, schema: StructType,
+      rows: Seq[Row]): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    s.createDataFrame(rows.asJava, schema)
   }
 
   /** One maintenance step of a STORED component assignment: fold an
@@ -454,21 +483,125 @@ object DedupQueries {
     * must be each component's min vertex, which ccAssignments and this
     * function both guarantee, so steps CHAIN: the output is the next
     * step's base). The batch's endpoints contract onto stored
-    * canonicals, the fixed-point loop resolves only the batch-sized
-    * contraction graph, untouched components pass through. Re-applying
-    * an already-folded batch is a no-op: both endpoints of every edge
-    * map to the same canonical, the contraction empties, and the vertex
-    * union adds nothing — redelivery-idempotent by construction
-    * (StoreLoopSpec pins this and the multi-batch fold).
+    * canonicals, only the batch-sized contraction graph is resolved,
+    * untouched components pass through. Re-applying an already-folded
+    * batch is a no-op: both endpoints of every edge map to the same
+    * canonical, the contraction empties, and the vertex union adds
+    * nothing — redelivery-idempotent by construction (StoreLoopSpec
+    * pins this and the multi-batch fold).
     * `deltaOnly = true` returns ONLY the rows the batch changed (new
     * vertices + vertices whose canonical moved) — the ingest-sized
     * artifact a streaming store loop appends instead of rewriting the
-    * corpus-sized assignment (CcStoreLoop); the filter is a null-safe
-    * compare against the stored canonical already riding the compose
-    * join, never a full-table except.
-    * `baseAssign` must be materialized (three consumers below). */
+    * corpus-sized assignment (CcStoreLoop).
+    *
+    * Two arms, one result (PropertySpec pins them equal):
+    *  - DRIVER ([[ccFoldOnDriver]]) when the batch has at most
+    *    [[DriverRows]] edges, no null endpoint, and one id type (long,
+    *    int or string) across both frames: one job probes the stored
+    *    canonicals of the endpoints, union-find solves the contraction
+    *    graph on the driver, and the moved canonicals join back as a
+    *    local relation. Driver memory: the edges, the endpoint map and
+    *    the union-find forest, each at most 2 × DriverRows ids.
+    *  - DISTRIBUTED ([[ccFoldDistributed]]) otherwise: the contraction
+    *    graph resolves through [[ccAssignments]]' fixed-point loop.
+    * Either arm reads `baseAssign` only through keyed probes and one
+    * pass-through scan, so a lazily read parquet overlay serves as well
+    * as a checkpoint (CcStoreLoop passes the overlay). */
   private[graft] def ccApplyDelta(s: SparkSession, baseAssign: DataFrame,
       deltaEdges: DataFrame, deltaOnly: Boolean = false): DataFrame = {
+    val edges = deltaEdges.select("a_id", "b_id")
+    val types = Seq(baseAssign.schema("doc_id"),
+      baseAssign.schema("canonical_id"), edges.schema("a_id"),
+      edges.schema("b_id")).map(_.dataType).distinct
+    val local =
+      if (types.size == 1 && idOrdering(types.head).isDefined)
+        onDriver(edges).filter(_.forall(r => !r.isNullAt(0) && !r.isNullAt(1)))
+      else None
+    local.fold(ccFoldDistributed(s, baseAssign, deltaEdges, deltaOnly))(
+      ccFoldOnDriver(s, baseAssign, _, deltaOnly))
+  }
+
+  /** Spark's order of an id type the driver fold takes — long, int, or
+    * string compared by UTF-8 bytes as Spark compares it; None for any
+    * other type, which the distributed arm takes. */
+  private def idOrdering(t: DataType): Option[Ordering[Any]] = t match {
+    case LongType => Some(Ordering.Long.on[Any](_.asInstanceOf[Long]))
+    case IntegerType => Some(Ordering.Int.on[Any](_.asInstanceOf[Int]))
+    case StringType => Some(Ordering.fromLessThan[Any]((a, b) =>
+      UTF8String.fromString(a.asInstanceOf[String])
+        .binaryCompare(UTF8String.fromString(b.asInstanceOf[String])) < 0))
+    case _ => None
+  }
+
+  /** The DRIVER arm of [[ccApplyDelta]] over the collected `edges`
+    * (a_id, b_id rows, no null endpoint). Union-find lets the smaller
+    * root win every union, so each root is its component's min — the
+    * canonical rule [[ccAssignments]] computes (and perfbench's CC
+    * oracle states the same way). Jobs: one probe of the stored
+    * canonicals of the endpoints, none when the batch is empty; the
+    * result is the new vertices as a local relation plus — only when a
+    * stored canonical moved — the base rows carrying it, joined against
+    * the moved canonicals as a local relation. */
+  private[graft] def ccFoldOnDriver(s: SparkSession, baseAssign: DataFrame,
+      edges: Seq[Row], deltaOnly: Boolean): DataFrame = {
+    val idType = baseAssign.schema("doc_id").dataType
+    val ord = idOrdering(idType).getOrElse(throw new IllegalArgumentException(
+      s"ccFoldOnDriver: unsupported id type $idType"))
+    val pairs = edges.map(r => (r.get(0), r.get(1)))
+    val verts = pairs.flatMap(p => Seq(p._1, p._2)).distinct
+    // endpoint → stored canonical, for the endpoints present in the base
+    val stored: Map[Any, Any] =
+      if (verts.isEmpty) Map.empty
+      else baseAssign.filter(col("doc_id").isin(verts: _*))
+        .select("doc_id", "canonical_id").collect()
+        .map(r => r.get(0) -> r.get(1)).toMap
+    // union-find over the contraction graph: endpoints contract onto
+    // their stored canonical (self when new or base-isolated)
+    val parent = scala.collection.mutable.HashMap.empty[Any, Any]
+    def find(x: Any): Any = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var y = x
+      while (y != r) { val up = parent(y); parent(y) = r; y = up }
+      r
+    }
+    pairs.foreach { case (a, b) =>
+      val ca = stored.getOrElse(a, a)
+      val cb = stored.getOrElse(b, b)
+      parent.getOrElseUpdate(ca, ca)
+      parent.getOrElseUpdate(cb, cb)
+      val (ra, rb) = (find(ca), find(cb))
+      if (ra != rb) { if (ord.lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
+    }
+    val fin = parent.keys.toSeq.map(c => c -> find(c)).toMap
+    val schema = StructType(Seq(StructField("doc_id", idType),
+      StructField("canonical_id", idType)))
+    // one partition: the new-vertex rows are batch-sized, and a store
+    // loop writing them lands one file instead of one per core
+    val fresh = localFrame(s, schema, verts.filterNot(stored.contains)
+      .map(v => Row(v, fin.getOrElse(v, v)))).coalesce(1)
+    val moved = fin.toSeq.filter { case (c, f) => c != f }
+    val bmap = baseAssign.select("doc_id", "canonical_id")
+    if (moved.isEmpty) (if (deltaOnly) fresh else bmap.unionByName(fresh))
+    else {
+      val movedFrame = localFrame(s, StructType(Seq(
+        StructField("canonical_id", idType), StructField("fin", idType))),
+        moved.map { case (c, f) => Row(c, f) })
+      val passThrough = bmap
+        .join(movedFrame, Seq("canonical_id"), if (deltaOnly) "inner" else "left")
+        .select(col("doc_id"),
+          coalesce(col("fin"), col("canonical_id")).as("canonical_id"))
+      passThrough.unionByName(fresh)
+    }
+  }
+
+  /** The DISTRIBUTED arm of [[ccApplyDelta]]: the delta endpoints
+    * contract onto stored canonicals by keyed joins, [[ccAssignments]]'
+    * fixed-point loop resolves the contraction graph, and the deltaOnly
+    * filter is a null-safe compare against the stored canonical already
+    * riding the compose join, never a full-table except. */
+  private[graft] def ccFoldDistributed(s: SparkSession, baseAssign: DataFrame,
+      deltaEdges: DataFrame, deltaOnly: Boolean): DataFrame = {
     val bmap = baseAssign
       .select(col("doc_id").as("v"), col("canonical_id").as("c"))
     // r22 (guide §2.4/§3.1): every decision in the fold depends only on

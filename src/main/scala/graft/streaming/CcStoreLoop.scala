@@ -35,6 +35,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * already-merged edges yields an EMPTY changed-row set), so even an
   * out-of-contract duplicate delivery under a fresh id is a no-op layer.
   * StreamingSpec drives all of this end-to-end.
+  *
+  * TWO ARMS per batch, chosen by its edge count against
+  * [[graft.operators.DedupQueries.DriverRows]] (a fixed constant): an
+  * INGEST-SIZED batch is collected once into a local relation and
+  * folded on the driver (one probe job for the endpoints' stored
+  * canonicals, union-find over the contraction graph; driver memory
+  * O(cap) ids — see [[graft.operators.DedupQueries.ccApplyDelta]]); a
+  * LARGER batch is localCheckpointed and folded by the distributed
+  * fixed-point loop. Either way the fold reads the stored assignment
+  * as the lazily read parquet overlay ([[state]]) — no batch writes a
+  * corpus-sized checkpoint.
   */
 object CcStoreLoop {
 
@@ -80,18 +91,22 @@ object CcStoreLoop {
     * the batch frame must carry (a_id, b_id). */
   def handleBatch(dir: String)(batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val b = batch.localCheckpoint(true)
-    if (b.isEmpty) return
+    // an ingest-sized batch is collected once into a local relation on
+    // the cc session (an empty one returns without a job of its own); a
+    // larger one is localCheckpointed and re-bound onto the cc session
+    val local = DedupQueries.onDriver(batch)
+    if (local.exists(_.isEmpty)) return
     val s = DedupQueries.ccSession(spark)
+    val edges = local.fold(onSession(s, batch.localCheckpoint(true)))(
+      DedupQueries.localFrame(s, batch.schema, _))
     // probe state BELOW this batch id: a redelivered batch must fold
     // against exactly what it saw the first time, never its own layer.
-    // Built directly ON the cc session (state takes the session) — only
-    // the externally supplied batch frame needs the onSession rebind;
-    // round-tripping the corpus-sized overlay through RDD rows would
-    // pay a full decode/re-encode per micro-batch for nothing.
-    val base = DedupQueries.truncatedDf(
-      state(s, dir, below = batchId), eager = true)
-    DedupQueries.ccApplyDelta(s, base, onSession(s, b), deltaOnly = true)
+    // The overlay is read lazily from parquet, built directly ON the cc
+    // session: the fold reads it only through a keyed probe of the
+    // batch's endpoints and a pass-through of the rows whose canonical
+    // moved, so no corpus-sized checkpoint is written per micro-batch.
+    DedupQueries.ccApplyDelta(s, state(s, dir, below = batchId), edges,
+      deltaOnly = true)
       // r21: NO rebalance on the per-batch layer (measured: the extra
       // exchange costs more than the small files it saves at batch
       // cadence; corpus-sized writes — init/compaction — do rebalance)

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import graft.operators.DedupGate
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.operators.{DedupGate, DedupQueries}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType}
 
 /** The dedup gate's PRODUCTION posture wired through Structured
   * Streaming — ST7's per-batch loop end-to-end (reference contract:
@@ -30,6 +31,21 @@ import org.apache.spark.sql.functions._
   * argument of [[DedupGate.classifyStoredDeltas]]. Commit markers,
   * redelivery safety, the single-writer contract and the compaction
   * policy are the store protocol's, documented once on [[StoreFs]].
+  *
+  * TWO ARMS per batch, chosen by its row count against
+  * [[graft.operators.DedupQueries.DriverRows]] (a fixed constant):
+  *  - an INGEST-SIZED batch (at most that many rows) is collected once
+  *    and classified from a local relation; string uids get their
+  *    minted `arrival` over the collected rows; the classified
+  *    outcomes are collected into a local relation too, so the
+  *    twin-chain walk ([[DedupGate.resolveTargets]]) runs on the
+  *    driver, and each of the three layers is written as one file.
+  *    Driver memory: the batch's rows and their outcome rows, twice
+  *    the cap at most.
+  *  - a LARGER batch (a backfill tranche) is localCheckpointed, and so
+  *    are its outcomes; the chain walk and the writes run distributed.
+  * Both arms write the same layers with the same rows (StreamingSpec
+  * pins the loop against the batch path and the oracle against SQL).
   */
 object GateStoreLoop {
 
@@ -62,19 +78,21 @@ object GateStoreLoop {
       batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
     // the gate DAG reads the batch from several branches (probe,
-    // self-join, meta attach) — localCheckpoint pins the micro-batch's
-    // rows and truncates the streaming lineage so every branch re-reads
-    // materialized partitions (bounded: one ingest batch)
-    val b0 = batch.localCheckpoint(true)
-    if (b0.isEmpty) return
+    // self-join, meta attach), so the micro-batch is pinned once: an
+    // ingest-sized batch is collected into a local relation (every
+    // branch plans from driver memory, and an empty batch is seen
+    // without a job of its own); a larger one is localCheckpointed,
+    // which also truncates the streaming lineage
+    val local = DedupQueries.onDriver(batch)
+    if (local.exists(_.isEmpty)) return
     // String uids carry no arrival order, and outcomesDelta REFUSES
     // them without one (lexicographic order silently diverges from
     // serial semantics — "doc9" > "doc10"). The stream loop is the one
     // place arrival is derivable rather than declared: a minted
-    // PARTITION-MAJOR row id (monotonically_increasing_id puts the
-    // partition index in the high bits, so order is by partition
-    // first, position within it second — true arrival order only for
-    // a single-partition batch; a multi-partition source such as a
+    // PARTITION-MAJOR row number (the collected rows' order, or
+    // monotonically_increasing_id on the checkpointed batch — partition
+    // first, position within it second; true arrival order only for a
+    // single-partition batch; a multi-partition source such as a
     // several-partition Kafka topic gets partition order) stands in
     // for the order the reference would process this batch in, and
     // CROSS-batch order is already carried by generation visibility
@@ -96,22 +114,35 @@ object GateStoreLoop {
     // attribution should mint monotone uids upstream (the reference's
     // own posture). An explicit caller-provided arrival column wins
     // over the minted one.
-    val b =
-      if (!b0.columns.contains("arrival") &&
-          b0.schema("uid").dataType ==
-            org.apache.spark.sql.types.StringType)
-        b0.withColumn("arrival", monotonically_increasing_id())
-      else b0
+    val mint = !batch.columns.contains("arrival") &&
+      batch.schema("uid").dataType == StringType
+    val b = local match {
+      case Some(rows) if mint =>
+        DedupQueries.localFrame(spark,
+          batch.schema.add("arrival", LongType, nullable = false),
+          rows.toSeq.zipWithIndex.map { case (r, i) =>
+            Row.fromSeq(r.toSeq :+ i.toLong) })
+      case Some(rows) => DedupQueries.localFrame(spark, batch.schema, rows)
+      case None =>
+        val pinned = batch.localCheckpoint(true)
+        if (mint) pinned.withColumn("arrival", monotonically_increasing_id())
+        else pinned
+    }
     val (g, ids) = storeFs.resolve(spark, dir, below = batchId)
     val (base, gens) = layers(spark, dir, g, ids)
-    // materialize the classification ONCE (ingest-sized, bounded): the
-    // outcome frame is read back by resolveTargets' convergence probes
-    // and by all three artifact writes — without the pin each of those
-    // actions would re-run the corpus probe, turning one gate pass into
-    // five
-    val outcomes = DedupGate.classifyStoredDeltas(
+    // materialize the classification ONCE (batch-sized): the outcome
+    // frame is read back by resolveTargets and by all three artifact
+    // writes — without the pin each of those actions would re-run the
+    // corpus probe, turning one gate pass into five. An ingest-sized
+    // batch collects its outcomes into a local relation (so the twin
+    // walk and the writes plan from driver memory); a larger one
+    // localCheckpoints them.
+    val classified = DedupGate.classifyStoredDeltas(
       b, base, gens.map(l => (l._2, l._3)), numBands, rowsPerBand)
-      .localCheckpoint(true)
+    val outcomes =
+      if (local.isDefined)
+        DedupQueries.localFrame(spark, classified.schema, classified.collect())
+      else classified.localCheckpoint(true)
     // archive flips travel a separate maintenance channel; the stream
     // loop itself retires nodes only via version replacement
     val noFlips = outcomes.select(col("matched_node_id").as("node_id"))
@@ -129,11 +160,14 @@ object GateStoreLoop {
     // either way; file sizing matters on the CORPUS-sized writes (init
     // and compaction, which StoreFs rebalances). Generation fan-in is
     // bounded by maxOpenGenerations, so small gen files stay a bounded
-    // read cost by construction.
+    // read cost by construction. An ingest-sized batch writes each
+    // layer as ONE file (a coalesce, no exchange): every later read of
+    // the generation opens one file per layer.
+    def layer(df: DataFrame) = if (local.isDefined) df.coalesce(1) else df
     val gen = storeFs.genDir(dir, batchId)
-    outcomes.write.mode("overwrite").parquet(s"$gen/outcomes")
-    append.write.mode("overwrite").parquet(s"$gen/delta")
-    tombs.write.mode("overwrite").parquet(s"$gen/tombs")
+    layer(outcomes).write.mode("overwrite").parquet(s"$gen/outcomes")
+    layer(append).write.mode("overwrite").parquet(s"$gen/delta")
+    layer(tombs).write.mode("overwrite").parquet(s"$gen/tombs")
   }
 
   /** Fold the open generations below `upTo` into a new base when their

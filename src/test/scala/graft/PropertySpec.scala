@@ -175,6 +175,157 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("ccApplyDelta: the driver arm (union-find) equals the distributed " +
+    "arm (fixed-point loop) on random graphs, an empty delta, bridge " +
+    "merges, cycles and string ids, with and without deltaOnly") {
+    import graft.operators.DedupQueries
+    val s = DedupQueries.ccSession(spark)
+    val sq = s.sqlContext; import sq.implicits._
+    def frame(pairs: Seq[(Long, Long)]) =
+      DedupQueries.truncatedDf(pairs.toDF("a_id", "b_id"), eager = true)
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.get(0).toString, r.get(1).toString))
+        .toSeq.sorted
+    // ids rendered as fixed-width digit strings keep the numeric order
+    def pad(v: Long) = f"$v%06d"
+    def check(base: Seq[(Long, Long)], delta: Seq[(Long, Long)],
+        what: String): Unit = {
+      val assign = DedupQueries.truncatedDf(
+        DedupQueries.ccAssignments(frame(base)), eager = true)
+      val d = frame(delta)
+      // the string-id store: the same graph under padded string ids
+      val sAssign = assign.collect()
+        .map(r => (pad(r.getLong(0)), pad(r.getLong(1)))).toSeq
+        .toDF("doc_id", "canonical_id")
+      val sDelta = delta.map { case (a, b) => (pad(a), pad(b)) }
+        .toDF("a_id", "b_id")
+      for (deltaOnly <- Seq(false, true)) {
+        val dist = rowsOf(
+          DedupQueries.ccFoldDistributed(s, assign, d, deltaOnly))
+        val local = rowsOf(
+          DedupQueries.ccFoldOnDriver(s, assign, d.collect(), deltaOnly))
+        assert(local == dist, s"$what (deltaOnly=$deltaOnly): driver arm " +
+          s"${local.diff(dist).take(5)} vs distributed " +
+          s"${dist.diff(local).take(5)}")
+        // string ids take the driver arm through the dispatcher; the
+        // distributed arm's numeric checksum cannot run them, so they
+        // compare against the long-id run rendered as strings
+        val strings = rowsOf(
+          DedupQueries.ccApplyDelta(s, sAssign, sDelta, deltaOnly))
+        assert(strings == dist.map { case (v, c) =>
+            (pad(v.toLong), pad(c.toLong)) }.sorted,
+          s"$what (deltaOnly=$deltaOnly): string ids diverged")
+      }
+      // the full fold is one-shot CC on the union
+      val oneShot = rowsOf(DedupQueries.ccAssignments(frame(base ++ delta)))
+      val full = rowsOf(DedupQueries.ccApplyDelta(s, assign, d))
+      assert(full == oneShot,
+        s"$what: the full fold diverged from one-shot CC on the union")
+    }
+    def randomEdges(n: Int, from: Int, to: Int) =
+      Seq.fill(n)((from + rnd.nextInt(to - from) + 1L,
+        from + rnd.nextInt(to - from) + 1L)).filter(e => e._1 != e._2)
+    for (i <- 1 to 3)
+      check(randomEdges(40, 0, 50), randomEdges(15, 0, 70), s"random graph $i")
+    check(randomEdges(30, 0, 40), Nil, "empty delta")
+    // new vertex 20 bridges {1,2} and {3,4}; 4-10 bridges base to base
+    check(Seq((1L, 2L), (3L, 4L), (10L, 11L)),
+      Seq((2L, 20L), (20L, 3L), (4L, 10L)), "bridge merges")
+    // a new vertex SMALLER than the stored canonicals takes them over
+    check(Seq((5L, 6L), (7L, 8L)), Seq((1L, 6L), (1L, 8L)),
+      "new minimum takes over two components")
+    // a cycle of new vertices, and a cycle through three base components
+    check(Seq((2L, 3L), (10L, 12L), (20L, 21L)),
+      Seq((100L, 101L), (101L, 102L), (102L, 100L),
+        (3L, 12L), (12L, 21L), (21L, 3L)), "cycles")
+  }
+
+  test("resolveTargets: the driver walk equals the pointer-jumping arm " +
+    "on the chain fixture, a 100-deep chain, random twin forests and an " +
+    "unresolved chain — which outcomesDelta still refuses loudly") {
+    import graft.operators.DedupGate
+    def bothArms(rows: Seq[(Long, String, Option[Long], Option[Long])]) = {
+      val links = DedupGate.twinLinks(
+        rows.toDF("uid", "outcome", "matched_node_id", "batch_twin"))
+      def read(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(r => (r.getLong(0), r.getString(1),
+          Option(r.get(2)).map(_.asInstanceOf[Long]))).toSeq.sortBy(_._1)
+      val walked = read(DedupGate.walkTwinChains(links, links.collect()))
+      val jumped = read(DedupGate.jumpTwinChains(links))
+      assert(walked == jumped,
+        s"driver walk ${walked.diff(jumped).take(5)} vs pointer jumping " +
+          s"${jumped.diff(walked).take(5)}")
+      walked.map(r => r._1 -> r._3).toMap
+    }
+    // StoreLoopSpec's chain fixture
+    val fixture = bothArms(Seq(
+      (101L, "new", None, None),
+      (102L, "version", None, Some(101L)),
+      (103L, "version", None, Some(102L)),
+      (104L, "version", Some(40L), None),
+      (105L, "version", None, Some(104L)),
+      (106L, "duplicate", None, Some(105L))))
+    assert(fixture == Map(101L -> Some(101L), 102L -> Some(101L),
+      103L -> Some(101L), 104L -> Some(40L), 105L -> Some(40L),
+      106L -> Some(40L)))
+    // 100-deep chains: one rooted at a new doc, one at a corpus node
+    val deep = bothArms(
+      ((1L, "new", None, None) +: (2L to 100L).map(u =>
+        (u, "version", None, Some(u - 1)))) ++
+      ((201L, "version", Some(40L), None) +: (202L to 300L).map(u =>
+        (u, "duplicate", None, Some(u - 1)))))
+    assert((1L to 100L).forall(deep(_) == Some(1L)) &&
+      (201L to 300L).forall(deep(_) == Some(40L)))
+    // random forests: twins are always lower uids; a few point at a uid
+    // absent from the frame, leaving their whole subtree unresolved
+    for (_ <- 1 to 3) bothArms((1L to 200L).map { u =>
+      rnd.nextInt(10) match {
+        case 0 | 1 | 2 => (u, "new", None, None)
+        case 3 | 4 => (u, "version", Some(1000L + rnd.nextInt(50)), None)
+        case 5 if u > 1 => (u, "duplicate", None, Some(-1L - u))
+        case _ if u > 1 =>
+          (u, "version", None, Some(1L + rnd.nextInt(u.toInt - 1)))
+        case _ => (u, "new", None, None)
+      }
+    })
+    // unresolved: 102's twin 999 is absent, so both arms leave it null
+    val unresolved = Seq((102L, "version", None: Option[Long], Some(999L)))
+    assert(bothArms(unresolved) == Map(102L -> None))
+    val incoming = Seq((102L, (1L to 16L).toSeq, "en"))
+      .toDF("uid", "sig", "meta_key")
+    val (append, _) = DedupGate.outcomesDelta(incoming,
+      unresolved.toDF("uid", "outcome", "matched_node_id", "batch_twin"),
+      Seq.empty[Long].toDF("node_id"), 4, 4)
+    val e = intercept[Exception] { append.count() }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => Option(t.getMessage).exists(
+          _.contains("unresolved twin chain"))),
+      s"outcomesDelta must raise the twin-chain error, got: $e")
+  }
+
+  test("cdc_chunks hashes each chunk exactly as md5(substr(text, start, " +
+    "clen)) on ASCII, multibyte and 4-byte text, and yields no chunk for " +
+    "empty or null text") {
+    val docs = (1 to 200).map { i =>
+      val len = rnd.nextInt(700)
+      val text = i % 3 match {
+        case 0 => Seq.fill(len)(('a' + rnd.nextInt(26)).toChar).mkString
+        case 1 => Seq.fill(len)("aé中b"(rnd.nextInt(4))).mkString
+        case _ => Seq.fill(len)(Seq("x", "ü", "\uD83D\uDE00",
+          "q")(rnd.nextInt(4))).mkString
+      }
+      (i.toLong, text)
+    } ++ Seq((1001L, ""), (1002L, null: String))
+    val df = docs.toDF("doc_id", "text")
+    val spans = graft.operators.CorpusQueries.cdcBoundedSpans(df)
+    val wrong = spans.join(df, "doc_id")
+      .filter(!($"chash" <=> md5($"text".substr($"start", $"clen"))))
+    assert(wrong.isEmpty, wrong.limit(3).collect().mkString(" | "))
+    assert(spans.filter($"doc_id" > 1000L).isEmpty,
+      "empty and null texts must yield no chunk")
+    assert(spans.count() > docs.size, "fixture must cut many chunks")
+  }
+
   private implicit class ToSorted(a: Array[(Long, Long)]) {
     def toSortedMap: Seq[(Long, Long)] = a.toSeq.sortBy(_._1)
   }

@@ -1167,6 +1167,51 @@ class StreamingSpec extends SparkSpec {
       "soak final CC assignment diverged from one-shot CC on the union")
   }
 
+  test("an ingest-sized batch runs the driver arms: one gate handleBatch " +
+    "and one CC handleBatch each start at most a stated number of Spark " +
+    "jobs, far below what the distributed loops start") {
+    import graft.streaming.{CcStoreLoop, GateStoreLoop}
+    val text = (i: Int) =>
+      s"job pin fixture $i carries words j${i}a j${i}b j${i}c tail ${i * 31}"
+    val gateDir = java.nio.file.Files.createTempDirectory("graft-gjobs").toString
+    GateStoreLoop.init(gateStore((1 to 18).map(i => i.toLong -> text(i))),
+      gateDir)
+    // new, version, duplicate and a within-batch twin of the new doc
+    val fresh = "a job pin batch document with words of its own zz yy"
+    val batch = gateBatch(Seq((801L, fresh, "en"), (802L, text(7), "xx"),
+      (803L, text(3), "en"), (804L, fresh, "en"))).localCheckpoint(true)
+    val (_, gateJobs) =
+      jobsDuring(GateStoreLoop.handleBatch(gateDir, 4, 4)(batch, 0L))
+    val outcomes = GateStoreLoop.outcomes(spark, gateDir)
+      .select("uid", "outcome").as[(Long, String)].collect().toMap
+    assert(outcomes == Map(801L -> "new", 802L -> "version",
+      803L -> "duplicate", 804L -> "duplicate"), s"outcomes $outcomes")
+    // every layer of the generation is one file
+    Seq("outcomes", "delta", "tombs").foreach { k =>
+      val files = new java.io.File(s"$gateDir/gen_0/$k").listFiles()
+        .map(_.getName).filter(_.endsWith(".parquet"))
+      assert(files.length == 1, s"gen_0/$k wrote ${files.length} files")
+    }
+    val ccDir = java.nio.file.Files.createTempDirectory("graft-cjobs").toString
+    CcStoreLoop.init(spark, Seq((1L, 2L), (3L, 4L), (10L, 11L))
+      .toDF("a_id", "b_id"), ccDir)
+    // a new vertex joins {1,2}, and {3,4} merges into {1,2}: both the
+    // local new-vertex rows and the moved-canonical pass-through run
+    val edges = Seq((2L, 20L), (4L, 1L)).toDF("a_id", "b_id")
+      .localCheckpoint(true)
+    val (_, ccJobs) = jobsDuring(CcStoreLoop.handleBatch(ccDir)(edges, 0L))
+    assert(CcStoreLoop.state(spark, ccDir).as[(Long, Long)].collect()
+      .sorted.toSeq == Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 1L),
+        (10L, 10L), (11L, 10L), (20L, 1L)))
+    // the driver arms start 22 and 5 jobs here (local[4]); forced onto
+    // the distributed loops the same batches start 30 and 25 — the
+    // checkpoints, pointer-jumping counts and checksum heads the driver
+    // arms replace
+    assert(gateJobs <= 26 && ccJobs <= 7,
+      s"gate handleBatch started $gateJobs jobs and CC handleBatch " +
+        s"$ccJobs — an ingest-sized batch must run the driver arms")
+  }
+
   test("reader during an in-flight compaction: an uncommitted base dir " +
       "is invisible to state(), and the committed fold flips resolution " +
       "atomically (the concurrency contract's reader half)") {
