@@ -140,16 +140,7 @@ object Bench {
       "bench_rich_last.json")
     System.err.println(
       s"[bench] rich artifact -> ${Paths.get(outFile).toAbsolutePath}")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.runnerSession(cpus)
     // Machine-health canary #1: host load BEFORE we add our own. A
     // loaded machine (driver running sbt test sweeps, another bench, …)
     // inflates every measurement ~uniformly; recording loadavg in-band
@@ -200,36 +191,22 @@ object Bench {
       .filter { case (n, _) => only.forall(_.contains(n)) }
     spark.sparkContext.addSparkListener(IoTally)
     import org.apache.spark.sql.graftbridge.Bridge
-    val heapThresholdKey =
-      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
     def timeOne(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Meas = {
-      // per-query threshold scope (r19): only a query whose plan holds
-      // the bounded TopKPairs aggregate runs with the raised
-      // ObjectHashAggregate fallback threshold — never sweep-global, so
-      // the unbounded collect_list/collect_set aggregates elsewhere keep
-      // their 128-key sort-based spill fallback; it is restored before
-      // the next measurement either way
-      val scopeHeap = graft.operators.SimilarityQueries.TopKHeapQueries(name)
-      val prevThreshold =
-        if (scopeHeap) Some(spark.conf.get(heapThresholdKey)) else None
-      if (scopeHeap) spark.conf.set(heapThresholdKey, "16777216")
-      // r20 (ADVICE): the restore lives in a finally — an exception
-      // escaping the post-measurement cleanup (clearCache/unpersist)
-      // must not leak the raised threshold into every later query's
-      // spill behavior
-      try {
       // the previous query's task-end events must be consumed before we
       // snapshot, or its tail IO lands in this query's delta
       Bridge.drainListenerBus(spark.sparkContext)
       val (sw0, sr0, sp0, tm0, tk0, jb0, sx0) = IoTally.snapshot
+      val conf0 = spark.conf.getAll
       val gc0 = gcMillis
       val h0 = heapUsedMb
       val t0 = System.nanoTime()
       var rows = -1L
       var dt = 0.0
       var exchanges = -1
-      val ok = try {
+      // the query's persists, checkpoints and conf overrides belong to
+      // one scope, which closes after the measured action
+      val ran = try Scope.run(spark) {
         val df = fn(spark, sfDir)
         rows = df.count()
         dt = (System.nanoTime() - t0) / 1e9
@@ -253,18 +230,16 @@ object Bench {
       val heapDelta = heapUsedMb - h0
       Bridge.drainListenerBus(spark.sparkContext)
       val (sw1, sr1, sp1, tm1, tk1, jb1, sx1) = IoTally.snapshot
-      // Queries that persist intermediates (the self-join dedup family)
-      // would otherwise accumulate storage across the run and skew later
-      // timings with eviction/GC pressure. Unpersist BLOCKING so the
-      // cleanup doesn't race the next timed query, then collect garbage
-      // between measurements.
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      // anything the closed scope left behind would skew every later
+      // measurement with storage, eviction or a changed setting: it
+      // fails the query
+      val leaks = Scope.leftBehind(spark, conf0)
+      if (leaks.nonEmpty)
+        System.err.println(s"[bench] $name LEFT BEHIND: ${leaks.mkString(", ")}")
       System.gc()
-      Meas(dt, ok, gcSec, heapDelta, rows, exchanges,
+      Meas(dt, ran && leaks.isEmpty, gcSec, heapDelta, rows, exchanges,
         (sw1 - sw0) / 1e6, (sr1 - sr0) / 1e6, (sp1 - sp0) / 1e6,
         (tm1 - tm0) / 1e3, tk1 - tk0, jb1 - jb0, sx1 - sx0)
-      } finally prevThreshold.foreach(spark.conf.set(heapThresholdKey, _))
     }
     val firstPass = selected.map { case (name, fn) =>
       val m = timeOne(name, fn)

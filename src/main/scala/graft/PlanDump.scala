@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Plan-capture utility for the optimization rounds: writes
@@ -13,8 +12,8 @@ import java.nio.file.{Files, Paths}
   *   SPARK_GRAFT_PLAN_OUT=plans/r21 SPARK_GRAFT_PLAN_SUFFIX=before \
   *     sbt "runMain graft.PlanDump q1,q2,..."   (or no args = all)
   *
-  * The session mirrors Bench's config (same master/shuffle settings),
-  * so the captured initial plan is the one the bench executes. AQE
+  * The session is Bench's ([[SparkEntry.runnerSession]]), so the
+  * captured initial plan is the one the bench executes. AQE
   * means the FINAL plan can differ (coalesced reads, runtime joins);
   * for queries where that matters the bench artifact's exchange count
   * is the executed-structure record.
@@ -25,32 +24,29 @@ object PlanDump {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PLAN_OUT", "plans/r21")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "before")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.runnerSession(cpus)
     Files.createDirectories(Paths.get(outDir))
     val only: Option[Set[String]] =
       args.headOption.map(_.split(",").map(_.trim).toSet)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
     selected.foreach { case (name, fn) =>
+      val conf0 = spark.conf.getAll
       try {
-        val df = fn(spark, sfDir)
-        val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        Files.writeString(Paths.get(outDir, s"${name}_$suffix.txt"), plan)
+        Scope.run(spark) {
+          val plan = fn(spark, sfDir).queryExecution.explainString(
+            org.apache.spark.sql.execution.FormattedMode)
+          Files.writeString(Paths.get(outDir, s"${name}_$suffix.txt"), plan)
+        }
         System.err.println(s"[plandump] $name -> $outDir/${name}_$suffix.txt")
       } catch {
         case scala.util.control.NonFatal(e) =>
           System.err.println(s"[plandump] $name FAILED: $e")
       }
+      val leaks = Scope.leftBehind(spark, conf0)
+      if (leaks.nonEmpty)
+        System.err.println(s"[plandump] $name FAILED: left behind " +
+          leaks.mkString(", "))
     }
     spark.stop()
   }

@@ -14,6 +14,22 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     operators.RelationalQueries.queries("q1_agg")(spark, "/root/testdata/sf0.001")
 
+  /** The local session the runners (Bench, Verify, PlanDump) share, so
+    * a plan one of them captures is the plan the bench executes. */
+  def runnerSession(cpus: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.adaptive.skewJoin.enabled", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     operators.RelationalQueries.queries ++

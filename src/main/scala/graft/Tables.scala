@@ -25,15 +25,23 @@ object Tables {
     * leaves min/max filter pushdown on date columns intact
     * (`PushedFilters` pins in PlanSpec cover q6/s10). */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    // set-if-different: an unconditional set() on every load invalidates
-    // Spark's session-level plan caches per query (measured ~1.5× on the
-    // whole bench sweep — every query re-pays analysis/codegen)
-    val k = "spark.sql.parquet.inferTimestampNTZ.enabled"
-    if (spark.conf.getOption(k).contains("true") ||
-        spark.conf.getOption(k).isEmpty)
-      spark.conf.set(k, "false")
+    reader(spark, "spark.sql.parquet.inferTimestampNTZ.enabled")
     spark.read.parquet(s"$sfDir/$name.parquet")
   }
+
+  /** The session-wide reader settings [[load]] and [[events]] apply.
+    * They are set if different and then left set, never scoped per
+    * query: an unconditional set() on every load invalidates Spark's
+    * session-level plan caches (measured ~1.5× on the whole bench sweep —
+    * every query re-pays analysis/codegen), and restoring them after
+    * each query would do the same. [[Scope.leftBehind]] skips them. */
+  val readerConf: Map[String, String] = Map(
+    "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true")
+
+  private def reader(spark: SparkSession, key: String): Unit =
+    if (!spark.conf.getOption(key).contains(readerConf(key)))
+      spark.conf.set(key, readerConf(key))
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")
@@ -51,9 +59,7 @@ object Tables {
     * current testdata has, the right branch runs.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    if (!s.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-        .contains("true"))
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    reader(s, "spark.sql.legacy.parquet.nanosAsLong")
     val df = load(s, d, "events")
     df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,16 +9,7 @@ object Verify {
     // the dir this run actually reads (see SourceSinkQueries.VerifySfDir).
     System.setProperty("graft.verify.sfDir", sfDir)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.runnerSession(cpus)
     new java.io.File(outDir).mkdirs()
     // Dev aid: SPARK_GRAFT_VERIFY_ONLY=q1,q2 dumps just those queries
     // (the driver never sets it, so its runs stay exhaustive).
@@ -29,9 +19,11 @@ object Verify {
       only.forall(_.contains(n))
     }
     selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch {
+      val out = s"$outDir/$name"
+      val conf0 = spark.conf.getAll
+      try Scope.run(spark) {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(out)
+      } catch {
         // NonFatal only (r20 review, the Bench policy): swallowing an
         // OOM/LinkageError would keep the sweep running on a broken JVM
         // — later queries fail spuriously or write short dumps, the
@@ -40,10 +32,15 @@ object Verify {
         case scala.util.control.NonFatal(e) =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      spark.catalog.clearCache()
-      // localCheckpoint RDDs (dd_cluster_cc) bypass the CacheManager, so
-      // clearCache() alone would pin their blocks for the rest of the sweep
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      // the query's scope has closed: anything it left behind fails the
+      // query, and its dump is removed so the oracle compare reports it
+      val leaks = Scope.leftBehind(spark, conf0)
+      if (leaks.nonEmpty) {
+        System.err.println(s"[verify] $name failed: left behind " +
+          leaks.mkString(", "))
+        val p = new org.apache.hadoop.fs.Path(out)
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+      }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.Scope
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -307,10 +308,10 @@ object Vectors {
             Integer.valueOf(derived)
           } else {
             val bCap = math.min(MaxSignBits, derived + 8)
-            val occ = frame.select(signBucket(v, bCap).as("bk"))
-              .groupBy("bk").agg(count(lit(1)).as("c"))
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
+            Scope.run(frame.sparkSession) {
+              val occ = Scope.persist(frame
+                .select(signBucket(v, bCap).as("bk"))
+                .groupBy("bk").agg(count(lit(1)).as("c")))
               val bound = SkewPairFactor * (TargetBucketRows - 1) * n
               def pairsAt(b: Int): Long = occ
                 .groupBy(col("bk").bitwiseAND(lit((1L << b) - 1)).as("m"))
@@ -335,7 +336,7 @@ object Vectors {
                   s"$bound (n=$n) — the corpus' leading-component signs are " +
                   s"pathologically skewed, so sign-LSH blocking cannot " +
                   s"bound its candidate stream."))
-            } finally occ.unpersist()
+            }
           }
       }
     }).intValue

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Scope, Tables}
 import graft.functions.Texts
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -274,10 +274,9 @@ object CorpusQueries {
       // without this the census + trim filter re-run per consumer (the
       // "persisted once and feeds all downstream stages" posture
       // SCALE.md describes for deployment)
-      val trimmed = docs.crossJoin(broadcast(bounds))
+      val trimmed = Scope.persist(docs.crossJoin(broadcast(bounds))
         .filter(col("n_chars").between(col("lo"), col("hi")))
-        .select(col("doc_id"), col("lang"), col("text"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .select(col("doc_id"), col("lang"), col("text")))
       // stage 2: benchmark decontamination (see dd_decontaminate — the
       // bench slice comes from the FULL corpus, not the trimmed one)
       // native distinct grams (r21, guide §4) — one compiled pass in

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Scope
 import graft.functions.Hashes
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -92,9 +93,7 @@ object DedupGate {
     val w = org.apache.spark.sql.expressions.Window.partitionBy("sig")
     val m = incoming.select(col("uid"), col("sig"))
       .withColumn("cls", min("uid").over(w))
-    if (cache)
-      m.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else m
+    if (cache) Scope.persist(m) else m
   }
 
   /** One row per signature class, under the probe's id column name:
@@ -134,17 +133,13 @@ object DedupGate {
     *        banded probe would exceed the broadcast limit; the join
     *        then falls back to a keyed shuffle.
     *
-    *        CACHE LIFECYCLE (r22, documenting the r21 ADVICE finding):
-    *        this variant persists one ingest-batch-sized frame per call
-    *        (sigClassMembers, MEMORY_AND_DISK) and returns a lazy frame
-    *        that reads it; there is no unpersist hook inside the
-    *        operator because the result's consumption point is the
-    *        caller's. The Bench/Verify runners release it in their
-    *        per-query sweep (clearCache + getPersistentRDDs.unpersist);
-    *        a LONG-LIVED session calling classify per batch must do the
-    *        same after consuming each result, or one cached frame (and
-    *        its disk blocks) accumulates per invocation. The streaming
-    *        store loops are unaffected — they route through
+    *        CACHE LIFECYCLE: this variant persists one
+    *        ingest-batch-sized frame per call (sigClassMembers) with
+    *        the caller's [[graft.Scope]] and returns a lazy frame that
+    *        reads it, so the caller consumes the result inside that
+    *        scope, which then releases the frame: a long-lived session
+    *        calling classify per batch holds at most one such frame per
+    *        open scope. The streaming store loops route through
     *        classifyStored*, whose postures measured FASTER with no
     *        cache and never persist here. */
   def classify(incoming: DataFrame, corpus: DataFrame,
@@ -589,13 +584,13 @@ object DedupGate {
     // previous round's materialized rows, and consumers read the final
     // checkpoint.
     val unresolved = col("target").isNull && col("twin").isNotNull
-    var t = DedupQueries.truncatedDf(links, eager = false)
+    var t = Scope.checkpoint(links, eager = false)
     var rounds = 0
     var pending = t.filter(unresolved).count()
     while (rounds < 64 && pending > 0) {
       val hop = DedupQueries.reidDf(t).select(col("uid").as("twin"),
         col("target").as("twin_target"), col("twin").as("twin_twin"))
-      t = DedupQueries.truncatedDf(t.join(hop, Seq("twin"), "left")
+      t = Scope.checkpoint(t.join(hop, Seq("twin"), "left")
         .select(col("uid"), col("outcome"),
           coalesce(col("target"), col("twin_target")).as("target"),
           when(col("target").isNull && col("twin_target").isNull,

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Scope, Tables}
 import graft.functions.{Hashes, Texts, Vectors}
 import graft.streaming.StreamDedup
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
@@ -114,8 +114,8 @@ object DedupQueries {
     * document frequency (then lexicographic) — (rep_id[, lang], ows) —
     * plus the PERSISTED per-token document-frequency frame it is built
     * from — `(tok[, lang], df)`, one row per distinct (token[, lang]).
-    * The caller owns both handles: it persists the ordered frame (it
-    * feeds both sides of the candidate self-join) and releases both.
+    * The caller persists the ordered frame (it feeds both sides of the
+    * candidate self-join).
     * r22 (guide §2.3/§2.4): the df frame is exactly the corpus
     * vocabulary, so the xxhash64 injectivity guard in
     * [[jaccardPrefixPairs]] derives from it with a vocabulary-sized
@@ -123,18 +123,17 @@ object DedupQueries {
     * explode + distinct exchange — the df pass computes the vocabulary
     * anyway; folding the guard in drops one token-level exchange from
     * every prefix-filter query. The persist is vocabulary-sized (tiny
-    * next to the token stream) and lazy; the `ordered` build
-    * materializes it as a side effect, and the runners' cache sweep
-    * releases it with the rest of the family's persists. */
+    * next to the token stream) and registered with the caller's
+    * [[graft.Scope]], which releases it with the rest of the family's
+    * persists. */
   private[graft] def orderedPrefixWithDfreq(reps: DataFrame,
       byLang: Boolean): (DataFrame, DataFrame) = {
-    import org.apache.spark.storage.StorageLevel
     val toks =
       if (byLang) reps.select(col("rep_id"), col("lang"), explode(col("ws")).as("tok"))
       else reps.select(col("rep_id"), explode(col("ws")).as("tok"))
     val dfKeys = if (byLang) Seq("lang", "tok") else Seq("tok")
-    val dfreq = toks.groupBy(dfKeys.map(col): _*).agg(count(lit(1)).as("df"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val dfreq = Scope.persist(
+      toks.groupBy(dfKeys.map(col): _*).agg(count(lit(1)).as("df")))
     val sorted = sort_array(collect_list(struct(col("df"), col("tok")))).as("o")
     val grouped =
       if (byLang) toks.join(dfreq, dfKeys).groupBy("rep_id")
@@ -236,15 +235,13 @@ object DedupQueries {
       // are unreachable on any test vocabulary)
       idOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
         c => xxhash64(c)): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     val gk = if (byLang) Seq("fp", "lang") else Seq("fp")
-    val sets = fingerprinted(docs).persist(StorageLevel.MEMORY_AND_DISK)
-    val groups = setGroups(sets, byLang).persist(StorageLevel.MEMORY_AND_DISK)
+    val sets = Scope.persist(fingerprinted(docs))
+    val groups = Scope.persist(setGroups(sets, byLang))
     // membership (rep_id, doc_id) — one window over the set key; slim
     // rows only from here down
-    val mem = sets.select(col("doc_id"),
-      min("doc_id").over(Window.partitionBy(gk.map(col): _*)).as("rep_id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val mem = Scope.persist(sets.select(col("doc_id"),
+      min("doc_id").over(Window.partitionBy(gk.map(col): _*)).as("rep_id")))
 
     val (wa, wb, wkeys) =
       Skew.saltedSelfJoinSides(mem, Seq("rep_id"), "doc_id", 8)
@@ -262,7 +259,7 @@ object DedupQueries {
     // (guide §2.4).
     val (ordered0, dfreq) =
       orderedPrefixWithDfreq(groups.select(repCols: _*), byLang)
-    val ordered = ordered0.persist(StorageLevel.MEMORY_AND_DISK)
+    val ordered = Scope.persist(ordered0)
     val cand = candidatesOverOrdered(ordered, t, byLang)
     // r15: the verify arrays are dictionary-ENCODED to sorted 64-bit
     // token ids before they ride the candidate joins. At the ~sf10 text
@@ -341,11 +338,9 @@ object DedupQueries {
 
   /** Shared 256-perm LSH probe + verify for the native signature paths.
     *
-    * Cache lifecycle: the returned frame references persisted
-    * intermediates; the caller owns their release (the Bench/Verify
-    * runners `clearCache()` after consuming each query — do the same in
-    * long-lived sessions).
-    *
+    * Cache lifecycle: the returned frame reads a frame persisted in the
+    * caller's [[graft.Scope]], so the caller consumes it before that
+    * scope closes.
     *
     *  1. persist the (doc_id, sig) table — the signature is the expensive
     *     pass and the graph below uses it three times (two band sides +
@@ -362,7 +357,7 @@ object DedupQueries {
     * (check_duplicate.py:91-92); slice() clamps, giving the same band. */
   private def bandPairJoin(sigDf: DataFrame, numBands: Int, rowsPerBand: Int,
       threshold: Double): DataFrame = {
-    val sig = sigDf.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sig = Scope.persist(sigDf)
     val banded = sig.select(col("doc_id"),
       explode(Hashes.bands(col("sig"), numBands, rowsPerBand)).as("band"))
       .select(col("doc_id"), col("band.band_id"), col("band.band_key"))
@@ -406,25 +401,6 @@ object DedupQueries {
     s
   }
 
-  /** Lineage truncation with a recovery posture: localCheckpoint blocks
-    * live only on executors, so on a real cluster one lost executor
-    * kills the whole job mid-loop. When the context has a RELIABLE
-    * checkpoint dir configured (sc.setCheckpointDir onto fault-tolerant
-    * storage), truncate through checkpoint() instead — every frame we
-    * truncate is contraction-residue-sized, so the per-round write is
-    * tiny next to the shuffles it protects. Locally (no dir) fall back
-    * to executor-local checkpoints, which are faster and fine in a
-    * single-JVM test run. RETENTION: Spark removes reliable checkpoint
-    * files only when `spark.cleaner.referenceTracking.cleanCheckpoints`
-    * is true (off by default); every call here writes one, so a
-    * long-lived stream that sets a checkpoint dir must also set that
-    * conf, or the dir grows by one checkpoint per truncation per
-    * micro-batch. */
-  private[graft] def truncatedDf(df: DataFrame, eager: Boolean): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-      df.checkpoint(eager)
-    else df.localCheckpoint(eager)
-
   /** Fresh attribute ids for re-referenced checkpointed frames: a
     * checkpoint keeps its exprIds, and joining the same relation twice
     * in one plan trips InferFiltersFromConstraints (observed
@@ -447,7 +423,8 @@ object DedupQueries {
       .filter(!(isBase(col("a_id")) && isBase(col("b_id"))))
     // the stored assignment, as written at T0 (before the delta tranche):
     // materialized because the fold reads it twice (probe, pass-through)
-    val baseAssign = truncatedDf(ccAssignments(baseEdges), eager = true)
+    val baseAssign = Scope.checkpoint(ccAssignments(baseEdges),
+      eager = true)
     ccApplyDelta(s, baseAssign, deltaEdges)
   }
 
@@ -616,13 +593,13 @@ object DedupQueries {
     // broadcast, a backfill tranche degrades to a keyed join instead of
     // OOMing — the same de-hinted posture as CcStoreLoop.state's
     // overlay anti-joins, probe_fallback_store_*.json).
-    val deltaVerts = truncatedDf(
+    val deltaVerts = Scope.checkpoint(
       deltaEdges.select(col("a_id").as("v"))
         .unionByName(deltaEdges.select(col("b_id").as("v")))
         .distinct(), eager = false)
     // endpoint → stored canonical, for the endpoints present in the
     // base (delta-sized output; the only corpus-keyed join of the fold)
-    val em = truncatedDf(
+    val em = Scope.checkpoint(
       bmap.join(deltaVerts, Seq("v")).select(col("v"), col("c")),
       eager = false)
     // contract delta-edge endpoints onto stored canonicals (self where
@@ -637,7 +614,7 @@ object DedupQueries {
         coalesce(col("cb"), col("b_id")).as("b_id"))
       .filter(col("a_id") =!= col("b_id"))
       .distinct()
-    val cAssign = ccAssignments(truncatedDf(contraction, eager = true))
+    val cAssign = ccAssignments(Scope.checkpoint(contraction, eager = true))
       .select(col("doc_id").as("cnode"), col("canonical_id").as("fin"))
     // every vertex of the merged graph, as base-pass-through ∪ new
     // arrivals: a base vertex's contraction node is its stored
@@ -666,7 +643,7 @@ object DedupQueries {
     * Boruvka-style contraction + fixed-point loop shared by
     * dd_cluster_cc (one-shot) and dd_cluster_cc_delta (per-batch
     * contraction-graph resolve). `pairs` must be (a_id, b_id) edges
-    * ALREADY materialized (truncatedDf(_, eager = true)) — the
+    * ALREADY materialized (Scope.checkpoint(_, eager = true)) — the
     * symmetric union below references it on both sides. `edges` must
     * BELONG to a ccSession (plans execute under the session a frame was
     * built on, so passing a session alongside the frame could not
@@ -682,18 +659,15 @@ object DedupQueries {
       "ccAssignments: edges must be built on a ccSession frame — the " +
         "caller's session lacks the InferFiltersFromConstraints " +
         "exclusion this loop's checkpoint reuse depends on")
-    implicit class Truncated(df: DataFrame) {
-      def truncated(eager: Boolean): DataFrame = truncatedDf(df, eager)
-    }
       // Symmetric edge list, pre-shuffled on the probe key and CACHED in
       // that layout: every round's hop join reads the cached hash-
       // partitioned blocks and only exchanges the (vertex-sized) label
       // side — the edge list, the big side at 100 TB, crosses the wire
       // exactly once for the whole fixed-point loop.
-      val sym = edges.select(col("a_id").as("src"), col("b_id").as("dst"))
-        .unionByName(edges.select(col("b_id").as("src"), col("a_id").as("dst")))
-        .repartition(col("src"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val sym = Scope.persist(
+        edges.select(col("a_id").as("src"), col("b_id").as("dst"))
+          .unionByName(edges.select(col("b_id").as("src"), col("a_id").as("dst")))
+          .repartition(col("src")))
 
       // Borůvka-style contraction FIRST: collapse every vertex onto the
       // min of its closed neighborhood (one edge-sized aggregation), then
@@ -702,10 +676,10 @@ object DedupQueries {
       // this step; only the chain-y residue (a tiny fraction of vertices)
       // enters the fixed-point loop, so every loop round shuffles a
       // contracted graph orders of magnitude smaller than the raw one.
-      val labels0 = sym.groupBy("src")
+      val labels0 = Scope.checkpoint(sym.groupBy("src")
         .agg(min("dst").as("mn"))
-        .select(col("src").as("id"), least(col("src"), col("mn")).as("comp"))
-        .truncated(true)
+        .select(col("src").as("id"), least(col("src"), col("mn")).as("comp")),
+        eager = true)
       // (exprId rebinding rationale lives on reidDf)
       def reid(df: org.apache.spark.sql.DataFrame) = reidDf(df)
       // LAZY checkpoints from here down: every materialization below is
@@ -714,19 +688,18 @@ object DedupQueries {
       // instead of the former two (eager checkpoint, then a separate
       // agg). The loop is all fixed per-round job overhead at test scale,
       // so halving the job count halves the loop's wall time.
-      val cEdges = sym
+      val cEdges = Scope.checkpoint(sym
         .join(labels0.select(col("id").as("src"), col("comp").as("csrc")), "src")
         .join(reid(labels0).select(col("id").as("dst"), col("comp").as("cdst")),
           "dst")
         .select(col("csrc").as("src"), col("cdst").as("dst"))
         .filter(col("src") =!= col("dst"))
-        .distinct()
-        .truncated(false)
+        .distinct(), eager = false)
 
-      var labels = cEdges.groupBy("src")
+      var labels = Scope.checkpoint(cEdges.groupBy("src")
         .agg(min("dst").as("mn"))
-        .select(col("src").as("id"), least(col("src"), col("mn")).as("comp"))
-        .truncated(false)
+        .select(col("src").as("id"), least(col("src"), col("mn")).as("comp")),
+        eager = false)
       var converged = false
       var rounds = 0
       // Convergence via a monotone checksum: every per-vertex comp is
@@ -754,7 +727,7 @@ object DedupQueries {
               col("comp").as("comp2")).alias("y"), Seq("comp"), "left")
             .select(col("id"),
               least(col("comp"), coalesce(col("comp2"), col("comp"))).as("comp"))
-        val next = jump(hop(labels)).truncated(false)
+        val next = Scope.checkpoint(jump(hop(labels)), eager = false)
         val nextSum = next.agg(coalesce(sum("comp"), lit(0L))).head.getLong(0)
         labels = next
         converged = nextSum == checksum
@@ -769,14 +742,8 @@ object DedupQueries {
       // contraction plus hop+pointer-jump resolves any residue whose
       // component diameter fits in ~2^20 — unreachable for real dup
       // graphs, so tripping this means a logic regression, not data.
-      // sym's cached blocks have served their purpose either way: every
-      // frame the returned plan references (labels0, labels) is a
-      // materialized checkpoint by the time the checksum loop exits, so
-      // release the corpus-scale edge cache BEFORE the convergence
-      // verdict (r20 review: the non-convergence throw used to skip the
-      // unpersist, pinning one corpus-sized cache per failed invocation
-      // into the shared context for callers that catch and continue).
-      sym.unpersist(false)
+      // (The throw leaks nothing: sym and every round's checkpoint
+      // belong to the caller's scope.)
       if (!converged)
         throw new IllegalStateException(
           s"ccAssignments: fixed point not reached after $rounds rounds " +
@@ -985,9 +952,8 @@ object DedupQueries {
       def grams(df: DataFrame) = df
         .select(col("doc_id"), explode(
           graft.plans.Native.dist_word_ngrams(col("text"), 8)).as("gram"))
-      val benchGrams = grams(docs.filter(col("doc_id") < 20))
-        .select("gram").distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val benchGrams = Scope.persist(grams(docs.filter(col("doc_id") < 20))
+        .select("gram").distinct())
       // 1e6 expected items ≫ any eval set; 1% fpp → ~1.2 MB of bits
       val bf = benchGrams.stat.bloomFilter("gram", 1000000L, 0.01)
       val bits = {
@@ -1075,9 +1041,8 @@ object DedupQueries {
       // executed twice per run. Same posture bandPairJoin (the native
       // variants) has had since r14; the cc family's edge builds
       // (dd_cluster_cc{,_delta,_stream}) inherit the saving.
-      val sig = MinHashPipeline.signatures(
-        Tables.documents(s, d), "doc_id", col("text"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val sig = Scope.persist(MinHashPipeline.signatures(
+        Tables.documents(s, d), "doc_id", col("text")))
       val banded = sig.select(col("doc_id"), col("sig"),
         explode(Hashes.bands(col("sig"), 4, 4)).as("band"))
         .select(col("doc_id"), col("sig"),
@@ -1124,8 +1089,6 @@ object DedupQueries {
             .as("bkeys"))
         .as[(Long, Seq[String])]
       val feed = keyed.collect().sortBy(_._1)
-      val prevProvider =
-        s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
       // r21 (measured): the stream's STATE PARTITION count is a
       // capacity decision, not a host-core mirror — each partition is
       // one RocksDB instance whose per-batch checkpoint copy + cleanup
@@ -1134,16 +1097,13 @@ object DedupQueries {
       // at 32 stores for KB-scale state; 8 stores measured -25% wall,
       // sentinel-normalized). The drained rollup is partition-count-
       // invariant (keyed state — same band lands in the same store at
-      // any count), which the unchanged oracle checks. Scoped
-      // set/restore like the provider.
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      // r22 (ADVICE): BOTH overrides execute inside the try whose
-      // finally restores them, so a throwing conf.set cannot leak the
-      // RocksDB provider into the session for every later query
-      try {
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
+      // any count), which the unchanged oracle checks. Both overrides
+      // live in a nested scope around the stream alone, so the rollup
+      // below plans under the caller's settings.
+      Scope.run(s) {
+        Scope.conf(s, "spark.sql.streaming.stateStore.providerClass",
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
+        Scope.conf(s, "spark.sql.shuffle.partitions", "8")
         val input = MemoryStream[(Long, Seq[String])]
         val seqNo = streamSeq.incrementAndGet()
         val sink = s"graft_stream_band_$seqNo"
@@ -1169,22 +1129,14 @@ object DedupQueries {
             q.processAllAvailable()
           }
         } finally q.stop()
-        s.table(sink).groupBy(col("doc_id"))
-          .agg(count(lit(1)).as("n_bands"),
-            sum(when(col("outcome") =!= "new", 1L).otherwise(0L))
-              .as("n_collisions"),
-            min(when(col("outcome") =!= "new",
-              substring_index(col("outcome"), ":", -1).cast("long")))
-              .as("first_owner"))
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        prevProvider match {
-          case Some(p) =>
-            s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None =>
-            s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
-      }
+        s.table(sink)
+      }.groupBy(col("doc_id"))
+        .agg(count(lit(1)).as("n_bands"),
+          sum(when(col("outcome") =!= "new", 1L).otherwise(0L))
+            .as("n_collisions"),
+          min(when(col("outcome") =!= "new",
+            substring_index(col("outcome"), ":", -1).cast("long")))
+            .as("first_owner"))
     }),
 
     // SimHash near-dup clusters: identical 16-bit portable fingerprint ⇒
@@ -1254,7 +1206,7 @@ object DedupQueries {
     // large-star/small-star): each round, every vertex takes the min
     // label among itself and its neighbors; rounds are keyed joins +
     // aggregations only, lineage is truncated per round
-    // (localCheckpoint), and convergence is detected by a scalar count —
+    // (a Scope checkpoint), and convergence is detected by a scalar count —
     // the only driver-side value. LSH dup clusters are near-cliques, so
     // the fixed point lands in 2-3 rounds regardless of corpus size.
     "dd_cluster_cc" -> ((s0, d) => {
@@ -1266,7 +1218,7 @@ object DedupQueries {
       // union side) in the first job that touches the symmetric list.
       // Checkpointing also truncates the deep LSH lineage out of every
       // loop-round plan.
-      val edges = truncatedDf(queries("dd_minhash_lsh")(s, d)
+      val edges = Scope.checkpoint(queries("dd_minhash_lsh")(s, d)
         .filter(col("est_jac") >= 0.75) // high-confidence cluster edges
         .select(col("a_id"), col("b_id")), eager = true)
       ccAssignments(edges)
@@ -1285,7 +1237,7 @@ object DedupQueries {
     // assignment); the read overlays base + batch-sized generations.
     "dd_cluster_cc_stream" -> ((s0, d) => {
       val s = ccSession(s0)
-      val edges = truncatedDf(queries("dd_minhash_lsh")(s, d)
+      val edges = Scope.checkpoint(queries("dd_minhash_lsh")(s, d)
         .filter(col("est_jac") >= 0.75)
         .select(col("a_id"), col("b_id")), eager = true)
       val isBase = (c: org.apache.spark.sql.Column) => c % 7 =!= 0
@@ -1321,7 +1273,8 @@ object DedupQueries {
           rest.filter(par === 0L), 0L)
         graft.streaming.CcStoreLoop.handleBatch(dir)(
           rest.filter(par === 1L), 1L)
-        graft.streaming.CcStoreLoop.state(s0, dir).localCheckpoint(true)
+        Scope.checkpoint(graft.streaming.CcStoreLoop.state(s0, dir),
+          eager = true)
       }
     }),
 
@@ -1347,7 +1300,7 @@ object DedupQueries {
     // signature store's compaction.
     "dd_cluster_cc_delta" -> ((s0, d) => {
       val s = ccSession(s0)
-      val edges = truncatedDf(queries("dd_minhash_lsh")(s, d)
+      val edges = Scope.checkpoint(queries("dd_minhash_lsh")(s, d)
         .filter(col("est_jac") >= 0.75)
         .select(col("a_id"), col("b_id")), eager = true)
       ccDeltaCompose(s, edges, c => c % 7 =!= 0)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Scope, Tables}
 import graft.functions.Texts
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -107,12 +107,11 @@ object MixQueries {
       // this frame — without it the MinHash signature pipeline (the
       // expensive pass) runs twice. Slim rows: id + bucket + two band
       // ints, the signature itself never persists.
-      val banded = docs.join(sigs, "doc_id")
+      val banded = Scope.persist(docs.join(sigs, "doc_id")
         .select(col("doc_id"), col("bucket"),
           explode(Hashes.bands(col("sig"), 4, 4)).as("band"))
         .select(col("doc_id"), col("bucket"),
-          col("band.band_id"), col("band.band_key"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          col("band.band_id"), col("band.band_key")))
       val evalKeys = banded.filter(col("bucket") >= 90)
         .select("band_id", "band_key").distinct()
       val leaked = banded.filter(col("bucket") < 90)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Scope, Tables}
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -310,8 +310,7 @@ object Multimodal {
       // only corpus-sized exchange left is the band table's own
       // (band_id, band_val) partitioning — linear, as a keyed LSH
       // probe should be.
-      val hashed = phashBands(s, d)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val hashed = Scope.persist(phashBands(s, d))
       hashed.select(col("doc_id").as("a_id"), col("band_id"),
           col("band_val"), col("h64").as("ha"))
         .join(hashed.select(col("doc_id").as("b_id"), col("band_id"),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Scope, Tables}
 import graft.functions.Vectors
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -27,19 +27,6 @@ object SimilarityQueries {
     Tables.embeddings(s, d)
       .select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>").as("v"))
-
-  /** Queries whose default plan contains the bounded [[graft.plans
-    * .TopKPairs]] aggregate (directly or by composing sim_knn_graph).
-    * Bench raises the ObjectHashAggregate sort-based fallback
-    * threshold around exactly these (per-query set/restore — the r18
-    * ADVICE scoping: the sweep's unbounded collect_list/collect_set
-    * queries keep their 128-key spill fallback). A k-slot primitive
-    * buffer per group is memory-safe by construction (~52 B × groups),
-    * so hash aggregation must not abandon it for a sort of the
-    * candidate stream — the exact death the aggregate exists to
-    * avoid. */
-  val TopKHeapQueries: Set[String] =
-    Set("sim_knn_graph", "samp_hard_negatives", "g_triangle_count")
 
   /** Effective sign-LSH width for the dir's embeddings corpus —
     * derived from the corpus count at plan build (r19; see
@@ -376,12 +363,18 @@ object SimilarityQueries {
       // bench_scale_sim_syn100_bucket8_topk_r19.json) — constant
       // k-slot memory per group at ANY fan-out. Rank parity with
       // row_number is pinned in PropertySpec incl. ±0.0/NaN ties.
-      // Sessions running this path at scale should raise
-      // spark.sql.objectHashAggregate.sortBased.fallbackThreshold
-      // (Bench scopes it per-query via TopKHeapQueries); the 128-key
-      // default degrades to a sort of the candidate stream — still
-      // CORRECT, and at the graded correctness scales (sf0.01/0.1) the
-      // un-raised default is fine.
+      // The ObjectHashAggregate sort-based fallback threshold is raised
+      // for the caller's scope, so this query and every query composing
+      // it (samp_hard_negatives, g_triangle_count) run the plan the
+      // bench measures, and nothing else in the session does: the
+      // unbounded collect_list/collect_set aggregates elsewhere keep
+      // their 128-key spill fallback. A k-slot primitive buffer per group
+      // is memory-safe by construction (~52 B × groups), so hash
+      // aggregation must not abandon it for a sort of the candidate
+      // stream — the exact death the aggregate exists to avoid.
+      Scope.conf(s,
+        "spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
+        "16777216")
       cand.groupBy("vec_id")
         .agg(graft.plans.Native.top_k_pairs(col("sim"), col("nbr_id"), 3)
           .as("t"))
@@ -514,11 +507,10 @@ object SimilarityQueries {
       // persisted: the edge set feeds all three enumeration branches —
       // without it the knn bucket-join + cosine pass recomputes per
       // reference. Slim (a, b) pairs only.
-      val und = queries("sim_knn_graph")(s, d)
+      val und = Scope.persist(queries("sim_knn_graph")(s, d)
         .select(least(col("vec_id"), col("nbr_id")).as("a"),
           greatest(col("vec_id"), col("nbr_id")).as("b"))
-        .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .distinct())
       val tris = und
         .join(und.select(col("a").as("b"), col("b").as("c")), Seq("b"))
         .join(und.select(col("a"), col("b").as("c")), Seq("a", "c"))

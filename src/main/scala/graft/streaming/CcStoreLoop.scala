@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Scope
 import graft.operators.DedupQueries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -42,7 +43,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * folded on the driver (one probe job for the endpoints' stored
   * canonicals, union-find over the contraction graph; driver memory
   * O(cap) ids — see [[graft.operators.DedupQueries.ccApplyDelta]]); a
-  * LARGER batch is localCheckpointed and folded by the distributed
+  * LARGER batch is checkpointed and folded by the distributed
   * fixed-point loop. Either way the fold reads the stored assignment
   * as the lazily read parquet overlay ([[state]]) — no batch writes a
   * corpus-sized checkpoint.
@@ -53,11 +54,12 @@ object CcStoreLoop {
 
   /** Write the initial assignment from the base edge list
     * ([[StoreFs.init]]: a re-used `dir` is cleared first). */
-  def init(spark: SparkSession, baseEdges: DataFrame, dir: String): Unit = {
-    val s = DedupQueries.ccSession(spark)
-    storeFs.init(DedupQueries.ccAssignments(
-      DedupQueries.truncatedDf(onSession(s, baseEdges), eager = true)), dir)
-  }
+  def init(spark: SparkSession, baseEdges: DataFrame, dir: String): Unit =
+    Scope.run(spark) {
+      val s = DedupQueries.ccSession(spark)
+      storeFs.init(DedupQueries.ccAssignments(
+        Scope.checkpoint(onSession(s, baseEdges), eager = true)), dir)
+    }
 
   /** The stored assignment as of generations strictly below `below`
     * (default: everything committed) — base overlaid by each committed
@@ -88,16 +90,20 @@ object CcStoreLoop {
     * assignment, land ONLY the changed rows as this batch's
     * generation. Pass to
     * `StreamPipeline.run(source, cp)(CcStoreLoop.handleBatch(dir))`;
-    * the batch frame must carry (a_id, b_id). */
-  def handleBatch(dir: String)(batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
+    * the batch frame must carry (a_id, b_id). Runs in its own
+    * [[graft.Scope]]. */
+  def handleBatch(dir: String)(batch: DataFrame, batchId: Long): Unit =
+    Scope.run(batch.sparkSession)(foldBatch(dir, batch, batchId))
+
+  private def foldBatch(dir: String, batch: DataFrame, batchId: Long): Unit = {
     // an ingest-sized batch is collected once into a local relation on
     // the cc session (an empty one returns without a job of its own); a
-    // larger one is localCheckpointed and re-bound onto the cc session
+    // larger one is checkpointed and re-bound onto the cc session
     val local = DedupQueries.onDriver(batch)
     if (local.exists(_.isEmpty)) return
-    val s = DedupQueries.ccSession(spark)
-    val edges = local.fold(onSession(s, batch.localCheckpoint(true)))(
+    val s = DedupQueries.ccSession(batch.sparkSession)
+    val edges = local.fold(
+      onSession(s, Scope.checkpoint(batch, eager = true)))(
       DedupQueries.localFrame(s, batch.schema, _))
     // probe state BELOW this batch id: a redelivered batch must fold
     // against exactly what it saw the first time, never its own layer.
@@ -119,10 +125,11 @@ object CcStoreLoop {
     * write. From INSIDE the stream pass `upTo = batchId` (the current
     * batch's offset is uncommitted; folding its layer would make a
     * redelivery fold against its own effects — same contract as
-    * [[GateStoreLoop.maybeCompact]]). */
+    * [[GateStoreLoop.maybeCompact]]). Runs in its own [[graft.Scope]]. */
   def maybeCompact(spark: SparkSession, dir: String, maxOpenGenerations: Int,
-      upTo: Long = Long.MaxValue): Boolean =
+      upTo: Long = Long.MaxValue): Boolean = Scope.run(spark) {
     storeFs.compact(spark, dir, maxOpenGenerations, upTo)(overlay(spark, dir))
+  }
 
   /** Frames built on the caller's session re-bind onto the cc child
     * session so every plan they feed executes under ccSession's rule

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Scope
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -51,13 +52,15 @@ object StreamPipeline {
         col("n"), col("total_value"))
 
   /** ST1: run a micro-batch stream over `source`, applying `sink` per
-    * batch (idempotent MERGE in production; the test sink collects). */
+    * batch (idempotent MERGE in production; the test sink collects).
+    * Each batch runs on the stream's thread in its own [[graft.Scope]]. */
   def run(source: DataFrame, checkpoint: String)(
       sink: (DataFrame, Long) => Unit): StreamingQuery =
     source.writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch(sink)
+      .foreachBatch((batch: DataFrame, id: Long) =>
+        Scope.run(batch.sparkSession)(sink(batch, id)))
       .start()
 }

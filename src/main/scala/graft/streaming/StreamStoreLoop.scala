@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Scope
 import graft.operators.{DedupGate, DedupQueries}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -42,8 +43,8 @@ import org.apache.spark.sql.types.{LongType, StringType}
   *    driver, and each of the three layers is written as one file.
   *    Driver memory: the batch's rows and their outcome rows, twice
   *    the cap at most.
-  *  - a LARGER batch (a backfill tranche) is localCheckpointed, and so
-  *    are its outcomes; the chain walk and the writes run distributed.
+  *  - a LARGER batch (a backfill tranche) is checkpointed, and so are
+  *    its outcomes; the chain walk and the writes run distributed.
   * Both arms write the same layers with the same rows (StreamingSpec
   * pins the loop against the batch path and the oracle against SQL).
   */
@@ -72,17 +73,23 @@ object GateStoreLoop {
   /** The foreachBatch handler: classify, derive the delta, persist the
     * batch's artifacts. Pass directly to
     * `StreamPipeline.run(source, cp)(GateStoreLoop.handleBatch(dir, 4, 4))`.
-    * The batch frame must carry (uid, sig, meta_key).
+    * The batch frame must carry (uid, sig, meta_key). Runs in its own
+    * [[graft.Scope]].
     */
   def handleBatch(dir: String, numBands: Int, rowsPerBand: Int)(
+      batch: DataFrame, batchId: Long): Unit =
+    Scope.run(batch.sparkSession)(
+      handle(dir, numBands, rowsPerBand, batch, batchId))
+
+  private def handle(dir: String, numBands: Int, rowsPerBand: Int,
       batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
     // the gate DAG reads the batch from several branches (probe,
     // self-join, meta attach), so the micro-batch is pinned once: an
     // ingest-sized batch is collected into a local relation (every
     // branch plans from driver memory, and an empty batch is seen
-    // without a job of its own); a larger one is localCheckpointed,
-    // which also truncates the streaming lineage
+    // without a job of its own); a larger one is checkpointed, which
+    // also truncates the streaming lineage
     val local = DedupQueries.onDriver(batch)
     if (local.exists(_.isEmpty)) return
     // String uids carry no arrival order, and outcomesDelta REFUSES
@@ -124,7 +131,7 @@ object GateStoreLoop {
             Row.fromSeq(r.toSeq :+ i.toLong) })
       case Some(rows) => DedupQueries.localFrame(spark, batch.schema, rows)
       case None =>
-        val pinned = batch.localCheckpoint(true)
+        val pinned = Scope.checkpoint(batch, eager = true)
         if (mint) pinned.withColumn("arrival", monotonically_increasing_id())
         else pinned
     }
@@ -136,13 +143,13 @@ object GateStoreLoop {
     // corpus probe, turning one gate pass into five. An ingest-sized
     // batch collects its outcomes into a local relation (so the twin
     // walk and the writes plan from driver memory); a larger one
-    // localCheckpoints them.
+    // checkpoints them.
     val classified = DedupGate.classifyStoredDeltas(
       b, base, gens.map(l => (l._2, l._3)), numBands, rowsPerBand)
     val outcomes =
       if (local.isDefined)
         DedupQueries.localFrame(spark, classified.schema, classified.collect())
-      else classified.localCheckpoint(true)
+      else Scope.checkpoint(classified, eager = true)
     // archive flips travel a separate maintenance channel; the stream
     // loop itself retires nodes only via version replacement
     val noFlips = outcomes.select(col("matched_node_id").as("node_id"))
@@ -182,7 +189,9 @@ object GateStoreLoop {
     */
   def maybeCompact(spark: SparkSession, dir: String,
       maxOpenGenerations: Int, upTo: Long = Long.MaxValue): Boolean =
-    storeFs.compact(spark, dir, maxOpenGenerations, upTo)(fold(spark, dir))
+    Scope.run(spark) {
+      storeFs.compact(spark, dir, maxOpenGenerations, upTo)(fold(spark, dir))
+    }
 
   /** Fold every open generation below `upTo` into a new compacted base —
     * the periodic corpus-shuffle event of the posture. The fold is

@@ -1,7 +1,8 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.classic.ClassicConversions._
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Column ⇄ Expression bridge. Spark 4 made the constructors and
@@ -43,4 +44,25 @@ object Bridge {
   def stageShuffleDepId(
       si: org.apache.spark.scheduler.StageInfo): Option[Int] =
     si.shuffleDepId
+
+  /** The RDD a checkpointed frame reads (`Dataset.checkpoint` and
+    * `localCheckpoint` return a frame over one `LogicalRDD`), so
+    * [[graft.Scope]] can release its blocks and its checkpoint files. */
+  def checkpointRdd(df: DataFrame): org.apache.spark.rdd.RDD[_] =
+    df.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+      case p => throw new IllegalArgumentException(
+        s"not a checkpointed frame: ${p.nodeName}")
+    }
+
+  /** Write a lazily marked checkpoint now — what `checkpoint(eager =
+    * true)` does after marking (`RDD.doCheckpoint` is `private[spark]`).
+    * [[graft.Scope]] marks lazily first, so the release is registered
+    * before any block or file exists. */
+  def materializeCheckpoint(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.doCheckpoint()
+
+  /** No frame is registered with the session's CacheManager. */
+  def cacheIsEmpty(spark: SparkSession): Boolean =
+    spark.sharedState.cacheManager.isEmpty
 }

@@ -97,18 +97,23 @@ class ContractSpec extends SparkSpec {
       // the r15 encoded-verify injectivity guard (raise_error on any
       // xxhash64 vocabulary collision)
       "dd_jaccard_prefix", "dd_ngram_jaccard")
-    // Constructing some frames triggers eager driver-side scalar jobs
-    // (cluster_cc loop, bloom build) — sf0.001 keeps the sweep cheap.
+    // Constructing some frames triggers eager driver-side jobs
+    // (cluster_cc loop, bloom build, every persist) — sf0.001 keeps the
+    // sweep cheap. Each query runs in its own scope, and what is left
+    // once that scope closed is an offender too.
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
-        val p = fn(spark, sf).queryExecution.executedPlan.toString
+        val conf0 = spark.conf.getAll
+        val before = Scope.leftBehind(spark, conf0)
+        val p = Scope.run(spark)(
+          fn(spark, sf).queryExecution.executedPlan.toString)
+        val left = Scope.leftBehind(spark, conf0).diff(before)
         val cart = p.contains("CartesianProduct")
         val bnlj = p.contains("BroadcastNestedLoopJoin") &&
           !bnljAllowed.contains(name)
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
         if (cart) Some(s"$name: CartesianProduct")
         else if (bnlj) Some(s"$name: unexpected BroadcastNestedLoopJoin")
+        else if (left.nonEmpty) Some(s"$name: left ${left.mkString(", ")}")
         else None
     }
     assert(offenders.isEmpty, offenders.mkString("; "))
@@ -134,5 +139,37 @@ class ContractSpec extends SparkSpec {
     assert(found == allowed,
       s"added: ${(found -- allowed).toSeq.sorted.mkString(", ")}; " +
         s"gone: ${(allowed -- found).toSeq.sorted.mkString(", ")}")
+  }
+
+  test("lifecycle calls go through Scope: no persist, cache, unpersist or " +
+    "checkpoint outside it, and conf overrides only on an allowlist") {
+    // Scope releases what a unit of work persists, checkpoints or
+    // overrides; a direct call beside it is a second, unreleased path.
+    import scala.jdk.CollectionConverters._
+    val main = java.nio.file.Paths.get("src/main")
+    assert(java.nio.file.Files.isDirectory(main),
+      "src/main not found: run from the repo root")
+    val sources = java.nio.file.Files.walk(main).iterator.asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "Scope.scala")
+      .map(p => p.getFileName.toString -> java.nio.file.Files.readString(p))
+      .toSeq
+    val lifecycle = ("(?<!Scope)\\.persist\\(|\\.cache\\(\\)|unpersist\\(|" +
+      "localCheckpoint\\(|(?<!Scope)\\.checkpoint\\(").r
+    val direct = sources.flatMap { case (f, text) =>
+      lifecycle.findAllIn(text).map(m => s"$f: $m") }
+    assert(direct.isEmpty, direct.mkString("; "))
+    // Each conf.set/unset site, with the reason it is not a Scope.conf:
+    val confAllowed = Map(
+      // set-if-different reader settings, left set on purpose: restoring
+      // them per query re-pays analysis (Tables.readerConf)
+      "Tables.scala" -> 1,
+      // ccSession's rule exclusion, set on a child session of its own,
+      // never on the caller's
+      "DedupQueries.scala" -> 1)
+    val confSites = sources.map { case (f, text) =>
+      f -> "conf\\.(set|unset)\\(".r.findAllIn(text).size
+    }.filter(_._2 > 0).toMap
+    assert(confSites == confAllowed, s"conf.set/unset sites: $confSites")
   }
 }

@@ -221,7 +221,7 @@ class CorpusSpec extends SparkSpec {
     // inputs ride along and must change nothing: (2,1) duplicates an
     // edge reversed, (7,7) is a delta self-loop, (21,14) re-delivers a
     // delta pair reversed.
-    val edges = DedupQueries.truncatedDf(
+    val edges = Scope.checkpoint(
       Seq((1L, 2L), (3L, 4L), (5L, 6L), (2L, 1L),
         (2L, 7L), (7L, 3L), (14L, 21L), (8L, 14L), (7L, 7L), (21L, 14L))
         .toDF("a_id", "b_id"), eager = true)

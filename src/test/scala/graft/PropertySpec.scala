@@ -142,7 +142,7 @@ class PropertySpec extends SparkSpec {
     val cycle = (0 until 12).map(i =>
       ((n + i).toLong + 1, (n + (i + 1) % 12).toLong + 1))
     val pairs = (random ++ cycle).filter(e => e._1 != e._2).distinct
-    val edges = DedupQueries.truncatedDf(
+    val edges = Scope.checkpoint(
       pairs.toDF("a_id", "b_id"), eager = true)
     val oneShot = DedupQueries.ccAssignments(edges)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSortedMap
@@ -159,7 +159,7 @@ class PropertySpec extends SparkSpec {
       val baseEdges = edges.filter(isBase(col("a_id")) && isBase(col("b_id")))
       val deltaEdges = edges
         .filter(!(isBase(col("a_id")) && isBase(col("b_id"))))
-      val baseAssign = DedupQueries.truncatedDf(
+      val baseAssign = Scope.checkpoint(
         DedupQueries.ccAssignments(baseEdges), eager = true)
       val baseMap = baseAssign.collect()
         .map(r => (r.getLong(0), r.getLong(1))).toMap
@@ -182,7 +182,7 @@ class PropertySpec extends SparkSpec {
     val s = DedupQueries.ccSession(spark)
     val sq = s.sqlContext; import sq.implicits._
     def frame(pairs: Seq[(Long, Long)]) =
-      DedupQueries.truncatedDf(pairs.toDF("a_id", "b_id"), eager = true)
+      Scope.checkpoint(pairs.toDF("a_id", "b_id"), eager = true)
     def rowsOf(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.get(0).toString, r.get(1).toString))
         .toSeq.sorted
@@ -190,7 +190,7 @@ class PropertySpec extends SparkSpec {
     def pad(v: Long) = f"$v%06d"
     def check(base: Seq[(Long, Long)], delta: Seq[(Long, Long)],
         what: String): Unit = {
-      val assign = DedupQueries.truncatedDf(
+      val assign = Scope.checkpoint(
         DedupQueries.ccAssignments(frame(base)), eager = true)
       val d = frame(delta)
       // the string-id store: the same graph under padded string ids

@@ -72,22 +72,21 @@ class SkewSessionSpec extends SparkSpec {
       .toDF("doc_id", "ws")
     val groups = graft.operators.DedupQueries.collapseSets(docs, byLang = false)
     assert(groups.count() == 12)
-    // the candidate build jaccardPrefixPairs runs; both persisted
-    // handles it hands back must release everything the build cached.
-    // Compared by RDD id, not by count: the context cleaner may drop an
+    // the candidate build jaccardPrefixPairs runs, in a scope of its
+    // own: nothing it cached is left once that scope closes. Compared
+    // by RDD id, not by count: the context cleaner may drop an
     // unreachable RDD of an earlier suite at any moment.
     val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val (ordered0, dfreq) = graft.operators.DedupQueries
-      .orderedPrefixWithDfreq(groups.select($"rep_id", $"ws"), byLang = false)
-    val ordered = ordered0.persist()
-    val nCand = graft.operators.DedupQueries
-      .candidatesOverOrdered(ordered, 0.9, byLang = false)
-      .count()
+    val nCand = Scope.run(spark) {
+      val (ordered, _) = graft.operators.DedupQueries
+        .orderedPrefixWithDfreq(groups.select($"rep_id", $"ws"), byLang = false)
+      graft.operators.DedupQueries
+        .candidatesOverOrdered(Scope.persist(ordered), 0.9, byLang = false)
+        .count()
+    }
     assert(nCand <= 66,
       s"$nCand rep-level candidates — exceeds the C(12,2)=66 distinct-set " +
         "bound; collapse degraded toward per-doc candidate generation")
-    ordered.unpersist(blocking = true)
-    dfreq.unpersist(blocking = true)
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- cachedBefore
     assert(leaked.isEmpty,
       s"candidate build left ${leaked.size} persisted RDD(s) behind")
@@ -115,24 +114,30 @@ class SkewSessionSpec extends SparkSpec {
     import graft.operators.DedupQueries
     val base = DedupQueries.queries("dd_cluster_cc")(spark, sf)
       .orderBy("doc_id").collect().toSeq
-    // Production recovery switch: sc.setCheckpointDir flips the CC
-    // loop's truncation from executor-local blocks (lost with a dead
+    // Production recovery switch: sc.setCheckpointDir flips every
+    // Scope.checkpoint from executor-local blocks (lost with a dead
     // executor) to reliable checkpoint files. There is no public unset,
-    // and only dd_cluster_cc consults the dir, so it stays set for the
-    // rest of the suite — harmless.
+    // so the dir stays set for the rest of this JVM: every later
+    // suite's CC loops, twin-chain walks and folds write reliable files
+    // too. What keeps that from piling up is Scope, which deletes each
+    // file when the run that wrote it closes — pinned below.
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt")
     spark.sparkContext.setCheckpointDir(dir.toString)
-    val got = DedupQueries.queries("dd_cluster_cc")(spark, sf)
-      .orderBy("doc_id").collect().toSeq
-    assert(got == base, "reliable-checkpoint run must be row-identical")
-    // the reliable path actually engaged: checkpoint files were written
     def hasFiles(p: java.nio.file.Path): Boolean = {
       val s = java.nio.file.Files.walk(p)
       try s.anyMatch(q => java.nio.file.Files.isRegularFile(q))
       finally s.close()
     }
-    assert(hasFiles(dir),
-      "no checkpoint files written — the switch never engaged")
+    Scope.run(spark) {
+      val got = DedupQueries.queries("dd_cluster_cc")(spark, sf)
+        .orderBy("doc_id").collect().toSeq
+      assert(got == base, "reliable-checkpoint run must be row-identical")
+      // the reliable path actually engaged: checkpoint files were written
+      assert(hasFiles(dir),
+        "no checkpoint files written — the switch never engaged")
+    }
+    assert(!hasFiles(dir),
+      "checkpoint files outlived the scope that wrote them")
   }
 
   test("flatMapGroupsWithState sessionization closes sessions on gap") {

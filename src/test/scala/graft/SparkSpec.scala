@@ -1,12 +1,19 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for all suites (one JVM-wide SparkSession). */
+/** Shared session for all suites (one JVM-wide SparkSession). Each test
+  * is one unit of work: it runs in its own [[Scope]], so what the
+  * library persists, checkpoints or overrides for it is released when
+  * the test ends, pass or fail. */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   lazy val sf: String = "/root/testdata/sf0.001"
+
+  override def withFixture(test: NoArgTest): Outcome =
+    Scope.run(spark)(super.withFixture(test))
 }
 
 object SparkSpec {

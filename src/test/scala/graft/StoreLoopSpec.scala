@@ -392,7 +392,7 @@ class StoreLoopSpec extends SparkSpec {
     val s = DedupQueries.ccSession(spark)
     val sq = s.sqlContext; import sq.implicits._
     def frame(pairs: Seq[(Long, Long)]) =
-      DedupQueries.truncatedDf(pairs.toDF("a_id", "b_id"), eager = true)
+      Scope.checkpoint(pairs.toDF("a_id", "b_id"), eager = true)
     def collectAssign(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
     // T0 build: comps {1,2,3}, {10,11}, {20,21}
@@ -402,10 +402,10 @@ class StoreLoopSpec extends SparkSpec {
     // batch 2: chains THROUGH batch-1's merge (31 joins the merged comp
     // via 30) and merges a batch-1-born comp with a T0 comp
     val b2 = Seq((30L, 31L), (41L, 3L))
-    var assign = DedupQueries.truncatedDf(
+    var assign = Scope.checkpoint(
       DedupQueries.ccAssignments(frame(b0)), eager = true)
     for (b <- Seq(b1, b2))
-      assign = DedupQueries.truncatedDf(
+      assign = Scope.checkpoint(
         DedupQueries.ccApplyDelta(s, assign, frame(b)), eager = true)
     val folded = collectAssign(assign)
     val oneShot = collectAssign(
@@ -417,7 +417,7 @@ class StoreLoopSpec extends SparkSpec {
     assert(m(41L) == 1L && m(40L) == 1L && m(31L) == 10L)
     // redelivery: folding batch 2 AGAIN must change nothing — every
     // endpoint already maps to one canonical, the contraction empties
-    val redelivered = collectAssign(DedupQueries.truncatedDf(
+    val redelivered = collectAssign(Scope.checkpoint(
       DedupQueries.ccApplyDelta(s, assign, frame(b2)), eager = true))
     assert(redelivered == folded, "redelivered batch mutated the store")
   }

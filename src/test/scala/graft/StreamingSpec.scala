@@ -897,7 +897,7 @@ class StreamingSpec extends SparkSpec {
     val sOne = DedupQueries.ccSession(spark)
     val outerEdges = (b0 ++ batch0 ++ batch1).toDF("a_id", "b_id")
     val oneShot = assignOf(DedupQueries.ccAssignments(
-      DedupQueries.truncatedDf(
+      Scope.checkpoint(
         sOne.createDataFrame(outerEdges.rdd, outerEdges.schema),
         eager = true)))
     assert(streamed == oneShot,
@@ -1124,7 +1124,7 @@ class StreamingSpec extends SparkSpec {
     val sOne = DedupQueries.ccSession(spark)
     def oneShotUpTo(i: Int) = {
       val all = (b0 ++ batches.take(i + 1).flatten).toDF("a_id", "b_id")
-      assignOf(DedupQueries.ccAssignments(DedupQueries.truncatedDf(
+      assignOf(DedupQueries.ccAssignments(Scope.checkpoint(
         sOne.createDataFrame(all.rdd, all.schema), eager = true)))
     }
     batches.zipWithIndex.foreach { case (edges, i) =>
@@ -1210,6 +1210,56 @@ class StreamingSpec extends SparkSpec {
     assert(gateJobs <= 26 && ccJobs <= 7,
       s"gate handleBatch started $gateJobs jobs and CC handleBatch " +
         s"$ccJobs — an ingest-sized batch must run the driver arms")
+  }
+
+  test("a base 20× the batch: what a gate or CC handleBatch registers " +
+    "with its scope is batch-sized (nothing, on the driver arms), and the " +
+    "stored assignment still equals one-shot CC") {
+    import graft.operators.DedupQueries
+    import graft.streaming.{CcStoreLoop, GateStoreLoop}
+    // rows of every frame registered (persisted or checkpointed) while
+    // `f` runs
+    def registeredRows(f: => Unit): Seq[Long] = {
+      val rows = scala.collection.mutable.ArrayBuffer.empty[Long]
+      Scope.watch = df => rows.synchronized(rows += df.count())
+      try f finally Scope.watch = _ => ()
+      rows.toSeq
+    }
+    val text = (i: Int) =>
+      s"persist audit fixture $i words p${i}a p${i}b p${i}c tail ${i * 41}"
+    val gateDir = java.nio.file.Files.createTempDirectory("graft-gaudit").toString
+    GateStoreLoop.init(gateStore((1 to 400).map(i => i.toLong -> text(i))),
+      gateDir)
+    // 20 rows: duplicates, versions and new documents
+    val docs = (1 to 20).map { i =>
+      if (i % 4 == 0) (900L + i, s"fresh audit document $i zz$i yy$i", "en")
+      else (900L + i, text(i * 19), if (i % 3 == 0) "xx" else "en")
+    }
+    val gateRows = registeredRows(
+      GateStoreLoop.handleBatch(gateDir, 4, 4)(gateBatch(docs), 0L))
+    assert(gateRows.isEmpty,
+      s"gate handleBatch registered frames of $gateRows rows")
+    assert(GateStoreLoop.outcomes(spark, gateDir).count() == docs.size)
+
+    // 400 two-vertex base components; the batch's 20 edges chain 21 of
+    // them into one and attach two new vertices
+    val base = (0 until 400).map(k => (10L * k, 10L * k + 1))
+    val batch = (0 until 19).map(k => (10L * k + 1, 10L * (k + 1))) :+
+      ((5000L, 3991L))
+    val ccDir = java.nio.file.Files.createTempDirectory("graft-caudit").toString
+    CcStoreLoop.init(spark, base.toDF("a_id", "b_id"), ccDir)
+    val ccRows = registeredRows(
+      CcStoreLoop.handleBatch(ccDir)(batch.toDF("a_id", "b_id"), 0L))
+    assert(ccRows.isEmpty,
+      s"CC handleBatch registered frames of $ccRows rows")
+    def assignOf(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+    val sOne = DedupQueries.ccSession(spark)
+    val all = (base ++ batch).toDF("a_id", "b_id")
+    val oneShot = assignOf(DedupQueries.ccAssignments(Scope.checkpoint(
+      sOne.createDataFrame(all.rdd, all.schema), eager = true)))
+    assert(assignOf(CcStoreLoop.state(spark, ccDir)) == oneShot,
+      "the stored assignment diverged from one-shot CC")
   }
 
   test("reader during an in-flight compaction: an uncommitted base dir " +
