@@ -72,6 +72,18 @@ object Hashes {
       size(filter(zip_with(a, b, (x, y) => x === y), e => e))
         .cast("double") / size(a), 6)
 
+  /** [[minhashJaccard]] of two signatures held on the driver (a Row's
+    * array values; a null element never agrees): the same native
+    * agreement fraction and HALF_UP rounding the plan runs, so the
+    * value is bit-identical to the column's. */
+  def minhashJaccardOf(a: Seq[Any], b: Seq[Any]): Double = {
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import graft.plans.NativeImpl
+    NativeImpl.roundHalfUp(NativeImpl.sigAgreeFrac(
+      new GenericArrayData(a.toArray), new GenericArrayData(b.toArray)),
+      6, math.pow(10, 6))
+  }
+
   /** Exact Jaccard over two (deduplicated) string arrays. */
   def jaccard(a: Column, b: Column): Column = {
     val inter = size(array_intersect(a, b)).cast("double")

@@ -450,17 +450,8 @@ object DedupGate {
       numBands: Int, rowsPerBand: Int)
       : (DataFrame, DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.types.StringType
+    requireArrival(incoming)
     val hasArrival = incoming.columns.contains("arrival")
-    if (!hasArrival &&
-        incoming.schema("uid").dataType == StringType)
-      throw new IllegalArgumentException(
-        "outcomesDelta: string uids without an 'arrival' column — " +
-          "lexicographic uid order does not encode arrival order " +
-          "(\"doc9\" sorts after \"doc10\"), so last-writer-wins would " +
-          "diverge from the reference's serial semantics. Add a " +
-          "monotone 'arrival' column to the incoming batch, or mint " +
-          "uids whose natural ordering encodes arrival.")
     val incomingCols =
       Seq(col("uid"), col("sig"), col("meta_key")) ++
         (if (hasArrival) Seq(col("arrival")) else Nil)
@@ -470,10 +461,7 @@ object DedupGate {
         // embedded in the consumed column (not a droppable side
         // assertion) so column pruning can never elide the check
         when(col("target").isNull, raise_error(concat(
-          lit("outcomesDelta: unresolved twin chain — uid "), col("uid"),
-          lit(" resolved to no target node (its batch twin is absent " +
-            "from the outcomes frame); appending it would strand the " +
-            "real target stale"))))
+          lit(ChainHead), col("uid"), lit(ChainTail))))
           .otherwise(col("target")).as("node_id"))
       .join(incoming.select(incomingCols: _*), "uid")
     val arrivalOrder =
@@ -490,6 +478,27 @@ object DedupGate {
       .select("node_id").distinct()
     (bandedSigStore(winners, numBands, rowsPerBand), tombstones, newIds)
   }
+
+  /** The last-writer-wins refusal both maintenance arms share: string
+    * uids need an `arrival` column (see [[outcomesDeltaParts]]). */
+  private def requireArrival(incoming: DataFrame): Unit =
+    if (!incoming.columns.contains("arrival") &&
+        incoming.schema("uid").dataType ==
+          org.apache.spark.sql.types.StringType)
+      throw new IllegalArgumentException(
+        "outcomesDelta: string uids without an 'arrival' column — " +
+          "lexicographic uid order does not encode arrival order " +
+          "(\"doc9\" sorts after \"doc10\"), so last-writer-wins would " +
+          "diverge from the reference's serial semantics. Add a " +
+          "monotone 'arrival' column to the incoming batch, or mint " +
+          "uids whose natural ordering encodes arrival.")
+
+  /** The unresolved-twin-chain refusal both maintenance arms raise, as
+    * the text around the offending uid. */
+  private val ChainHead = "outcomesDelta: unresolved twin chain — uid "
+  private val ChainTail = " resolved to no target node (its batch twin " +
+    "is absent from the outcomes frame); appending it would strand the " +
+    "real target stale"
 
   /** Final store node per outcome row, with BATCH-TWIN CHAINS resolved:
     * `new` targets its own uid; `version`/`duplicate` target their
@@ -510,12 +519,14 @@ object DedupGate {
     * [[outcomesDeltaParts]] turns into a loud error. Two arms, one
     * result (PropertySpec pins them equal):
     *  - DRIVER ([[walkTwinChains]]) when `outcomes` has at most
-    *    [[DedupQueries.DriverRows]] rows — always, for an ingest batch:
-    *    the rows are collected (no job when `outcomes` is already a
-    *    local relation, as in [[graft.streaming.GateStoreLoop]]), each
-    *    chain is walked once with memoization, at any depth, and the
-    *    result is a local relation. Driver memory: the collected rows
-    *    plus one memo entry per uid.
+    *    [[DedupQueries.DriverRows]] rows: the rows are collected (no
+    *    job when `outcomes` is already a local relation), each chain is
+    *    walked once with memoization, at any depth, and the result is a
+    *    local relation. Driver memory: the collected rows plus one memo
+    *    entry per uid. The gate's own driver arm ([[gateOnDriver]],
+    *    what [[graft.streaming.GateStoreLoop]] runs for an ingest batch)
+    *    walks its outcome rows with the same [[chainTargets]] and never
+    *    builds this frame.
     *  - DISTRIBUTED ([[jumpTwinChains]]) otherwise: pointer-jumping
     *    rounds over the frame.
     */
@@ -535,17 +546,27 @@ object DedupGate {
       col("batch_twin").as("twin"))
 
   /** The DRIVER arm of [[resolveTargets]] over the collected rows of
-    * `links` ([[twinLinks]]): each chain is followed to its first
-    * non-null target, and every uid on the path memoizes the answer, so
-    * the walk is linear in the rows however deep the chains. A chain
-    * that ends without a target (a twin absent from the rows, a
-    * twin-less row with no target) resolves to null, as in the
-    * distributed arm; so does a cycle, which no classification emits. */
+    * `links` ([[twinLinks]]), walked by [[chainTargets]]. */
   private[graft] def walkTwinChains(links: DataFrame,
       rows: Seq[org.apache.spark.sql.Row]): DataFrame = {
-    val byUid = rows.map(r => r.get(0) -> r).toMap
+    val targetOf = chainTargets(rows.map(r => (r.get(0), r.get(2), r.get(3))))
+    val out = links.select("uid", "outcome", "target")
+    DedupQueries.localFrame(links.sparkSession, out.schema,
+      rows.map(r => org.apache.spark.sql.Row(r.get(0), r.get(1),
+        targetOf(r.get(0)))))
+  }
+
+  /** The final target of each uid over `(uid, target, twin)` links (a
+    * null target when the row matched a twin): each chain is followed
+    * to its first non-null target, and every uid on the path memoizes
+    * the answer, so the walk is linear in the links however deep the
+    * chains. A chain that ends without a target (a twin absent from the
+    * links, a twin-less row with no target) resolves to null, as in the
+    * distributed arm; so does a cycle, which no classification emits. */
+  private def chainTargets(links: Seq[(Any, Any, Any)]): Any => Any = {
+    val byUid = links.map(l => l._1 -> l).toMap
     val memo = scala.collection.mutable.HashMap.empty[Any, Any]
-    def targetOf(uid: Any): Any = {
+    uid => {
       val path = scala.collection.mutable.ArrayBuffer.empty[Any]
       var u = uid
       var target: Any = null
@@ -554,20 +575,238 @@ object DedupGate {
         case Some(t) => target = t; done = true
         case None => byUid.get(u) match {
           case None => done = true
-          case Some(r) =>
+          case Some((_, t, twin)) =>
             path += u
-            if (!r.isNullAt(2)) { target = r.get(2); done = true }
-            else if (r.isNullAt(3) || path.size > byUid.size) done = true
-            else u = r.get(3)
+            if (t != null) { target = t; done = true }
+            else if (twin == null || path.size > byUid.size) done = true
+            else u = twin
         }
       }
       path.foreach(memo(_) = target)
       target
     }
-    val out = links.select("uid", "outcome", "target")
-    DedupQueries.localFrame(links.sparkSession, out.schema,
-      rows.map(r => org.apache.spark.sql.Row(r.get(0), r.get(1),
-        targetOf(r.get(0)))))
+  }
+
+  /** The DRIVER arm of one gate step over an ingest-sized batch:
+    * [[classifyStoredDeltas]] followed by [[outcomesDelta]] with no
+    * archive flips, computed in Scala from `rows` (the collected rows of
+    * `incoming`) and ONE bounded probe of the store
+    * ([[classifyOnDriver]], then [[outcomesDeltaOnDriver]]). Returns
+    * `(outcomes, append, tombstones)` as local relations carrying the
+    * distributed arm's schemas, so writing each is one job; None when
+    * the caller must run the distributed arm instead (see
+    * [[classifyOnDriver]]). */
+  private[graft] def gateOnDriver(incoming: DataFrame,
+      rows: Seq[org.apache.spark.sql.Row], base: DataFrame,
+      generations: Seq[(DataFrame, DataFrame)], numBands: Int,
+      rowsPerBand: Int): Option[(DataFrame, DataFrame, DataFrame)] =
+    classifyOnDriver(incoming, rows, base, generations, numBands,
+      rowsPerBand).map { outcomes =>
+      val (append, tombs) = outcomesDeltaOnDriver(incoming, rows, outcomes,
+        numBands, rowsPerBand)
+      (outcomes, append, tombs)
+    }
+
+  /** [[classifyStoredDeltas]] on the driver, as a local relation; None
+    * when the driver cannot reproduce it exactly or cheaply:
+    *  - an id, meta or arrival type whose order or equality the driver
+    *    does not reproduce ([[DedupQueries.idOrdering]]'s long, int and
+    *    UTF-8 string; string, long or int metadata), a signature that is
+    *    not `array<long>`, or store layers typed unlike the batch;
+    *  - a null or repeated uid, or an empty signature;
+    *  - more than [[DedupQueries.DriverRows]] probed store rows plus
+    *    open tombstones (a hot band).
+    *
+    * The probe is one job ([[DedupQueries.collectAtMost]]): the
+    * `(node_id, sig, meta_key, bkey)` rows of the base and of each open
+    * delta whose `bkey` is one of the batch classes' band keys, and
+    * every open tombstone, each tagged with its generation. A row is
+    * live unless a tombstone of a LATER generation names its node, the
+    * visibility [[classifyStoredDeltas]] applies. The serial semantics
+    * stay exact: signature classes with the lowest uid as
+    * representative; corpus and earlier-twin candidates verified at
+    * [[DuplicateThreshold]] with the plan's own natives
+    * ([[graft.functions.Hashes.minhashJaccardOf]]); the best candidate
+    * by sim desc, corpus first, then match id asc in Spark's order; the
+    * matched metadata deciding duplicate vs version. Driver memory: the
+    * batch, at most DriverRows probed rows, and one outcome row per
+    * batch row. */
+  private[graft] def classifyOnDriver(incoming: DataFrame,
+      rows: Seq[org.apache.spark.sql.Row], base: DataFrame,
+      generations: Seq[(DataFrame, DataFrame)], numBands: Int,
+      rowsPerBand: Int): Option[DataFrame] = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val in = incoming.schema
+    val idType = in("uid").dataType
+    val metaType = in("meta_key").dataType
+    val isSig = (t: DataType) => t match {
+      case ArrayType(LongType, _) => true
+      case _ => false
+    }
+    val typed = isSig(in("sig").dataType) &&
+      Seq(StringType, LongType, IntegerType).contains(metaType) &&
+      in.fieldNames.find(_ == "arrival")
+        .forall(a => DedupQueries.idOrdering(in(a).dataType).isDefined) &&
+      (base +: generations.map(_._1)).forall { l =>
+        val ls = l.schema
+        ls("node_id").dataType == idType && isSig(ls("sig").dataType) &&
+          ls("meta_key").dataType == metaType
+      } && generations.forall(_._2.schema("node_id").dataType == idType)
+    val (uidAt, sigAt, metaAt) =
+      (in.fieldIndex("uid"), in.fieldIndex("sig"), in.fieldIndex("meta_key"))
+    val uids = rows.map(_.get(uidAt))
+    val sigOf = (r: Row) => Option(r.getSeq[Any](sigAt))
+    val ordered = DedupQueries.idOrdering(idType).filter(_ => typed &&
+      !uids.contains(null) && uids.distinct.size == uids.size &&
+      rows.forall(sigOf(_).forall(_.nonEmpty)))
+    ordered.flatMap { ord =>
+      val byUid = uids.zip(rows).toMap
+      // signature classes: every member -> the class's lowest uid
+      val cls: Map[Any, Any] = rows.groupBy(sigOf).values.flatMap { g =>
+        val rep = g.map(_.get(uidAt)).min(ord)
+        g.map(_.get(uidAt) -> rep)
+      }.toMap
+      // each representative's band keys, rendered as bandedBkey does
+      val repKeys: Map[Any, Seq[String]] = cls.values.toSeq.distinct
+        .flatMap(u => sigOf(byUid(u)).map { sig =>
+          val bands = graft.plans.NativeImpl.lshBands(
+            new org.apache.spark.sql.catalyst.util.GenericArrayData(
+              sig.toArray), numBands, rowsPerBand)
+          u -> (0 until bands.numElements()).map { i =>
+            val band = bands.getStruct(i, 2)
+            s"${band.getInt(0)}_${band.getUTF8String(1)}"
+          }
+        }).toMap
+      val keys = repKeys.values.flatten.toSeq.distinct
+      def probe(l: DataFrame, gen: Int) = l
+        .filter(col("bkey").isin(keys: _*))
+        .select(lit(gen).as("gen"), lit(false).as("tomb"), col("node_id"),
+          col("sig"), col("meta_key"), col("bkey"))
+      def tombs(t: DataFrame, gen: Int) = t
+        .select(lit(gen).as("gen"), lit(true).as("tomb"), col("node_id"),
+          lit(null).cast(base.schema("sig").dataType).as("sig"),
+          lit(null).cast(metaType).as("meta_key"),
+          lit(null).cast(StringType).as("bkey"))
+      val probed =
+        if (keys.isEmpty) Some(Array.empty[Row])
+        else DedupQueries.collectAtMost(
+          (probe(base, -1) +: generations.zipWithIndex.flatMap {
+            case ((delta, dead), i) => Seq(probe(delta, i), tombs(dead, i))
+          }).reduce(_ union _), DedupQueries.DriverRows)
+      probed.map { found =>
+        val (dead, stored) = found.toSeq.partition(_.getBoolean(1))
+        val lastTomb = dead.groupMapReduce(_.get(2))(_.getInt(0))(math.max)
+        val liveByKey = stored
+          .filter(r => r.getInt(0) >= lastTomb.getOrElse(r.get(2), -1))
+          .groupBy(_.getString(5))
+        val reps = repKeys.keys.toSeq
+        val repsByKey = reps.flatMap(u => repKeys(u).map(_ -> u))
+          .groupMap(_._1)(_._2)
+        case class Cand(id: Any, sim: Double, corpus: Boolean, meta: Any)
+        def verified(q: Seq[Any], cands: Seq[(Any, Seq[Any], Any)],
+            corpus: Boolean) = cands.flatMap { case (id, sig, meta) =>
+          val sim = graft.functions.Hashes.minhashJaccardOf(q, sig)
+          if (sim >= DuplicateThreshold) Some(Cand(id, sim, corpus, meta))
+          else None
+        }
+        // per representative: the live corpus nodes sharing a band with
+        // it, and the earlier representatives sharing one
+        val corpusOf = reps.map { u =>
+          u -> verified(sigOf(byUid(u)).get,
+            repKeys(u).flatMap(liveByKey.getOrElse(_, Nil))
+              .distinctBy(_.get(2))
+              .map(h => (h.get(2), h.getSeq[Any](3), h.get(4))),
+            corpus = true)
+        }.toMap
+        val twinsOf = reps.map { u =>
+          u -> verified(sigOf(byUid(u)).get,
+            repKeys(u).flatMap(repsByKey).distinct.filter(ord.lt(_, u))
+              .map(v => (v, sigOf(byUid(v)).get, byUid(v).get(metaAt))),
+            corpus = false)
+        }.toMap
+        def better(a: Cand, b: Cand) = a.sim > b.sim || a.sim == b.sim &&
+          (a.corpus && !b.corpus || a.corpus == b.corpus && ord.lt(a.id, b.id))
+        val outcomes = rows.map { r =>
+          val (u, c) = (r.get(uidAt), cls(r.get(uidAt)))
+          val cands = corpusOf.getOrElse(c, Nil) ++ (
+            if (c == u) twinsOf.getOrElse(u, Nil)
+            else Seq(Cand(c, 1.0, corpus = false, byUid(c).get(metaAt))))
+          cands.reduceOption((a, b) => if (better(a, b)) a else b) match {
+            case None => Row(u, "new", null, null, null)
+            case Some(b) =>
+              val meta = r.get(metaAt)
+              Row(u,
+                if (meta != null && meta == b.meta) "duplicate" else "version",
+                if (b.corpus) b.id else null, b.sim,
+                if (b.corpus) null else b.id)
+          }
+        }
+        val node = StructField("node_id", idType)
+        DedupQueries.localFrame(incoming.sparkSession, StructType(Seq(
+          in("uid"), StructField("outcome", StringType, nullable = false),
+          node.copy(name = "matched_node_id"),
+          StructField("best_sim", DoubleType),
+          node.copy(name = "batch_twin"))), outcomes)
+      }
+    }
+  }
+
+  /** [[outcomesDelta]] with no archive flips on the driver: `rows` are
+    * the collected rows of `incoming`, and `outcomes` is a local
+    * relation of their classification (collecting it starts no job).
+    * The twin chains are walked by [[chainTargets]], the last writer per
+    * target node is kept by `(arrival, uid)` desc, and both of
+    * [[outcomesDeltaParts]]' refusals are raised with the same messages.
+    * The winners and their tombstones are local relations; the
+    * winners' band explode runs in the job that writes them. */
+  private[graft] def outcomesDeltaOnDriver(incoming: DataFrame,
+      rows: Seq[org.apache.spark.sql.Row], outcomes: DataFrame,
+      numBands: Int, rowsPerBand: Int): (DataFrame, DataFrame) = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    requireArrival(incoming)
+    val in = incoming.schema
+    def order(field: String) = DedupQueries.idOrdering(in(field).dataType)
+      .getOrElse(throw new IllegalArgumentException(s"outcomesDeltaOnDriver: " +
+        s"unsupported $field type ${in(field).dataType}"))
+    val ord = order("uid")
+    val (uidAt, sigAt, metaAt) =
+      (in.fieldIndex("uid"), in.fieldIndex("sig"), in.fieldIndex("meta_key"))
+    val byUid = rows.map(r => r.get(uidAt) -> r).toMap
+    val lastFirst = in.fieldNames.find(_ == "arrival") match {
+      // Spark's `arrival desc` ranks a null arrival last
+      case Some(a) =>
+        val at = in.fieldIndex(a)
+        Ordering.Tuple2(Ordering.Option(order(a)), ord)
+          .on[Row](r => (Option(r.get(at)), r.get(uidAt)))
+      case None => ord.on[Row](_.get(uidAt))
+    }
+    val outs = outcomes.select("uid", "outcome", "matched_node_id",
+      "batch_twin").collect().toSeq
+    val targetOf = chainTargets(outs.map(o => (o.get(0),
+      if (o.get(1) == "new") o.get(0) else o.get(2), o.get(3))))
+    val winners = outs
+      .filter(o => o.get(1) == "new" || o.get(1) == "version")
+      .map { o =>
+        val t = targetOf(o.get(0))
+        if (t == null)
+          throw new IllegalStateException(s"$ChainHead${o.get(0)}$ChainTail")
+        t -> byUid(o.get(0))
+      }
+      .groupMap(_._1)(_._2).toSeq
+      .map { case (t, us) =>
+        val w = us.max(lastFirst)
+        Row(t, w.get(sigAt), w.get(metaAt), "published")
+      }
+    val spark = incoming.sparkSession
+    val node = StructField("node_id", in("uid").dataType)
+    val winSchema = StructType(Seq(node, in("sig"), in("meta_key"),
+      StructField("status", StringType, nullable = false)))
+    (bandedSigStore(DedupQueries.localFrame(spark, winSchema, winners),
+      numBands, rowsPerBand),
+      DedupQueries.localFrame(spark, StructType(Seq(node)),
+        winners.map(w => Row(w.get(0)))))
   }
 
   /** The DISTRIBUTED arm of [[resolveTargets]]: pointer-jumping doubles
@@ -643,6 +882,12 @@ object DedupGate {
     * posture SCALE.md r17 prescribes for this decade). No corpus-sized
     * exchange exists
     * anywhere in the per-batch path either way.
+    *
+    * This is the DISTRIBUTED arm. An ingest-sized batch in
+    * [[graft.streaming.GateStoreLoop]] classifies on the driver instead
+    * ([[classifyOnDriver]]: one bounded store probe, same outcomes,
+    * PropertySpec pins the two equal) and runs this plan only when that
+    * probe would pass [[DedupQueries.DriverRows]] rows.
     */
   def classifyStoredDeltas(incoming: DataFrame, base: DataFrame,
       generations: Seq[(DataFrame, DataFrame)],

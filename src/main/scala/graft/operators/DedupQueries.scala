@@ -447,6 +447,24 @@ object DedupQueries {
     if (rows.length <= DriverRows) Some(rows) else None
   }
 
+  /** Every row of `df` when it has at most `cap` of them, else None — in
+    * ONE Spark job, whatever the partition count (a `take` scans one
+    * partition, then four times more, one job per step). Each task
+    * returns at most `cap + 1` rows, and the driver drops what it holds
+    * once the total passes `cap`, so driver memory stays O(cap). */
+  private[graft] def collectAtMost(df: DataFrame,
+      cap: Int): Option[Array[Row]] = {
+    val got = scala.collection.mutable.ArrayBuffer.empty[Row]
+    var over = false
+    df.sparkSession.sparkContext.runJob(df.rdd,
+      (it: Iterator[Row]) => it.take(cap + 1).toArray,
+      (_: Int, part: Array[Row]) => if (!over) {
+        got ++= part
+        if (got.size > cap) { over = true; got.clear() }
+      })
+    if (over) None else Some(got.toArray)
+  }
+
   /** `rows` as a local relation on `s`: planned from driver memory, so
     * reading it starts no Spark job of its own. */
   private[graft] def localFrame(s: SparkSession, schema: StructType,
@@ -501,7 +519,7 @@ object DedupQueries {
   /** Spark's order of an id type the driver fold takes — long, int, or
     * string compared by UTF-8 bytes as Spark compares it; None for any
     * other type, which the distributed arm takes. */
-  private def idOrdering(t: DataType): Option[Ordering[Any]] = t match {
+  private[graft] def idOrdering(t: DataType): Option[Ordering[Any]] = t match {
     case LongType => Some(Ordering.Long.on[Any](_.asInstanceOf[Long]))
     case IntegerType => Some(Ordering.Int.on[Any](_.asInstanceOf[Int]))
     case StringType => Some(Ordering.fromLessThan[Any]((a, b) =>

@@ -36,17 +36,29 @@ import org.apache.spark.sql.types.{LongType, StringType}
   * TWO ARMS per batch, chosen by its row count against
   * [[graft.operators.DedupQueries.DriverRows]] (a fixed constant):
   *  - an INGEST-SIZED batch (at most that many rows) is collected once
-  *    and classified from a local relation; string uids get their
-  *    minted `arrival` over the collected rows; the classified
-  *    outcomes are collected into a local relation too, so the
-  *    twin-chain walk ([[DedupGate.resolveTargets]]) runs on the
-  *    driver, and each of the three layers is written as one file.
-  *    Driver memory: the batch's rows and their outcome rows, twice
-  *    the cap at most.
+  *    (string uids get their minted `arrival` over the collected rows)
+  *    and runs [[DedupGate.gateOnDriver]]. One job collects the live
+  *    store rows `(node_id, sig, meta_key, bkey)` of the base and every
+  *    open delta whose band key one of the batch's signature classes
+  *    probes, together with every open tombstone. Classification, the
+  *    twin-chain walk, the last-writer winners and the tombstones are
+  *    then computed on the driver, and each of the three layers is
+  *    written from a local relation as one file, one job each. Driver
+  *    memory: the batch, at most the cap of probed store rows and
+  *    tombstones, and the batch-sized outcome and winner rows.
+  *  - if that probe would pass the cap (a hot band shared by many
+  *    stored documents), or the batch's types are ones the driver arm
+  *    does not order exactly as Spark does, the collected batch runs
+  *    the distributed classification instead; its outcomes are
+  *    collected into a local relation, the twin walk runs on the
+  *    driver, and each layer is still one file.
   *  - a LARGER batch (a backfill tranche) is checkpointed, and so are
-  *    its outcomes; the chain walk and the writes run distributed.
-  * Both arms write the same layers with the same rows (StreamingSpec
-  * pins the loop against the batch path and the oracle against SQL).
+  *    its outcomes; the classification, the chain walk and the writes
+  *    run distributed.
+  * Every arm writes the same layers with the same rows and schemas
+  * (PropertySpec pins the driver arm against the distributed one,
+  * StoreLoopSpec the layer schemas and the fallback, StreamingSpec the
+  * loop against the batch path and the oracle against SQL).
   */
 object GateStoreLoop {
 
@@ -123,13 +135,14 @@ object GateStoreLoop {
     // over the minted one.
     val mint = !batch.columns.contains("arrival") &&
       batch.schema("uid").dataType == StringType
-    val b = local match {
-      case Some(rows) if mint =>
-        DedupQueries.localFrame(spark,
-          batch.schema.add("arrival", LongType, nullable = false),
-          rows.toSeq.zipWithIndex.map { case (r, i) =>
-            Row.fromSeq(r.toSeq :+ i.toLong) })
-      case Some(rows) => DedupQueries.localFrame(spark, batch.schema, rows)
+    val rows = local.map(rs =>
+      if (mint) rs.toSeq.zipWithIndex.map { case (r, i) =>
+        Row.fromSeq(r.toSeq :+ i.toLong) }
+      else rs.toSeq)
+    val b = rows match {
+      case Some(rs) => DedupQueries.localFrame(spark,
+        if (mint) batch.schema.add("arrival", LongType, nullable = false)
+        else batch.schema, rs)
       case None =>
         val pinned = Scope.checkpoint(batch, eager = true)
         if (mint) pinned.withColumn("arrival", monotonically_increasing_id())
@@ -137,25 +150,31 @@ object GateStoreLoop {
     }
     val (g, ids) = storeFs.resolve(spark, dir, below = batchId)
     val (base, gens) = layers(spark, dir, g, ids)
-    // materialize the classification ONCE (batch-sized): the outcome
-    // frame is read back by resolveTargets and by all three artifact
-    // writes — without the pin each of those actions would re-run the
-    // corpus probe, turning one gate pass into five. An ingest-sized
-    // batch collects its outcomes into a local relation (so the twin
-    // walk and the writes plan from driver memory); a larger one
-    // checkpoints them.
-    val classified = DedupGate.classifyStoredDeltas(
-      b, base, gens.map(l => (l._2, l._3)), numBands, rowsPerBand)
-    val outcomes =
-      if (local.isDefined)
-        DedupQueries.localFrame(spark, classified.schema, classified.collect())
-      else Scope.checkpoint(classified, eager = true)
-    // archive flips travel a separate maintenance channel; the stream
-    // loop itself retires nodes only via version replacement
-    val noFlips = outcomes.select(col("matched_node_id").as("node_id"))
-      .limit(0)
-    val (append, tombs) = DedupGate.outcomesDelta(
-      b, outcomes, noFlips, numBands, rowsPerBand)
+    val generations = gens.map(l => (l._2, l._3))
+    // an ingest-sized batch classifies and derives its layers on the
+    // driver from one bounded store probe; the distributed arm runs when
+    // the batch is larger, or when the driver arm declines (a hot band)
+    val (outcomes, append, tombs) = rows.flatMap(DedupGate.gateOnDriver(
+        b, _, base, generations, numBands, rowsPerBand))
+      .getOrElse {
+        // materialize the classification ONCE (batch-sized): the
+        // outcome frame is read back by resolveTargets and by all three
+        // artifact writes — without the pin each of those actions would
+        // re-run the corpus probe, turning one gate pass into five
+        val classified = DedupGate.classifyStoredDeltas(
+          b, base, generations, numBands, rowsPerBand)
+        val outcomes =
+          if (local.isDefined) DedupQueries.localFrame(spark,
+            classified.schema, classified.collect())
+          else Scope.checkpoint(classified, eager = true)
+        // archive flips travel a separate maintenance channel; the
+        // stream loop itself retires nodes only via version replacement
+        val noFlips = outcomes.select(col("matched_node_id").as("node_id"))
+          .limit(0)
+        val (append, tombs) = DedupGate.outcomesDelta(
+          b, outcomes, noFlips, numBands, rowsPerBand)
+        (outcomes, append, tombs)
+      }
     // tombs LAST: BOTH state() and outcomes() gate a generation on
     // tombs/_SUCCESS, so a crash anywhere between these writes leaves an
     // invisible (and overwritable) half-generation — never a probe

@@ -303,6 +303,118 @@ class PropertySpec extends SparkSpec {
       s"outcomesDelta must raise the twin-chain error, got: $e")
   }
 
+  test("gate driver arm equals classifyStoredDeltas + outcomesDelta on " +
+    "random stores and batches: an empty batch, signature classes, twin " +
+    "chains, versions and duplicates of base and delta nodes, 2-3 open " +
+    "generations, string uids with minted and explicit arrival, and " +
+    "ties in sim") {
+    import graft.operators.{DedupGate, DedupQueries}
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.types._
+    // 20-long signatures banded 5 x 4: one changed position keeps four
+    // shared bands at sim 0.95 (a candidate), two drop to 0.9 (a near
+    // miss), so fractional sims, exact ties and misses all occur
+    val (numBands, rowsPerBand) = (5, 4)
+    def fresh() = Seq.fill(20)(rnd.nextLong())
+    def mutate(s: Seq[Long], k: Int) =
+      (0 until k).foldLeft(s)((t, _) =>
+        t.updated(rnd.nextInt(20), rnd.nextLong()))
+    def meta() = if (rnd.nextInt(3) == 0) "fr" else "en"
+    def show(df: DataFrame) = df.collect().map(_.toSeq.map {
+      case s: scala.collection.Seq[_] => s.mkString("[", ",", "]")
+      case v => String.valueOf(v)
+    }.mkString("|")).toSeq.sorted
+    def local(df: DataFrame) =
+      DedupQueries.localFrame(spark, df.schema, df.collect())
+    // each pool signature is stored twice, so a copy ties at 1.0 between
+    // two corpus nodes and the lower id must win
+    val pool = Seq.fill(12)(fresh())
+    def run(what: String, id: Long => Any, idType: DataType,
+        arrival: Option[Boolean]): Map[String, Int] = {
+      val seen = scala.collection.mutable.Map.empty[String, Int]
+        .withDefaultValue(0)
+      val baseRows = pool.zipWithIndex.flatMap { case (s, i) =>
+        Seq(Row(id(2L * i + 1), s, meta(), "published"),
+          Row(id(2L * i + 2), mutate(s, rnd.nextInt(2)), meta(), "published"))
+      }
+      val base = local(DedupGate.bandedSigStore(DedupQueries.localFrame(
+        spark, StructType(Seq(StructField("node_id", idType),
+          StructField("sig", ArrayType(LongType)),
+          StructField("meta_key", StringType),
+          StructField("status", StringType))), baseRows),
+        numBands, rowsPerBand))
+      var gens = Seq.empty[(DataFrame, DataFrame)]
+      var sigs = pool
+      for (step <- 0 to 3) {
+        val n = if (step == 0) 0 else 24
+        // copies, one-change variants and two-change misses of stored
+        // and earlier-batch signatures, fresh docs, and chains through
+        // the batch's own earlier rows
+        val batchSigs = (0 until n).foldLeft(Vector.empty[Seq[Long]]) {
+          (acc, _) =>
+            val src = if (acc.nonEmpty && rnd.nextInt(3) == 0)
+              acc(rnd.nextInt(acc.size)) else sigs(rnd.nextInt(sigs.size))
+            acc :+ (rnd.nextInt(6) match {
+              case 0 | 1 => src
+              case 2 | 3 => mutate(src, 1)
+              case 4 => mutate(src, 2)
+              case _ => fresh()
+            })
+        }
+        // a minted arrival is the row position, an explicit one any order
+        val shuffled = rnd.shuffle((0 until n).toList)
+        val fields = Seq(StructField("uid", idType, nullable = false),
+          StructField("sig", ArrayType(LongType)),
+          StructField("meta_key", StringType)) ++
+          arrival.map(_ => StructField("arrival", LongType, nullable = false))
+        val rows = batchSigs.zipWithIndex.map { case (s, i) =>
+          Row.fromSeq(Seq(id(1000L * (step + 1) + i), s, meta()) ++
+            arrival.map(explicit => (if (explicit) shuffled(i) else i).toLong))
+        }
+        val b = DedupQueries.localFrame(spark, StructType(fields), rows)
+        val (outcomes, append, tombs) = DedupGate.gateOnDriver(b, rows, base,
+          gens, numBands, rowsPerBand).getOrElse(
+          fail(s"$what step $step: the driver arm declined"))
+        val classified = DedupGate.classifyStoredDeltas(b, base, gens,
+          numBands, rowsPerBand)
+        val dOut = local(classified)
+        val (dAppend, dTombs) = DedupGate.outcomesDelta(b, dOut,
+          dOut.select(col("matched_node_id").as("node_id")).limit(0),
+          numBands, rowsPerBand)
+        for ((layer, d, l) <- Seq(("outcomes", dOut, outcomes),
+            ("append", dAppend, append), ("tombstones", dTombs, tombs))) {
+          assert(l.schema == d.schema,
+            s"$what step $step $layer schema: ${l.schema} vs ${d.schema}")
+          val (ls, ds) = (show(l), show(d))
+          assert(ls == ds, s"$what step $step $layer: driver " +
+            s"${ls.diff(ds).take(4)} vs distributed ${ds.diff(ls).take(4)}")
+        }
+        // base node ids are below 1000, delta node ids (batch uids) not
+        outcomes.collect().foreach { o =>
+          seen(o.getString(1)) += 1
+          if (o.get(4) != null) seen("twin") += 1
+          Option(o.get(2)).map(_.toString.stripPrefix("d").toLong).foreach {
+            m => seen(s"${o.getString(1)} of a " +
+              (if (m < 1000) "base" else "delta") + " node") += 1
+          }
+        }
+        seen("dead") += dTombs.count().toInt
+        gens :+= (local(dAppend), local(dTombs))
+        sigs ++= batchSigs
+      }
+      seen.toMap
+    }
+    val cases = Seq(
+      run("long uids", identity, LongType, None),
+      run("string uids, minted arrival", "d" + _, StringType, Some(false)),
+      run("string uids, explicit arrival", "d" + _, StringType, Some(true)))
+    // the fixtures reach every branch the comparison is meant to cover
+    for (c <- cases; k <- Seq("new", "twin", "dead") ++ (for {
+        o <- Seq("version", "duplicate"); n <- Seq("base", "delta")
+      } yield s"$o of a $n node"))
+      assert(c.getOrElse(k, 0) > 0, s"no '$k' outcome in $c")
+  }
+
   test("cdc_chunks hashes each chunk exactly as md5(substr(text, start, " +
     "clen)) on ASCII, multibyte and 4-byte text, and yields no chunk for " +
     "empty or null text") {

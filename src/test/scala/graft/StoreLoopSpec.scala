@@ -421,4 +421,123 @@ class StoreLoopSpec extends SparkSpec {
       DedupQueries.ccApplyDelta(s, assign, frame(b2)), eager = true))
     assert(redelivered == folded, "redelivered batch mutated the store")
   }
+
+  test("a gate store written by both arms: a probe past DriverRows (one " +
+      "band shared by DriverRows + 1 base docs) takes the distributed " +
+      "arm with the oracle's outcomes, every layer's footer schema is " +
+      "the same from either arm, and outcomes() and foldedBase read back " +
+      "equal to the oracle") {
+    import graft.operators.DedupQueries
+    import graft.streaming.GateStoreLoop
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val rnd = new scala.util.Random(7)
+    // 16-long signatures banded 4 x 4; every hot doc shares band 0
+    def sig(head: Seq[Long] = Nil) = head ++ Seq.fill(16 - head.size)(
+      rnd.nextLong())
+    val hot = (1L to DedupQueries.DriverRows + 1L)
+      .map(n => (n, sig(Seq(1L, 2L, 3L, 4L))))
+    val plain = (1L to 20L).map(n => (100000L + n, sig()))
+    val sigOf = (hot ++ plain).toMap
+    val base = DedupGate.bandedSigStore((hot ++ plain)
+      .map { case (n, s) => (n, s, "en", "published") }
+      .toDF("node_id", "sig", "meta_key", "status"), 4, 4)
+    val dir = java.nio.file.Files.createTempDirectory("graft-arms").toString
+    GateStoreLoop.init(base, dir)
+    val fresh = sig()
+    val batches = Seq(
+      // driver arm: duplicate, version, new, and a within-batch twin
+      Seq((500001L, sigOf(100001L), "en"), (500002L, sigOf(100002L), "xx"),
+        (500003L, fresh, "en"), (500004L, fresh, "en")),
+      // the hot band: a version of hot doc 7, plus a version of the
+      // batch-0 node 500003
+      Seq((500011L, sigOf(7L), "xx"), (500012L, fresh, "fr")),
+      // driver arm again: versions of a node batch 0 replaced and of the
+      // one batch 1 replaced, and a duplicate of a base node
+      Seq((500021L, sigOf(100002L), "yy"), (500022L, fresh, "en"),
+        (500023L, sigOf(100005L), "en")))
+      .map(_.toDF("uid", "sig", "meta_key"))
+    // the oracle: the distributed arm against the compacted store
+    var oracle = DedupQueries.localFrame(spark, base.schema, base.collect())
+    var expected = Seq.empty[String]
+    batches.zipWithIndex.foreach { case (b, id) =>
+      val (g, gens) = GateStoreLoop.state(spark, dir)
+      val driver = DedupGate.gateOnDriver(b, b.collect(), g,
+        gens.map(l => (l._2, l._3)), 4, 4)
+      assert(driver.isDefined == (id != 1),
+        s"batch $id: the driver arm ${if (driver.isDefined) "ran" else
+          "declined"}; only the hot-band batch may decline")
+      val c = DedupGate.classifyStored(b, oracle, 4, 4)
+      val o = DedupQueries.localFrame(spark, c.schema, c.collect())
+      expected ++= o.collect().map(_.mkString("|"))
+      val (append, tombs) = DedupGate.outcomesDelta(b, o,
+        o.select(col("matched_node_id").as("node_id")).limit(0), 4, 4)
+      val next = oracle.join(tombs, Seq("node_id"), "left_anti")
+        .unionByName(append)
+      oracle = DedupQueries.localFrame(spark, next.schema, next.collect())
+      GateStoreLoop.handleBatch(dir, 4, 4)(b, id.toLong)
+    }
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.mkString("|")).toSeq.sorted
+    assert(rowsOf(GateStoreLoop.outcomes(spark, dir)) == expected.sorted)
+    val outcomeOf = GateStoreLoop.outcomes(spark, dir)
+      .select("uid", "outcome").as[(Long, String)].collect().toMap
+    assert(outcomeOf == Map(500001L -> "duplicate", 500002L -> "version",
+      500003L -> "new", 500004L -> "duplicate", 500011L -> "version",
+      500012L -> "version", 500021L -> "version", 500022L -> "version",
+      500023L -> "duplicate"), s"outcomes $outcomeOf")
+    val cols = Seq("node_id", "sig", "meta_key", "band_id", "bkey")
+    val folded = GateStoreLoop.foldedBase(spark, dir).get._2
+    assert(rowsOf(folded.select(cols.map(col): _*)) ==
+      rowsOf(oracle.select(cols.map(col): _*)),
+      "the fold of generations written by both arms diverged from the oracle")
+    // StoreFs.read takes one footer's schema for every generation, so
+    // the arms must write the same one, nullability included
+    def footer(layer: String) = {
+      val file = new java.io.File(layer).listFiles()
+        .find(_.getName.endsWith(".parquet")).get
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new Path(file.getPath), spark.sparkContext.hadoopConfiguration))
+      try reader.getFooter.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata")
+      finally reader.close()
+    }
+    for (k <- Seq("outcomes", "delta", "tombs")) {
+      val schemas = (0 to 2).map(id =>
+        footer(s"${GateStoreLoop.storeFs.genDir(dir, id)}/$k"))
+      assert(schemas.distinct.size == 1,
+        s"$k footers differ across the arms:\n${schemas.mkString("\n")}")
+    }
+  }
+
+  test("the gate's driver maintenance raises outcomesDelta's refusals: " +
+      "an unresolved twin chain, with the distributed arm's message, and " +
+      "string uids without an arrival column") {
+    val sig = (1L to 16L).toSeq
+    val incoming = Seq((102L, sig, "en")).toDF("uid", "sig", "meta_key")
+    // 102's twin 999 never appears in outcomes — a partial frame
+    val outcomes = Seq((102L, "version", None: Option[Long], Some(999L)))
+      .toDF("uid", "outcome", "matched_node_id", "batch_twin")
+    val onDriver = intercept[IllegalStateException] {
+      DedupGate.outcomesDeltaOnDriver(incoming, incoming.collect(),
+        outcomes, 4, 4)
+    }
+    assert(onDriver.getMessage.contains("unresolved twin chain"))
+    val (append, _) = DedupGate.outcomesDelta(incoming, outcomes,
+      Seq.empty[Long].toDF("node_id"), 4, 4)
+    val distributed = intercept[Exception](append.count())
+    assert(Iterator.iterate[Throwable](distributed)(_.getCause)
+        .takeWhile(_ != null).exists(t => Option(t.getMessage)
+          .exists(_.contains(onDriver.getMessage))),
+      s"the arms' messages differ: ${onDriver.getMessage} vs $distributed")
+    val strings = Seq(("doc9", sig, "en")).toDF("uid", "sig", "meta_key")
+    val store = DedupGate.bandedSigStore(Seq(("doc1", sig, "en",
+      "published")).toDF("node_id", "sig", "meta_key", "status"), 4, 4)
+    val e = intercept[IllegalArgumentException] {
+      DedupGate.gateOnDriver(strings, strings.collect(), store, Nil, 4, 4)
+    }
+    assert(e.getMessage.contains("arrival"),
+      s"refusal must name the missing 'arrival' column: ${e.getMessage}")
+  }
 }
