@@ -1204,7 +1204,8 @@ class StreamingSpec extends SparkSpec {
       .sorted.toSeq == Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 1L),
         (10L, 10L), (11L, 10L), (20L, 1L)))
     // the driver arms start 6 and 5 jobs here (local[4]): the gate's
-    // batch take, its one store probe and its three layer writes. With
+    // batch take (two jobs over this 4-partition batch), its one store
+    // probe and its three layer writes. With
     // the gate classifying on Spark the same batch starts 22, and forced
     // onto the distributed loops the batches start 30 and 25 — the
     // checkpoints, pointer-jumping counts and checksum heads the driver
